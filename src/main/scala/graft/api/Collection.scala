@@ -7,7 +7,7 @@ import graft.model._
 import graft.parse.QueryParser
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
 /** Batch embedding callback — the reference's single UDF surface
   * (src/sifts/core.py:90: `embedding_function: list[str] -> list[vector]`,
@@ -1075,9 +1075,28 @@ final class Collection private (
     * had embedded docs since).
     */
   def vectorIndex(): Option[LshIndex] =
-    if (!Stores.partitionExists(spark, annDir, name)) None
-    else LshIndex.fromStoreFrame(
-      Stores.readPartition(spark, annDir, name, Stores.annSchema))
+    lshParams().map { case (tables, planes, dim, seed) =>
+      LshIndex(Stores.readPartition(spark, annDir, name, Stores.annSchema)
+        .select($"id", $"table", $"bucket"), tables, planes, dim, seed)
+    }
+
+  /** (numTables, numPlanes, dim, seed) of the stored LSH index, None when
+    * absent or empty (fingerprint-memoized, see [[ivfParams]]). */
+  private def lshParams(): Option[(Int, Int, Int, Long)] =
+    Stores.memoizedMeta(spark, annDir, name, "lshParams") {
+      if (!Stores.partitionExists(spark, annDir, name)) None
+      else LshIndex.fromStoreFrame(
+        Stores.readPartition(spark, annDir, name, Stores.annSchema))
+        .map(ix => (ix.numTables, ix.numPlanes, ix.dim, ix.seed))
+    }
+
+  /** Maintain the stored LSH index with `f`, or drop a store that no
+    * longer holds any rows; no-op without one. */
+  private def maintainVectorIndex(f: LshIndex => Unit): Unit =
+    if (Stores.partitionExists(spark, annDir, name)) vectorIndex() match {
+      case Some(ix) => f(ix)
+      case None => Stores.dropPartition(spark, annDir, name)
+    }
 
   // -------------------------------------------------------------------------
   // Persisted dedup-screening index: banded MinHash signatures, stored and
@@ -1587,7 +1606,7 @@ final class Collection private (
     val served =
       if (where.isEmpty) impactCertifiedTopK(query, depth, 0) else None
     served.map(_.select($"id", $"rank")).getOrElse {
-      val (fts, _) = plan(query, where, OrderBy.none, vectorSearch = false)
+      val (fts, _, _) = plan(query, where, OrderBy.none, vectorSearch = false)
       fts.select($"id", $"rank")
     }
   }
@@ -1678,17 +1697,12 @@ final class Collection private (
   }
 
   private def refreshVectorIndexMerge(batch: DataFrame, batchIds: DataFrame): Unit = {
-    if (Stores.partitionExists(spark, annDir, name)) {
-      LshIndex.fromStoreFrame(
-        Stores.readPartition(spark, annDir, name, Stores.annSchema)) match {
-        case Some(ix) =>
-          val kept = ix.buckets.join(batchIds, Seq("id"), "left_anti")
-          val added = Ann.lshTables(batch.filter($"embedding".isNotNull),
-            "id", "embedding", ix.numTables, ix.numPlanes, ix.dim, ix.seed)
-          Stores.overwritePartition(spark, annDir, name,
-            ix.copy(buckets = kept.unionByName(added)).toStoreFrame)
-        case None => Stores.dropPartition(spark, annDir, name)
-      }
+    maintainVectorIndex { ix =>
+      val kept = ix.buckets.join(batchIds, Seq("id"), "left_anti")
+      val added = Ann.lshTables(batch.filter($"embedding".isNotNull),
+        "id", "embedding", ix.numTables, ix.numPlanes, ix.dim, ix.seed)
+      Stores.overwritePartition(spark, annDir, name,
+        ix.copy(buckets = kept.unionByName(added)).toStoreFrame)
     }
     if (Stores.partitionExists(spark, ivfDir, name))
       ivfCentroidsRaw().foreach { cents =>
@@ -1849,14 +1863,9 @@ final class Collection private (
     } else {
       writeDoclenFull(doclen().join(idsDf, Seq("id"), "left_anti"))
     }
-    if (Stores.partitionExists(spark, annDir, name)) {
-      LshIndex.fromStoreFrame(
-        Stores.readPartition(spark, annDir, name, Stores.annSchema)) match {
-        case Some(ix) =>
-          Stores.overwritePartition(spark, annDir, name,
-            ix.copy(buckets = ix.buckets.join(idsDf, Seq("id"), "left_anti")).toStoreFrame)
-        case None => Stores.dropPartition(spark, annDir, name)
-      }
+    maintainVectorIndex { ix =>
+      Stores.overwritePartition(spark, annDir, name,
+        ix.copy(buckets = ix.buckets.join(idsDf, Seq("id"), "left_anti")).toStoreFrame)
     }
     if (Stores.partitionExists(spark, ivfDir, name))
       Stores.overwritePartition(spark, ivfDir, name,
@@ -2003,15 +2012,10 @@ final class Collection private (
     * `createVectorIndex` after re-adding).
     */
   private def refreshVectorIndexFull(): Unit = {
-    if (Stores.partitionExists(spark, annDir, name)) {
-      LshIndex.fromStoreFrame(
-        Stores.readPartition(spark, annDir, name, Stores.annSchema)) match {
-        case Some(ix) =>
-          Stores.overwritePartition(spark, annDir, name,
-            LshIndex.build(docs(), "id", "embedding",
-              ix.numTables, ix.numPlanes, ix.dim, ix.seed).toStoreFrame)
-        case None => Stores.dropPartition(spark, annDir, name)
-      }
+    maintainVectorIndex { ix =>
+      Stores.overwritePartition(spark, annDir, name,
+        LshIndex.build(docs(), "id", "embedding",
+          ix.numTables, ix.numPlanes, ix.dim, ix.seed).toStoreFrame)
     }
     // IVF: re-assign everything against the STORED centroids (zero-shuffle
     // scan); centroid retraining is compact()'s staleness policy, not the
@@ -2040,17 +2044,12 @@ final class Collection private (
     * as the postings delta.
     */
   private def refreshVectorIndexDelta(batch: DataFrame, batchIds: DataFrame): Unit = {
-    if (Stores.partitionExists(spark, annDir, name)) {
-      LshIndex.fromStoreFrame(
-        Stores.readPartition(spark, annDir, name, Stores.annSchema)) match {
-        case Some(ix) =>
-          val added = Ann.lshTables(batch.filter($"embedding".isNotNull),
-            "id", "embedding", ix.numTables, ix.numPlanes, ix.dim, ix.seed)
-          Stores.appendDelta(spark, annDir, name,
-            LshIndex(added, ix.numTables, ix.numPlanes, ix.dim, ix.seed).toStoreFrame,
-            gone = Some(batchIds), sortBy = Seq("table", "bucket"))
-        case None => Stores.dropPartition(spark, annDir, name)
-      }
+    maintainVectorIndex { ix =>
+      val added = Ann.lshTables(batch.filter($"embedding".isNotNull),
+        "id", "embedding", ix.numTables, ix.numPlanes, ix.dim, ix.seed)
+      Stores.appendDelta(spark, annDir, name,
+        ix.copy(buckets = added).toStoreFrame,
+        gone = Some(batchIds), sortBy = Seq("table", "bucket"))
     }
     // IVF: O(batch) delta — the batch re-assigns against the stored
     // centroids (broadcast expression, zero shuffle); the gone sidecar
@@ -2085,19 +2084,48 @@ final class Collection private (
     * `limit=0` means unlimited (core.py:327-333). `total` is always the true
     * pre-limit match count (SURVEY §7.4 decision — the SQLite-vector
     * behavior; the PG offset-past-end `total=0` quirk is not replicated).
+    *
+    * One Spark action per call — the analogue of the reference's
+    * `count(*) OVER()` beside its page (core.py:408). With `limit > 0` the
+    * unordered match frame carries an observed row count (a fresh
+    * [[org.apache.spark.sql.Observation]] per call) and the page is
+    * collected through `orderBy.offset.limit`, which plans as ONE
+    * `TakeOrderedAndProject`: each task keeps an (offset+limit)-row heap
+    * while the metric counts every row it passes. No persist, no global
+    * sort, no second count job. With `limit <= 0` every row is collected
+    * anyway, so `total` is the collected row count and the offset drops
+    * driver-side — a global sort re-runs its child for range sampling,
+    * which would double an observed count.
     */
   def query(query: String = "", limit: Int = 0, offset: Int = 0,
             where: Map[String, Any] = Map.empty, orderBy: OrderBy = OrderBy.none,
             vectorSearch: Boolean = false): QueryResult = {
-    val (preLimit, withRank) = plan(query, where, orderBy, vectorSearch)
-    // One execution for both `total` and the page: persist the pre-limit
-    // frame (the reference's count(*) OVER() analogue without re-running the
-    // postings join / scoring pipeline twice).
-    preLimit.persist()
-    try {
-      val total = preLimit.count()
-      QueryResult(total, collectHits(Paginator(preLimit, limit, offset), withRank))
-    } finally preLimit.unpersist()
+    val (matches, order, withRank) = plan(query, where, orderBy, vectorSearch)
+    val shaped = hitColumns(matches, withRank)
+    // past Spark's top-k threshold the page plans as a global sort (see
+    // above) — that depth is a full collect either way
+    val topK = limit > 0 && limit.toLong + math.max(offset, 0) <
+      spark.conf.get("spark.sql.execution.topKSortFallbackThreshold").toLong
+    if (topK) {
+      val obs = org.apache.spark.sql.Observation()
+      val page = Paginator(
+        shaped.observe(obs, org.apache.spark.sql.functions.count(lit(1)).as("total"))
+          .orderBy(order: _*), limit, offset)
+      val hits = collectHits(page)
+      // the metric arrives through Spark's asynchronous listener bus, which
+      // drops events when its queue is full: a lost event costs a recount,
+      // never a hung read. A plan with zero partitions (absent or emptied
+      // collection) reports an empty row: zero matches.
+      val total =
+        try {
+          val row = scala.concurrent.Await.result(obs.future, Collection.ObservedTotalWait)
+          if (row.length == 0) 0L else row.getLong(0)
+        } catch { case _: java.util.concurrent.TimeoutException => shaped.count() }
+      QueryResult(total, hits)
+    } else {
+      val hits = collectHits(shaped.orderBy(order: _*))
+      QueryResult(hits.size, hits.drop(math.max(offset, 0)))
+    }
   }
 
   /** The same query pipeline as a lazy, paginated DataFrame with columns
@@ -2108,11 +2136,8 @@ final class Collection private (
   def queryFrame(query: String = "", limit: Int = 0, offset: Int = 0,
                  where: Map[String, Any] = Map.empty, orderBy: OrderBy = OrderBy.none,
                  vectorSearch: Boolean = false): DataFrame = {
-    val (preLimit, withRank) = plan(query, where, orderBy, vectorSearch)
-    val shaped =
-      if (withRank) preLimit.select($"id", $"content", $"metadata", $"rank")
-      else preLimit.select($"id", $"content", $"metadata", lit(null).cast("double").as("rank"))
-    Paginator(shaped, limit, offset)
+    val (matches, order, withRank) = plan(query, where, orderBy, vectorSearch)
+    Paginator(hitColumns(matches, withRank).orderBy(order: _*), limit, offset)
   }
 
   /** Phrase search: documents whose token stream contains the phrase's
@@ -2374,9 +2399,12 @@ final class Collection private (
     Paginator(hits, limit, offset)
   }
 
-  /** Builds the ordered pre-limit frame; returns (frame, hasRank). */
+  /** Builds the UNORDERED pre-limit match frame; returns (frame, page
+    * order, hasRank). Callers sort it themselves — [[query]] observes its
+    * row count below the sort, [[queryFrame]] stays lazy.
+    */
   private def plan(query: String, where: Map[String, Any], ob: OrderBy,
-                   vectorSearch: Boolean): (DataFrame, Boolean) = {
+                   vectorSearch: Boolean): (DataFrame, Seq[Column], Boolean) = {
     val orderBy = ob.keys
     if (vectorSearch && orderBy.nonEmpty)
       throw new IllegalArgumentException("Cannot use order_by with vector search.")
@@ -2388,11 +2416,12 @@ final class Collection private (
       throw new IllegalArgumentException("This collection does not support full-text search.")
 
     val filtered = applyWhere(docs(), where)
+    val byRank = Seq($"rank".desc, $"id".asc)
+    def byMeta = Sorter.sortColumns($"metadata", orderBy.map(SortKey.parse), Seq($"id".asc))
 
     if (vectorSearch) {
       val qvec = embedder.get.embed(Seq(query)).head.toSeq
-      val scored = VectorSearch.scored(filtered, "embedding", qvec)
-      (scored.orderBy($"rank".desc, $"id".asc), true)
+      (VectorSearch.scored(filtered, "embedding", qvec), byRank, true)
     } else ast match {
       case Some(q) =>
         // Flat AND/OR (every parser shape except mixed `x AND y OR z`):
@@ -2409,15 +2438,15 @@ final class Collection private (
               .join(Bm25.scores(postings(), collStats(), q), Seq("id"), "left")
               .withColumn("rank", coalesce($"rank", lit(0.0)))
         }
-        val ordered =
-          if (orderBy.nonEmpty) Sorter(ranked, $"metadata", orderBy.map(SortKey.parse), Seq($"id".asc))
-          else ranked.orderBy($"rank".desc, $"id".asc) // deterministic; reference leaves it storage-ordered (SURVEY §7.4)
-        (ordered, true)
+        // rank order is deterministic; the reference leaves it storage-ordered (SURVEY §7.4)
+        (ranked, if (orderBy.nonEmpty) byMeta else byRank, true)
       case None =>
-        val ordered =
-          if (orderBy.nonEmpty) Sorter(filtered, $"metadata", orderBy.map(SortKey.parse), Seq($"id".asc))
-          else filtered.orderBy($"id".asc)
-        (ordered, false)
+        // NULLS LAST on the never-null id changes no result, but keeps the
+        // key from matching a child's id-ascending output ordering (the
+        // sort-merge join that resolves delta segments): TakeOrderedAndProject
+        // then cuts each task's input at the page size, and an observed
+        // count below it would see only that cut
+        (filtered, if (orderBy.nonEmpty) byMeta else Seq($"id".asc_nulls_last), false)
     }
   }
 
@@ -2435,19 +2464,26 @@ final class Collection private (
     MetaFilter.combined($"metadata", ops).map(df.filter).getOrElse(df)
   }
 
-  private def collectHits(df: DataFrame, withRank: Boolean): Seq[SearchHit] =
+  /** The (id, content, metadata, rank) hit shape; rank is NULL for scans. */
+  private def hitColumns(df: DataFrame, withRank: Boolean): DataFrame =
     df.select($"id", $"content", $"metadata",
-        (if (withRank) $"rank" else lit(null).cast("double")).as("rank"))
-      .collect().toSeq.map { r: Row =>
-        SearchHit(r.getString(0), r.getString(1),
-          Option(r.getMap[String, String](2)).map(_.toMap).orNull,
-          if (withRank && !r.isNullAt(3)) Some(r.getDouble(3)) else None)
-      }
+      (if (withRank) $"rank" else lit(null).cast("double")).as("rank"))
+
+  private def collectHits(hits: DataFrame): Seq[SearchHit] =
+    hits.collect().toSeq.map { r: Row =>
+      SearchHit(r.getString(0), r.getString(1),
+        Option(r.getMap[String, String](2)).map(_.toMap).orNull,
+        if (r.isNullAt(3)) None else Some(r.getDouble(3)))
+    }
 }
 
 object Collection {
   /** Max docs per Embedder.embed call (bounded executor memory). */
   val EmbedBatchSize: Int = 256
+
+  /** How long [[Collection.query]] waits for its observed total after the
+    * page is collected before recounting (delivery normally takes ms). */
+  private val ObservedTotalWait = scala.concurrent.duration.Duration(30, "s")
 
   /** (root, name, sidecar+stats fingerprint) -> (cap, watermark, stats);
     * see [[Collection.impactGate]]. Keyed by content fingerprint, so no

@@ -111,23 +111,32 @@ object Bm25 {
     val exact = leaves.collect { case BoolQuery.Term(t) => t }.distinct
     // each non-exact leaf gets a synthetic leaf key ("*0", "*1", …) — tokens
     // are \p{L}\p{N} runs, so no dictionary term can collide with it
-    val expanded: Seq[(Column, String)] = leaves.zipWithIndex.collect {
-      case (BoolQuery.Prefix(p), i) => (col("term").startsWith(p), s"*$i")
+    // (tag predicate, leaf key, pushable pre-filter) per non-exact leaf
+    val expanded: Seq[(Column, String, Column)] = leaves.zipWithIndex.collect {
+      case (BoolQuery.Prefix(p), i) =>
+        val pre = col("term").startsWith(p)
+        (pre, s"*$i", pre)
       case (w @ BoolQuery.Wildcard(p), i) =>
         val pre = p.takeWhile(_ != '*')
         val rx = col("term").rlike(w.regex)
-        (if (pre.nonEmpty) col("term").startsWith(pre) && rx else rx, s"*$i")
+        if (pre.nonEmpty) {
+          val starts = col("term").startsWith(pre)
+          (starts && rx, s"*$i", starts)
+        } else (rx, s"*$i", lit(true))
     }
     val base = postings.select(col("term"), col("id"), col("tf"), col("dl"))
     if (expanded.isEmpty)
       base.filter(col("term").isin(exact: _*))
         .select(col("term").as("leaf"), col("id"), col("tf"), col("dl"))
     else {
-      val tags =
-        (if (exact.isEmpty) Seq.empty[Column]
-         else Seq(when(col("term").isin(exact: _*), col("term")))) ++
-          expanded.map { case (pred, key) => when(pred, lit(key)) }
-      base
+      val exactPred = if (exact.isEmpty) Nil else Seq(col("term").isin(exact: _*))
+      val tags = exactPred.map(when(_, col("term"))) ++
+        expanded.map { case (pred, key, _) => when(pred, lit(key)) }
+      // the tag array filter below neither pushes down nor codegens: an OR
+      // of term IN (…) and each leaf's literal prefix prunes the postings
+      // scan first (parquet row groups, the term-clustered layout)
+      val pushable = (exactPred ++ expanded.map(_._3)).reduce(_ || _)
+      base.filter(pushable)
         .select(filter(array(tags: _*), t => t.isNotNull).as("leaves"),
           col("id"), col("tf"), col("dl"))
         .filter(size(col("leaves")) > 0)

@@ -227,14 +227,17 @@ object ImpactTopK {
           () => { cands.unpersist(); () })
       }
     val top = try {
-      val perDoc = contrib
-        .select(col("id"), (col("__idf") * tfPart(avgDl)).as("__s"))
-        .groupBy(col("id"))
-        .agg(sum(col("__s")).as("rank"), count(lit(1)).as("__m"))
-      val qualified =
-        if (isAnd && live.size > 1) perDoc.filter(col("__m") === lit(live.size))
-        else perDoc
-      qualified.orderBy(col("rank").desc, col("id").asc)
+      val scored = contrib.select(col("id"), (col("__idf") * tfPart(avgDl)).as("__s"))
+      val perDoc =
+        // one rows-store row per (term, id): a single term's rows already
+        // are the per-doc scores — no aggregate, no shuffle
+        if (live.size == 1) scored.select(col("id"), col("__s").as("rank"))
+        else {
+          val summed = scored.groupBy(col("id"))
+            .agg(sum(col("__s")).as("rank"), count(lit(1)).as("__m"))
+          if (isAnd) summed.filter(col("__m") === lit(live.size)) else summed
+        }
+      perDoc.orderBy(col("rank").desc, col("id").asc)
         .select(col("id"), col("rank")).limit(n).collect()
     } finally cleanup()
     // certificate, two ways to prove exactness:

@@ -21,10 +21,6 @@ object Sorter {
     }
     metaCols ++ tieBreak
   }
-
-  def apply(df: DataFrame, metadata: Column, keys: Seq[SortKey], tieBreak: Seq[Column] = Nil): DataFrame =
-    if (keys.isEmpty && tieBreak.isEmpty) df
-    else df.orderBy(sortColumns(metadata, keys, tieBreak): _*)
 }
 
 /** limit/offset with the reference's truthiness quirk: `limit=0` (or <0)

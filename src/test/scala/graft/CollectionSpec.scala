@@ -1310,4 +1310,136 @@ class CollectionSpec extends AnyFunSuite {
       appender.stop()
     }
   }
+
+  // --- query(): one Spark action for total + page ---
+
+  /** query() pinned against its own lazy pipeline: `total` is the
+    * unpaginated frame's count, the page is that frame's order cut at
+    * offset/limit (ids and ranks). Returns the result for literal checks.
+    */
+  private def queryAgreesWithFrame(c: Collection, q: String = "", limit: Int = 0,
+                                   offset: Int = 0, where: Map[String, Any] = Map.empty,
+                                   orderBy: graft.model.OrderBy = graft.model.OrderBy.none,
+                                   vectorSearch: Boolean = false): graft.model.QueryResult = {
+    val r = c.query(q, limit, offset, where, orderBy, vectorSearch)
+    val frame = c.queryFrame(q, where = where, orderBy = orderBy, vectorSearch = vectorSearch)
+    assert(r.total === frame.count(), s"total of '$q' limit=$limit offset=$offset")
+    val all = frame.collect().toSeq.map(row =>
+      (row.getString(0), if (row.isNullAt(3)) None else Some(row.getDouble(3))))
+    val rest = all.drop(math.max(offset, 0))
+    assert(r.results.map(h => (h.id, h.rank)) === (if (limit > 0) rest.take(limit) else rest),
+      s"page of '$q' limit=$limit offset=$offset")
+    r
+  }
+
+  test("query() total matrix: limit, offset past the end, empty where, orderBy, vector") {
+    val c = gridColl()
+    assert(queryAgreesWithFrame(c, limit = 3).total === 10)
+    assert(queryAgreesWithFrame(c).total === 10)
+    // past Spark's top-k threshold the page is a global sort: still one count
+    assert(queryAgreesWithFrame(c, "Lorem", limit = Int.MaxValue).total === 10)
+    assert(queryAgreesWithFrame(c, offset = 4).results.size === 6)
+    val past = queryAgreesWithFrame(c, limit = 3, offset = 20)
+    assert(past.total === 10 && past.results.isEmpty)
+    assert(queryAgreesWithFrame(c, "Lorem", limit = 3, offset = 20).total === 10)
+    assert(queryAgreesWithFrame(c, limit = 3, where = Map("k1" -> "zzz")).total === 0)
+    assert(queryAgreesWithFrame(c, "Lorem", limit = 3, where = Map("k1" -> "zzz")).total === 0)
+    assert(queryAgreesWithFrame(c, "Lorem", where = Map("k2" -> "a")).total === 3)
+    val byMeta = queryAgreesWithFrame(c, limit = 3, offset = 2, orderBy = Seq("-k1"))
+    assert(byMeta.total === 10 && byMeta.results.map(_.id) === Seq("i8", "i7", "i6"))
+    assert(queryAgreesWithFrame(c, "Lorem", limit = 4, offset = 1,
+      orderBy = Seq("k2", "k1")).total === 10)
+    assert(queryAgreesWithFrame(c, "Lorem", limit = 0, offset = 3).results.size === 7)
+
+    val v = coll(embedder = Some(DictEmbedder))
+    v.add(Seq("Lorem ipsum dolor", "sit amet"))
+    val top = queryAgreesWithFrame(v, "consectetur", limit = 1, vectorSearch = true)
+    assert(top.total === 2 && top.results.map(_.content) === Seq("sit amet"))
+    assert(queryAgreesWithFrame(v, "consectetur", offset = 1, vectorSearch = true)
+      .results.map(_.content) === Seq("Lorem ipsum dolor"))
+  }
+
+  test("query() total on absent, emptied and delta-carrying collections") {
+    val absent = coll()
+    assert(queryAgreesWithFrame(absent, limit = 10).total === 0)
+    assert(queryAgreesWithFrame(absent, "alpha", limit = 10).total === 0)
+    assert(queryAgreesWithFrame(absent).total === 0)
+
+    val emptied = coll()
+    emptied.add(Seq("alpha beta", "beta gamma"), ids = Some(Seq("x", "y")))
+    emptied.delete(Seq("x", "y"))
+    assert(queryAgreesWithFrame(emptied, limit = 10).total === 0)
+    assert(queryAgreesWithFrame(emptied, "beta", limit = 10).total === 0)
+
+    spark.conf.set("spark.graft.store.directUpsertMaxBytes", "0")
+    spark.conf.set("spark.graft.compact.auto", "false")
+    try {
+      val c = coll()
+      c.add((1 to 5).map(i => s"alpha beta doc$i"), ids = Some((1 to 5).map(i => s"d$i")))
+      c.add(Seq("alpha gamma", "alpha delta"), ids = Some(Seq("d2", "d6")))
+      c.delete(Seq("d4"))
+      assert(graft.index.Stores.deltaCount(spark,
+        graft.index.Stores.docsDir(c.root), c.name) > 0, "expected delta segments")
+      // no broadcast: the delta-resolving join is a sort-merge join, whose
+      // id-ascending output must not let the page cut short the count
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try {
+        val scan = queryAgreesWithFrame(c, limit = 2)
+        assert(scan.total === 5 && scan.results.map(_.id) === Seq("d1", "d2"))
+        assert(queryAgreesWithFrame(c, limit = 2, offset = 4).total === 5)
+        assert(queryAgreesWithFrame(c, "alpha", limit = 2).total === 5)
+        assert(queryAgreesWithFrame(c, "beta", limit = 10).total === 3)
+        assert(queryAgreesWithFrame(c, limit = 2, orderBy = Seq("k")).total === 5)
+      } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    } finally {
+      spark.conf.unset("spark.graft.store.directUpsertMaxBytes")
+      spark.conf.unset("spark.graft.compact.auto")
+    }
+  }
+
+  test("query(limit > 0) is one top-k action: no global sort, no cache") {
+    val c = gridColl()
+    for (q <- Seq("Lorem", "")) {
+      var r: graft.model.QueryResult = null
+      val acts = TestSpark.actionsOf { r = c.query(q, limit = 10) }
+      assert(r.total === 10)
+      assert(acts.map(_._1) === Seq("collect"), acts.mkString("\n"))
+      val plan = acts.head._2
+      assert(plan.contains("TakeOrderedAndProject"), plan)
+      assert(!plan.contains("rangepartitioning"), plan)
+      assert(!plan.contains("InMemoryTableScan"), plan)
+      assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sharedState.cacheManager.isEmpty)
+    }
+  }
+
+  test("prefix leaves push a StringStartsWith pre-filter into the postings scan") {
+    val c = coll()
+    c.add(Seq("bezel bezier alpha", "bezoar beta", "alpha zebra"), ids = Some(Seq("a", "b", "c")))
+    val plan = c.queryFrame("bez*", limit = 10).queryExecution.executedPlan.toString
+    val pushed = plan.linesIterator.filter(_.contains("PushedFilters")).mkString("\n")
+    assert(pushed.contains("StringStartsWith"), plan)
+    assert(c.query("bez*", limit = 10).results.map(_.id).toSet === Set("a", "b"))
+    assert(c.query("bez* or zebra", limit = 10).total === 3)
+  }
+
+  test("LSH probe buckets computed on the driver equal the Spark-computed ones") {
+    import TestSpark.spark.implicits._
+    import org.apache.spark.sql.functions._
+    val rnd = new scala.util.Random(7)
+    val (tables, planes, dim, seed) = (16, 4, 64, 42L)
+    // full-width and short vectors (a short vector dots over its own dims)
+    val vecs = (0 until 40).map(i =>
+      Seq.fill(if (i % 4 == 0) 10 else dim)(rnd.nextGaussian().toFloat))
+    val ix = graft.ext.LshIndex(spark.emptyDataFrame, tables, planes, dim, seed)
+    val viaSpark = vecs.zipWithIndex.toDF("v", "i")
+      .select($"i", posexplode(graft.ext.Ann.lshBucketCol($"v", tables, planes, dim, seed))
+        .as(Seq("table", "bucket")))
+      .collect().groupBy(_.getInt(0))
+      .map { case (i, rs) => i -> rs.map(r => (r.getInt(1), r.getLong(2))).toSeq.sorted }
+    vecs.zipWithIndex.foreach { case (v, i) =>
+      assert(ix.probeBuckets(v).sorted === viaSpark(i), s"vector $i")
+    }
+    assert(ix.probeBuckets(null).isEmpty)
+  }
 }

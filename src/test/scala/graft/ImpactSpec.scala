@@ -118,6 +118,19 @@ class ImpactSpec extends AnyFunSuite {
     finally assert(moved.renameTo(postingsPart))
   }
 
+  test("single-term certified serving plans no shuffle") {
+    val c = build(300, cap = 64)
+    c.impactCertifiedTopK("common", 10, 0) // warm the gate and meta caches
+    var served: Option[DataFrame] = None
+    val acts = TestSpark.actionsOf { served = c.impactCertifiedTopK("common", 10, 0) }
+    assert(served.nonEmpty, "expected certified serve")
+    // one rows-store row per (term, id): the per-doc scores need no aggregate
+    acts.foreach { case (_, plan) =>
+      assert(!plan.contains("Exchange") && !plan.contains("HashAggregate"), plan)
+    }
+    assertSameTopK(c, "common", 10)
+  }
+
   test("pure-insert delta keeps the sidecar exact and servable") {
     spark.conf.set("spark.graft.store.directUpsertMaxBytes", "0")
     spark.conf.set("spark.graft.compact.auto", "false")

@@ -80,22 +80,7 @@ class R20OptSpec extends AnyFunSuite {
     // action-level pin: the whole delete must be ONE collect (the
     // membership probe; AQE may split it into several jobs) and ZERO write
     // commands
-    val acts = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val ql = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             durationNs: Long): Unit = acts.add(funcName)
-      override def onFailure(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             exception: Exception): Unit = acts.add(s"FAIL:$funcName")
-    }
-    spark.listenerManager.register(ql)
-    try {
-      c.delete(Seq("absent-1", "absent-2"))
-      Thread.sleep(1000) // QueryExecutionListener is fed async
-    } finally spark.listenerManager.unregister(ql)
-    import scala.jdk.CollectionConverters._
-    val actions = acts.asScala.toSeq
+    val actions = TestSpark.actionsOf(c.delete(Seq("absent-1", "absent-2"))).map(_._1)
     assert(actions == Seq("collect"),
       s"an all-absent delete must cost exactly the one membership-probe collect, got $actions")
     assert(Stores.partitionFingerprint(spark, Stores.docsDir(root), "t") == docsFp,
