@@ -202,9 +202,6 @@ object EntryQueries {
     */
   private def readPar(spark: SparkSession, path: String): DataFrame = {
     val df = spark.read.parquet(path)
-    // kill switch for A/B measurement (ProbeAb): spark.graft.entry.respread
-    if (!spark.conf.getOption("spark.graft.entry.respread").forall(_.toBoolean))
-      return df
     // Narrowness from FILE BYTES, driver-side (one FS stat): probing the
     // DataFrame's RDD partition count costs a full physical-planning pass
     // per call (measured up to 1.2 s on map-typed plans). Spark packs

@@ -202,7 +202,8 @@ final class Collection private (
     * The persist materializes the batch (embedding included) once for its
     * several consumers.
     */
-  private def upsert(batch0: DataFrame, idsHint: Option[DataFrame] = None): Unit = {
+  private def upsert(batch0: DataFrame, idsHint: Option[DataFrame] = None,
+                     batchHints: Boolean = true): Unit = {
     val wasEmpty = !Stores.partitionExists(spark, docsDir, name)
     // Spread a narrow batch across the session's cores before caching
     // (r19 opt, guide §2): AQE coalesces the last-wins window's shuffle by
@@ -221,21 +222,24 @@ final class Collection private (
     // changes.
     val par = spark.sparkContext.defaultParallelism
     val est = batch0.queryExecution.optimizedPlan.stats.sizeInBytes
-    val respreadOn = spark.conf
-      .getOption("spark.graft.ingest.respread").forall(_.toBoolean)
     val spread =
-      if (respreadOn && est < BigInt(par.toLong * (4L << 20)))
-        batch0.repartition(par)
+      if (est < BigInt(par.toLong * (4L << 20))) batch0.repartition(par)
       else batch0
+    // est (already computed for the respread decision) rides along as the
+    // write-size hint: each rangeBy write otherwise pays a fresh
+    // analyze+optimize pass just to re-derive the same estimate. Not for
+    // streamIngest micro-batches (measured, x140 at sf0.1): a stream
+    // batch's estimate is far above its real size, so the hint landed the
+    // postings rewrite at the shuffle-partition ceiling (4 files vs 1 on a
+    // 4-core session, ~6% slower end to end) where the per-write probe of
+    // the tokenized frame sees the real size.
+    val batchEst = if (batchHints) Some(est) else None
     val batch = spread.persist()
     try {
       if (wasEmpty) {
-        // est (already computed for the respread decision) rides along as
-        // the write-size hint: each rangeBy write otherwise pays a fresh
-        // analyze+optimize pass just to re-derive the same estimate
         Stores.overwritePartition(spark, docsDir, name, batch,
-          sortBy = Seq("id"), rangeBy = Seq("id"), sizeHintBytes = Some(est))
-        refreshIndexesFull(batch, batchEst = Some(est)) // tokenize from the cache, not a store re-read
+          sortBy = Seq("id"), rangeBy = Seq("id"), sizeHintBytes = batchEst)
+        refreshIndexesFull(batch, batchEst) // tokenize from the cache, not a store re-read
         // first ingest creates the collection: persist the open-time flags
         // that change what the stored bytes mean, so mismatched re-opens
         // throw at Collection() instead of silently mis-querying. Written
@@ -261,8 +265,8 @@ final class Collection private (
           // the resolve∪anti-join∪batch plan
           Stores.overwritePartition(spark, docsDir, name, merged,
             sortBy = Seq("id"), rangeBy = Seq("id"),
-            sizeHintBytes = Some(BigInt(baseBytes) + BigInt(deltaBytes) + est))
-          refreshIndexesMerge(batch, rawIds, smallIds, batchEst = est)
+            sizeHintBytes = batchEst.map(BigInt(baseBytes) + BigInt(deltaBytes) + _))
+          refreshIndexesMerge(batch, rawIds, smallIds, batchEst)
         } else {
           Stores.appendDelta(spark, docsDir, name, batch, sortBy = Seq("id"))
           refreshIndexesDelta(batch)
@@ -277,9 +281,7 @@ final class Collection private (
     * standards — one task rewrites it faster than reads can amortize delta
     * resolution.
     */
-  private def directUpsertMaxBytes: Long =
-    spark.conf.getOption("spark.graft.store.directUpsertMaxBytes")
-      .map(_.toLong).getOrElse(64L << 20)
+  private def directUpsertMaxBytes: Long = graft.GraftConf.directUpsertMaxBytes(spark)
 
   /** Bulk DataFrame ingestion (new-scope S8 — the reference has no file
     * connectors). `df` must have columns id, content, metadata[, embedding].
@@ -291,7 +293,11 @@ final class Collection private (
     * column). Index refresh is DELTA on the batch's ids, so a micro-batch
     * costs O(batch) tokenize work regardless of collection size.
     */
-  def addDf(df: DataFrame, posCol: Option[String] = None): Unit = {
+  def addDf(df: DataFrame, posCol: Option[String] = None): Unit =
+    ingestFrame(df, posCol, batchHints = true)
+
+  private def ingestFrame(df: DataFrame, posCol: Option[String],
+                          batchHints: Boolean): Unit = {
     var d = df
     val pos = posCol.map(col).getOrElse(monotonically_increasing_id())
     d = d.withColumn("__pos", pos)
@@ -318,7 +324,7 @@ final class Collection private (
     }
     d = d.select($"id".cast("string"), $"content".cast("string"),
       $"metadata".cast("map<string,string>"), $"embedding".cast("array<float>"))
-    upsert(d)
+    upsert(d, batchHints = batchHints)
   }
 
   /** Continuous ingestion: each micro-batch of a streaming frame with
@@ -336,7 +342,7 @@ final class Collection private (
     stream.writeStream
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) addDf(batch)
+        if (!batch.isEmpty) ingestFrame(batch, None, batchHints = false)
       }
   }
 
@@ -654,8 +660,7 @@ final class Collection private (
     * per batch on a long stream).
     */
   private def maybeCompact(): Unit = {
-    // spark.graft.compact.auto=false defers entirely to explicit compact()
-    if (!spark.conf.getOption("spark.graft.compact.auto").forall(_.toBoolean)) return
+    if (!graft.GraftConf.compactAuto(spark)) return
     val (baseBytes, deltaBytes) = Stores.segmentBytes(spark, docsDir, name)
     if (deltaBytes * 2 > baseBytes ||
       Stores.deltaCount(spark, docsDir, name) > Stores.MaxDeltas) compact()
@@ -897,17 +902,15 @@ final class Collection private (
   }
 
   /** The IVF-PQ training front end: coarse centroids + measured
-    * raw-vs-residual codebook. When the sample bound fits the driver-train
-    * arm (`maxSample <= spark.graft.ivf.driverTrainMaxVecs`, the
-    * [[graft.ext.Ivf.trainCentroids]] policy), ONE boundedSample selection
-    * feeds both the coarse k-means and the codebook choice — the selection
-    * (a count + survivor-count + bounded-sort collect over the docs scan)
-    * previously ran twice with the identical (corpus, maxSample, seed),
-    * once inside Ivf.build and once in [[chooseIvfPqCodebook]]. Results are
-    * bit-identical: the sample is deterministic and both consumers see the
-    * same hash-ordered rows. `spark.graft.ivfpq.fusedSample=false` restores
-    * the two-selection path (A/B kill switch). Above the driver bound the
-    * distributed trainer keeps its own sample handling, unchanged.
+    * raw-vs-residual codebook. When the sample fits the driver-train arm
+    * ([[graft.ext.Ivf.driverTrainOk]], the [[graft.ext.Ivf.trainCentroids]]
+    * policy), ONE boundedSample selection (a count + survivor-count +
+    * bounded-sort collect over the docs scan) feeds both the coarse k-means
+    * and the codebook choice. Results are bit-identical to running
+    * Ivf.build and [[chooseIvfPqCodebook]] separately: the sample is
+    * deterministic and both consumers see the same hash-ordered rows.
+    * Above the driver bound the distributed trainer keeps its own sample
+    * handling.
     */
   private def trainIvfPqTables(numCentroids: Int, m: Int, iters: Int,
                                maxSample: Int, seed: Long)
@@ -915,9 +918,7 @@ final class Collection private (
     import graft.ext.Ivf
     // shared dim-aware gate (vec-count AND byte bound) — keeps this arm
     // decision identical to trainCentroids' own
-    val fused = Ivf.driverTrainOk(docs(), "embedding", maxSample) &&
-      spark.conf.getOption("spark.graft.ivfpq.fusedSample").forall(_.toBoolean)
-    if (fused) {
+    if (Ivf.driverTrainOk(docs(), "embedding", maxSample)) {
       val sample = Ivf.boundedSample(docs(), "embedding", 1.0, maxSample, seed)
         .collect().map(_.getSeq[Float](0).toArray)
       val cents = Ivf.trainCentroidsVecs(sample, numCentroids, iters)
@@ -1654,7 +1655,7 @@ final class Collection private (
     */
   private def refreshIndexesMerge(batch: DataFrame, rawIds: DataFrame,
                                   smallIds: Boolean,
-                                  batchEst: BigInt): Unit = {
+                                  batchEst: Option[BigInt]): Unit = {
     // hinted form for the joins where the ids are the BUILD side (every
     // left_anti right below); the doclen left join instead hints its
     // postings agg (same cardinality bound) via doclenOfPostings — a hint
@@ -1674,7 +1675,7 @@ final class Collection private (
         val (pb, pd) = Stores.segmentBytes(spark, postingsDir, name)
         Stores.overwritePartition(spark, postingsDir, name, fresh,
           sortBy = Seq("term"), rangeBy = Seq("term"),
-          sizeHintBytes = Some(BigInt(pb) + BigInt(pd) + batchEst))
+          sizeHintBytes = batchEst.map(BigInt(pb) + BigInt(pd) + _))
         writeDoclenFull(doclen().join(batchIds, Seq("id"), "left_anti")
           .unionByName(doclenOfPostings(rawIds, freshBatch, hintAgg = smallIds)))
         // below the direct threshold a full sidecar re-derive is the cheap

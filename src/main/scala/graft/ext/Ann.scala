@@ -124,52 +124,24 @@ object Ann {
         posexplode(lshBucketCol(col(embCol), numTables, numPlanes, dim, seed))
           .as(Seq("table", "bucket")))
 
-  /** EXACT top-k neighbors for a (small, driver-side) batch of queries.
-    * Each query plans as `TakeOrderedAndProject` — per-partition k-heaps,
-    * merge of k·partitions rows, never a full sort or a full-corpus shuffle —
-    * unioned into one job. Output: (qid, rn, id, sim), rn = 1-based rank.
+  /** EXACT top-k neighbors for a (small, driver-side) batch of queries:
+    * [[exactTopKAll]] over the batch — ONE corpus scan, every (row, query)
+    * pair scored in one codegen'd pass, the rank-`k` cut as WindowGroupLimit
+    * map-side heaps, ties by (sim desc, id asc). Output: (qid, rn, id, sim),
+    * rn = 1-based rank.
     */
   def exactTopK(corpus: DataFrame, queries: Seq[(String, Seq[Float])], k: Int,
                 idCol: String = "id", embCol: String = "embedding"): DataFrame = {
-    val base = corpus.select(col(idCol).as("id"), col(embCol).as("emb"))
-      .filter(col("emb").isNotNull)
     if (queries.isEmpty) // typed empty frame (id keeps the corpus id type)
-      return base.select(lit("").as("qid"), lit(1).as("rn"), col("id"),
-        lit(0.0).as("sim")).limit(0)
+      return corpus.select(col(idCol).as("id"), col(embCol).as("emb"))
+        .filter(col("emb").isNotNull)
+        .select(lit("").as("qid"), lit(1).as("rn"), col("id"), lit(0.0).as("sim")).limit(0)
     // duplicate qids would interleave two vectors' top-k under one ranking
     // window (rn up to 2k, each query polluted with the other's neighbors)
     require(queries.map(_._1).distinct.size == queries.size, "duplicate query ids")
     val spark = corpus.sparkSession
-    // ONE corpus scan for the whole query batch (r19 opt): the per-query
-    // TakeOrderedAndProject loop re-read and re-decoded the corpus q times;
-    // the [[exactTopKAll]] shape (broadcast the tiny query side, score every
-    // pair in one codegen'd pass, WindowGroupLimit rank) pays the same q·N
-    // flops over a single scan, and its map-side per-group heaps bound the
-    // shuffle at partitions×q×k skinny rows. Output is IDENTICAL: same
-    // cosine arithmetic per (row, query), same (sim desc, id asc) keys for
-    // both the cut and the rank. spark.graft.ann.batchExact=false restores
-    // the per-query loop (A/B kill switch).
-    if (spark.conf.getOption("spark.graft.ann.batchExact").forall(_.toBoolean)) {
-      import spark.implicits._
-      val q = queries.toDF("qid", "qvec")
-        .select(col("qid"), col("qvec").cast(ArrayType(FloatType)).as("qvec"))
-      base.join(broadcast(q))
-        .withColumn("sim", VectorFunctions.cosine(col("emb"), col("qvec")))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("id").asc)))
-        .filter(col("rn") <= k)
-        .select(col("qid"), col("rn"), col("id"), col("sim"))
-    } else queries.map { case (qid, qvec) =>
-      val scored = base
-        .withColumn("sim", VectorFunctions.cosine(col("emb"), VectorFunctions.vecLit(qvec)))
-        .orderBy(col("sim").desc, col("id").asc)
-        .limit(k)
-        .select(lit(qid).as("qid"), col("id"), col("sim"))
-      scored
-    }.reduce(_ unionByName _)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("id").asc)))
-      .select(col("qid"), col("rn"), col("id"), col("sim"))
+    import spark.implicits._
+    exactTopKAll(corpus, queries.toDF("qid", "qvec"), k, idCol, embCol)
   }
 
   /** Exact top-k for a DataFrame of queries (qid, qvec) — the bulk-scoring

@@ -70,12 +70,8 @@ object Graphs {
     // out-edges — skip the per-round dangling subtree (an anti-join + 1-row
     // aggregate + broadcast per iteration) outright. Bit-identical: with no
     // dangling nodes `__dm` is exactly 0.0 and `x + 0.0/n == x` for the
-    // strictly-positive rank sums this recurrence produces. (r19 opt)
-    // spark.graft.pagerank.skipDangling=false restores the unconditional
-    // dangling arm (A/B kill switch; the probe job is skipped too).
-    val skipDangling = spark.conf
-      .getOption("spark.graft.pagerank.skipDangling").forall(_.toBoolean)
-    val hasDangling = !skipDangling || !nodes
+    // strictly-positive rank sums this recurrence produces.
+    val hasDangling = !nodes
       .join(outDeg.select(col("src").as("id")), Seq("id"), "left_anti").isEmpty
     for (_ <- 1 to iterations) {
       val contrib = rank.join(outDeg, rank("id") === outDeg("src"))

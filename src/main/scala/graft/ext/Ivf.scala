@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.GraftConf
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -288,12 +289,9 @@ object Ivf {
     */
   private[graft] def driverTrainOk(corpus: DataFrame, embCol: String,
                                    maxSample: Int): Boolean = {
-    val conf = corpus.sparkSession.conf
-    val driverMax = conf.getOption("spark.graft.ivf.driverTrainMaxVecs")
-      .map(_.toInt).getOrElse(1 << 17)
-    if (maxSample > driverMax) return false
-    val maxBytes = conf.getOption("spark.graft.ivf.driverTrainMaxBytes")
-      .map(_.toLong).getOrElse(256L << 20)
+    val spark = corpus.sparkSession
+    if (maxSample > GraftConf.driverTrainMaxVecs(spark)) return false
+    val maxBytes = GraftConf.driverTrainMaxBytes(spark)
     val dim = corpus.select(col(embCol)).filter(col(embCol).isNotNull)
       .head(1).headOption.map(_.getSeq[Float](0).size.toLong).getOrElse(0L)
     maxSample.toLong * dim * 4L <= maxBytes

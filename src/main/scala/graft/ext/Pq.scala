@@ -377,8 +377,7 @@ object Pq {
   /** ADC top-k over an encoded frame: per query, an m×k dot-product lookup
     * table (driver-computed, exact) scores every row's codes; the batch
     * ranks in ONE codes scan via WindowGroupLimit map-side k-heaps
-    * ([[batchRank]], r19 — previously one TakeOrderedAndProject scan per
-    * query). Output
+    * ([[batchRank]]). Output
     * (qid, rn, id, score) — `score` approximates the dot product (= cosine
     * when the index was built `normalize`d and queries are normalized here
     * the same way).
@@ -394,23 +393,11 @@ object Pq {
       val q = if (normalize) normalizeVec(q0.toArray) else q0.toArray
       Bridge.column(PqAdcScore(Bridge.expression(col("codes")), lutFor(q, cb)))
     }
-    if (batchAdcOn(codes))
-      batchRank(codes, queries.map(_._1),
-        queries.map(q => scoreCol(q._2)), k)
-    else queries.map { case (qid, q0) =>
-      codes
-        .withColumn("score", scoreCol(q0))
-        .orderBy(col("score").desc, col("id").asc)
-        .limit(k)
-        .select(lit(qid).as("qid"), col("id"), col("score"))
-    }.reduce(_ unionByName _)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("score").desc, col("id").asc)))
-      .select(col("qid"), col("rn"), col("id"), col("score"))
+    batchRank(codes, queries.map(_._1), queries.map(q => scoreCol(q._2)), k)
   }
 
   /** The per-(query, subspace, codeword) ADC dot-product table — exact,
-    * driver-computed, m×k doubles (the shared head of both ranking arms).
+    * driver-computed, m×k doubles (shared by both ADC scorers).
     */
   private def lutFor(q: Array[Float], cb: PqCodebook): Seq[Seq[Double]] =
     cb.books.zipWithIndex.map { case (words, s) =>
@@ -426,18 +413,11 @@ object Pq {
       }
     }
 
-  // spark.graft.pq.batchAdc=false restores the per-query scan loop (A/B
-  // kill switch, like spark.graft.ann.batchExact for the exact arm)
-  private def batchAdcOn(df: DataFrame): Boolean =
-    df.sparkSession.conf.getOption("spark.graft.pq.batchAdc").forall(_.toBoolean)
-
-  /** One-codes-scan ranking for a query batch (r19 opt): the per-query
-    * `orderBy.limit` loop re-read the codes store q times; here each row
-    * computes its q ADC scores in one projection (the same [[PqAdcScore]]
-    * expressions — values bit-identical), posexplode tags them with the
-    * query ordinal, and the rank-`k` cut lowers to WindowGroupLimit
-    * map-side heaps, so the shuffle carries partitions×q×k skinny rows.
-    * Same output contract as the loop: (qid, rn 1..k, id, score), ties by
+  /** One-codes-scan ranking for a query batch: each row computes its q ADC
+    * scores in one projection ([[PqAdcScore]] expressions), posexplode tags
+    * them with the query ordinal, and the rank-`k` cut lowers to
+    * WindowGroupLimit map-side heaps, so the shuffle carries
+    * partitions×q×k skinny rows. Output (qid, rn 1..k, id, score), ties by
     * (score desc, id asc) for both cut and rank.
     */
   private def batchRank(codes: DataFrame, qids: Seq[String],
@@ -481,19 +461,7 @@ object Pq {
       Bridge.column(PqAdcScore(Bridge.expression(col("codes")), lutFor(q, cb))) +
         element_at(typedLit(cdots), col("cluster").cast("int") + 1)
     }
-    if (batchAdcOn(rows)) // one rows scan for the batch — see [[batchRank]]
-      batchRank(rows, queries.map(_._1),
-        queries.map(q => scoreCol(q._2)), k)
-    else queries.map { case (qid, q0) =>
-      rows
-        .withColumn("score", scoreCol(q0))
-        .orderBy(col("score").desc, col("id").asc)
-        .limit(k)
-        .select(lit(qid).as("qid"), col("id"), col("score"))
-    }.reduce(_ unionByName _)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("score").desc, col("id").asc)))
-      .select(col("qid"), col("rn"), col("id"), col("score"))
+    batchRank(rows, queries.map(_._1), queries.map(q => scoreCol(q._2)), k)
   }
 
   /** The one place the encoding flag is interpreted on the WRITE side:

@@ -35,10 +35,6 @@ private[graft] object WorkingColumns {
     * user below is set-semantics: dedup, banding, line aggregation).
     */
   def respread(df: DataFrame): DataFrame = {
-    // spark.graft.kernel.respread=false restores the pre-r19 pass-through
-    // (A/B kill switch, mirroring spark.graft.entry.respread for readPar)
-    if (!df.sparkSession.conf.getOption("spark.graft.kernel.respread")
-        .forall(_.toBoolean)) return df
     val par = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < par) df.repartition(par) else df
   }

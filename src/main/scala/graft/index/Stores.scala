@@ -1,5 +1,6 @@
 package graft.index
 
+import graft.GraftConf
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -404,26 +405,16 @@ object Stores {
     // partition (32 after the ingest respread), and every subsequent read
     // resolves ALL of them. coalesce — not repartition — because the
     // delta frames are persisted batches: no recompute, no shuffle.
-    // Kill switch (r20 A/B: spark.graft.store.writeSizing=false restores the
-    // exact pre-r19 arm — no size probe, no coalesce). NO caller size hints
-    // here, deliberately (r20, measured): unlike the rangeBy rewrites
-    // (which REPARTITION — a shuffle, so upstream parallelism survives any
+    // NO caller size hints here, deliberately (r20, measured): unlike the
+    // rangeBy rewrites (which REPARTITION — a shuffle, so upstream parallelism survives any
     // partition count), this coalesce(1) clamps the WHOLE unevaluated
     // delta-derivation plan (a micro-batch's tokenize) onto one task, so
     // the decision must come from the delta frame's own estimate, not a
     // caller's batch-input bound — a batch-bytes hint flipped the decision
     // on tokenize-derived deltas and cost 1.06-1.12x on the streaming
     // entries in interleaved A/B.
-    val sizingOn = spark.conf.getOption("spark.graft.store.writeSizing")
-      .forall(_.toBoolean)
-    val target = spark.conf.getOption("spark.graft.store.rangeTargetBytes")
-      .map(_.toLong).getOrElse(16L << 20)
-    val sized =
-      if (!sizingOn) df
-      else {
-        val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-        if (est < BigInt(target)) df.coalesce(1) else df
-      }
+    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val sized = if (est < BigInt(GraftConf.rangeTargetBytes(spark))) df.coalesce(1) else df
     val out = if (sortBy.nonEmpty) sized.sortWithinPartitions(sortBy.head, sortBy.tail: _*) else sized
     writeVia(out, s"$dir/$name")
     gone.foreach(g => writeVia(g.select(org.apache.spark.sql.functions.col("id")),
@@ -445,18 +436,12 @@ object Stores {
     // 1.10-1.14x slower on the stream-compaction entry in BOTH A/B arm
     // orders because it lands the folded store at fewer files than the
     // optimizer's estimate of the resolve plan does, taxing the reads that
-    // follow. The hot mutation paths keep their hints (A/B'd
-    // neutral-or-better); this one write keeps the probe.
+    // follow. The batch mutation paths keep their hints (A/B'd
+    // neutral-or-better); this write, like streamIngest's micro-batch
+    // upserts (see Collection.upsert), keeps the probe.
     overwritePartition(spark, storeDir, collection,
       readPartition(spark, storeDir, collection, schema), sortBy, rangeBy)
   }
-
-  /** r20 A/B gate for the caller-provided write-size hints: `false` ignores
-    * every hint and falls back to the per-write optimizer stats probe (the
-    * r19 arm).
-    */
-  private def sizeHintsOn(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.store.sizeHints").forall(_.toBoolean)
 
   /** Overwrite one collection's partition: write to a temp dir under the same
     * filesystem, then swap it into place via RENAME-OVER — the live
@@ -485,34 +470,24 @@ object Stores {
     // to ONE partition — RangePartitioner then skips its sampling pass
     // entirely (a whole extra job, which re-evaluates the child plan, per
     // rewrite) and the write emits one file instead of shuffle.partitions
-    // near-empty ones. A store past ~target·partitions keeps exactly the
-    // old behavior (estimate clamps to the partition ceiling — including
-    // when Catalyst has no stats and reports its huge default).
-    // spark.graft.store.writeSizing=false restores the exact pre-r19 arm
-    // (constant shuffle.partitions range count, no size probe) — the r20
-    // A/B kill switch for the whole r19 write-sizing change. sizeHintBytes
-    // (callers that already know the store's scale from one FS stat) skips
-    // the optimizer stats probe, which costs a full extra analyze+optimize
-    // pass of the child plan per write (guide §5) — a mutation rewrites
-    // docs + doclen + postings + every index store, so the probes were the
-    // dominant driver-side cost of the s3-s9 lifecycle entries.
-    val sizingOn = spark.conf.getOption("spark.graft.store.writeSizing")
-      .forall(_.toBoolean)
+    // near-empty ones. A store past ~target·partitions gets one file per
+    // shuffle partition (the estimate clamps to the partition ceiling —
+    // including when Catalyst has no stats and reports its huge default).
+    // sizeHintBytes (callers that already know the store's scale from one
+    // FS stat) skips the optimizer stats probe, which costs a full extra
+    // analyze+optimize pass of the child plan per write (guide §5) — a
+    // mutation rewrites docs + doclen + postings + every index store, so the
+    // probes were the dominant driver-side cost of the s3-s9 lifecycle
+    // entries.
     val ranged =
-      if (rangeBy.nonEmpty && !sizingOn)
-        df.repartitionByRange(spark.sessionState.conf.numShufflePartitions,
-          rangeBy.map(org.apache.spark.sql.functions.col): _*)
-      else if (rangeBy.nonEmpty) {
-        val est = sizeHintBytes.filter(_ => sizeHintsOn(spark)).getOrElse(
-          df.queryExecution.optimizedPlan.stats.sizeInBytes)
+      if (rangeBy.nonEmpty) {
+        val est = sizeHintBytes.getOrElse(df.queryExecution.optimizedPlan.stats.sizeInBytes)
         // 16 MB per write task: single-task parquet encode throughput is
         // the binding cost at the small end (a ~50 MB store wrote 3-4 s
         // single-task under a 128 MB target), while at the large end the
         // partition-ceiling clamp decides and files are est/partitions
         // regardless of this value.
-        val target = BigInt(spark.conf
-          .getOption("spark.graft.store.rangeTargetBytes")
-          .map(_.toLong).getOrElse(16L << 20))
+        val target = BigInt(GraftConf.rangeTargetBytes(spark))
         val ceiling = spark.sessionState.conf.numShufflePartitions
         // Floor of min(8, ceiling) files once a store holds real data
         // (>= 1 MB estimated): a one-file store reads back as a ONE-TASK

@@ -32,7 +32,7 @@ import scala.collection.concurrent.TrieMap
   * attributes are untouched and the rewrite composes with any surrounding
   * plan. Like pgvector, the result is approximate by the index's recall;
   * registration ([[AnnCatalog.register]]) is the explicit opt-in, and
-  * `spark.graft.ann.rewrite=false` is the session-level kill switch.
+  * `spark.graft.ann.rewrite=false` opts a session out.
   *
   * Scope: the corpus must scan a registered parquet path (the shape of every
   * graft store); the first sort key must be the cosine DESC between the
@@ -176,7 +176,7 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (AnnCatalog.isEmpty) return plan
-    if (spark.conf.get("spark.graft.ann.rewrite", "true") != "true") return plan
+    if (!graft.GraftConf.annRewrite(spark)) return plan
     // Two shapes: the bare `orderBy(cos desc).limit(k)`, and the same with a
     // pruning Project BETWEEN limit and sort — what ColumnPruning leaves
     // behind for the ubiquitous `select("id").orderBy(...).limit(k)` query

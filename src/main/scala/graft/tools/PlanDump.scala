@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
   * checkable plan artifacts (plans/r19/<entry>_<tag>.txt).
   *
   * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> <tag> [key=value...] <entry...>
-  * (key=value args are applied as session confs — e.g. a kill switch, to
-  * dump the pre-optimization plan of an A/B-gated change)
+  * (key=value args are applied as session confs — e.g. a graft.GraftConf
+  * knob, to dump the plan under a non-default value)
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {

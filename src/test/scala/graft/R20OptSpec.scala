@@ -4,9 +4,8 @@ import graft.api.Collection
 import graft.index.Stores
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins for the round-20 optimization-equivalence contracts (same scheme as
-  * R19OptSpec: every change rides a kill-switch conf; each arm pair must
-  * produce IDENTICAL results).
+/** Pins for the store-write sizing, the dim-aware IVF driver-train gate
+  * and the short-circuited no-op delete.
   */
 class R20OptSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -26,26 +25,71 @@ class R20OptSpec extends AnyFunSuite {
     c
   }
 
-  private def docsRows(c: Collection): Seq[String] =
-    c.docs().collect().map(_.toString).toSeq.sorted
+  /** Parquet files directly under `dir` (one store segment). */
+  private def parquetFiles(dir: java.io.File): Int =
+    dir.listFiles().count(_.getName.endsWith(".parquet"))
 
-  test("store write sizing arms: lifecycle content identical with sizing off/on") {
-    // full lifecycle under each arm: ingest, update, delete, second add
-    def lifecycle(): Seq[String] = {
+  test("store writes: lifecycle content exact on the merge and delta paths") {
+    // ingest, update, delete, second add — content derived from the ops
+    val expected = ((0 until 30).filterNot(Set(3, 5, 7, 11))
+      .map(i => s"d$i" -> s"alpha beta doc$i common") ++
+      Seq("d3" -> "updated three", "d7" -> "updated seven", "d99" -> "late gamma")).toSet
+    def lifecycle(deltas: Boolean): Unit = {
       val root = freshRoot()
       val c = ingest(root)
       c.update(Seq("d3", "d7"), Seq("updated three", "updated seven"))
       c.delete(Seq("d5", "d11"))
       c.add(Seq("late gamma"), ids = Some(Seq("d99")))
-      val out = docsRows(c)
+      val got = c.docs().collect().map(r => r.getAs[String]("id") -> r.getAs[String]("content"))
+      assert(got.length == expected.size && got.toSet == expected)
+      assert(c.query("common").total == 26)
+      assert(c.query("updated").total == 2)
+      assert(c.query("doc5 or doc11").total == 0)
+      // a small store is written as ONE file per segment: range rewrites
+      // size their partition count from the store's bytes, and delta
+      // appends below the target coalesce to one task
+      val part = new java.io.File(Stores.partitionPath(Stores.docsDir(root), "t"))
+      val deltaDirs = part.listFiles().filter { f =>
+        f.isDirectory && f.getName.startsWith(".delta-") && !f.getName.endsWith("-gone")
+      }
+      assert(deltaDirs.nonEmpty == deltas)
+      assert(parquetFiles(part) == 1)
+      deltaDirs.foreach(d => assert(parquetFiles(d) == 1, d.getName))
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-      out
     }
-    val onArm = lifecycle()
-    val offArm = withConf("spark.graft.store.writeSizing", "false")(lifecycle())
-    val noHints = withConf("spark.graft.store.sizeHints", "false")(lifecycle())
-    assert(onArm == offArm, "writeSizing=false arm must produce identical docs")
-    assert(onArm == noHints, "sizeHints=false arm must produce identical docs")
+    lifecycle(deltas = false) // small collection: every upsert merges directly
+    withConf("spark.graft.compact.auto", "false")(
+      withConf("spark.graft.store.directUpsertMaxBytes", "0")(lifecycle(deltas = true)))
+  }
+
+  test("streamIngest and addDf land equal content and postings") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    // second batch upserts d10..d19 and inserts d20..d29
+    val first = (0 until 20).map(i => (s"d$i", s"alpha doc$i common"))
+    val second = (10 until 30).map(i => (s"d$i", s"beta doc$i common"))
+    val batched = Collection(spark, freshRoot(), "t")
+    batched.addDf(first.toDF("id", "content"))
+    batched.addDf(second.toDF("id", "content"))
+    val streamed = Collection(spark, freshRoot(), "t")
+    val mem = MemoryStream[(String, String)]
+    val q = streamed.streamIngest(mem.toDF().toDF("id", "content")).start()
+    try {
+      mem.addData(first: _*)
+      q.processAllAvailable()
+      mem.addData(second: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    def content(c: Collection): Set[(String, String)] =
+      c.docs().collect().map(r => r.getAs[String]("id") -> r.getAs[String]("content")).toSet
+    assert(content(batched).size == 30)
+    assert(content(streamed) == content(batched))
+    Seq("alpha", "beta", "common", "doc15").foreach { t =>
+      assert(streamed.query(t).total == batched.query(t).total, t)
+    }
+    Seq(batched, streamed).foreach(c =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(c.root)))
   }
 
   test("ivf driver-train gate is dim-aware: byte budget flips to the distributed arm") {
