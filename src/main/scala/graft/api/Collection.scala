@@ -483,33 +483,39 @@ final class Collection private (
     val touchedColls = deltaScans.foldLeft(baseScan)(_ unionByName _)
       .join(broadcast(idsDf), Seq("id"), "left_semi")
       .select("collection").distinct().collect().map(_.getString(0)).toSet
-    collNames.filter(touchedColls).foreach { coll =>
-      // useFts is decided PER TARGET collection (postings partition exists),
-      // not inherited from the caller — a useFts=false caller must not
-      // leave sibling collections' postings stale.
-      val targetFts = Stores.partitionExists(spark, Stores.postingsDir(root), coll)
-      // foldAccents=false: the delete path never re-tokenizes an FTS
-      // collection (stats derive from postings), and for non-FTS targets
-      // avg_dl is informational only
-      val self = new Collection(spark, root, coll, None, targetFts, foldAccents = false)
-      val (baseBytes, deltaBytes) = Stores.segmentBytes(spark, docsDir, coll)
-      if (baseBytes + deltaBytes <= directUpsertMaxBytes) {
-        // small partition: direct anti-join rewrite, reads stay flat; the
-        // segment bytes already in hand bound the anti-join's output — no
-        // per-write optimizer stats probe
-        Stores.overwritePartition(spark, docsDir, coll,
-          Stores.readPartition(spark, docsDir, coll, Stores.docsSchema)
-            .join(broadcast(idsDf), Seq("id"), "left_anti"),
-          sortBy = Seq("id"), rangeBy = Seq("id"),
-          sizeHintBytes = Some(BigInt(baseBytes) + BigInt(deltaBytes)))
-        self.removeFromIndexesMerge(broadcast(idsDf))
-      } else {
-        // gone-only delta: O(ids) bytes, the base is never rewritten
-        Stores.appendDelta(spark, docsDir, coll,
-          emptyFrame(Stores.docsSchema), gone = Some(idsDf))
-        self.removeFromIndexes(idsDf)
-        self.maybeCompact()
-      }
+    collNames.filter(touchedColls).foreach(removeFrom(_, idsDf))
+  }
+
+  /** Removes `idsDf`'s ids from collection `coll` of this root: its docs
+    * and every index. The per-collection body of [[delete]], shared with
+    * [[dedup]], which removes from its own collection only.
+    */
+  private def removeFrom(coll: String, idsDf: DataFrame): Unit = {
+    // useFts is decided PER TARGET collection (postings partition exists),
+    // not inherited from the caller — a useFts=false caller must not
+    // leave sibling collections' postings stale.
+    val targetFts = Stores.partitionExists(spark, Stores.postingsDir(root), coll)
+    // foldAccents=false: the delete path never re-tokenizes an FTS
+    // collection (stats derive from postings), and for non-FTS targets
+    // avg_dl is informational only
+    val self = new Collection(spark, root, coll, None, targetFts, foldAccents = false)
+    val (baseBytes, deltaBytes) = Stores.segmentBytes(spark, docsDir, coll)
+    if (baseBytes + deltaBytes <= directUpsertMaxBytes) {
+      // small partition: direct anti-join rewrite, reads stay flat; the
+      // segment bytes already in hand bound the anti-join's output — no
+      // per-write optimizer stats probe
+      Stores.overwritePartition(spark, docsDir, coll,
+        Stores.readPartition(spark, docsDir, coll, Stores.docsSchema)
+          .join(broadcast(idsDf), Seq("id"), "left_anti"),
+        sortBy = Seq("id"), rangeBy = Seq("id"),
+        sizeHintBytes = Some(BigInt(baseBytes) + BigInt(deltaBytes)))
+      self.removeFromIndexesMerge(broadcast(idsDf))
+    } else {
+      // gone-only delta: O(ids) bytes, the base is never rewritten
+      Stores.appendDelta(spark, docsDir, coll,
+        emptyFrame(Stores.docsSchema), gone = Some(idsDf))
+      self.removeFromIndexes(idsDf)
+      self.maybeCompact()
     }
   }
 
@@ -1107,6 +1113,7 @@ final class Collection private (
   // re-shingles and re-bands the WHOLE corpus (graft.ext.Dedup.dedupAgainst
   // recomputes reference signatures per call); with it, a probe computes
   // signatures for the probe texts only and joins ~bands skinny rows/doc.
+  // [[dedup]] reads its candidate buckets from the same rows.
   // -------------------------------------------------------------------------
 
   /** Build (or rebuild) the persisted MinHash dedup index over the current
@@ -2308,30 +2315,49 @@ final class Collection private (
     case leaf => leaf
   }
 
-  /** One-call in-place collection dedup: run the corpus dedup pipeline
-    * ([[graft.ext.Dedup.dedupCorpus]] — exact ∪ MinHash near-dup pairs →
-    * connected components → min-id survivor per cluster) over THIS
-    * collection, drop the losers, and rebuild postings/doclen/stats/ANN
-    * from the survivors. Returns the number of documents removed.
+  /** One-call in-place collection dedup: exact ∪ MinHash near-duplicate
+    * pairs (word 3-shingles, 32 bands × 4 rows, Jaccard ≥ `threshold`) →
+    * connected components → the min id of each duplicate cluster
+    * survives; the same clusters as [[graft.ext.Dedup.dedupCorpus]].
+    * Returns the number of documents removed.
     *
-    * Scale: fully distributed end to end — the survivor frame is
-    * materialized (persist + count) and swapped in via the write-temp
-    * partition overwrite; the index rebuild is the same full path first
-    * ingest uses. No id list ever collects to the driver (the `delete(ids)`
-    * API would). Run on a quiesced collection, like [[maintain]].
+    * Candidates come from the stored [[createDedupIndex]] rows when the
+    * index has that shape, else the docs are banded on the fly. The losers
+    * leave through [[delete]]'s removal path, scoped to THIS collection: a
+    * merge rewrite of docs and every index below
+    * `spark.graft.store.directUpsertMaxBytes`, gone-deltas above it.
+    *
+    * Scale: one window over the band rows finds the multi-member buckets;
+    * those rows and their members' content hashes and shingle sets are
+    * collected to the driver, which verifies the pairs and runs
+    * union-find, as long as they fit [[graft.ext.Dedup.DriverClusterMaxBytes]]
+    * (64 MB). Above that bound (logged at INFO) verification and
+    * components stay distributed. Run on a quiesced collection, like
+    * [[maintain]].
     */
-  def dedup(threshold: Double = 0.8): Long = {
-    val before = count()
-    val survivors = graft.ext.Dedup.dedupCorpus(docs(), threshold = threshold).persist()
-    try {
-      val after = survivors.count()
-      if (after != before) {
-        Stores.overwritePartition(spark, docsDir, name, survivors,
-          sortBy = Seq("id"), rangeBy = Seq("id"))
-        refreshIndexesFull(survivors)
-      }
-      before - after
-    } finally survivors.unpersist()
+  def dedup(threshold: Double = 0.8): Long =
+    dedupBounded(threshold, graft.ext.Dedup.DriverClusterMaxBytes)
+
+  /** [[dedup]] with the driver bound as a parameter (tests force the
+    * distributed arm with it).
+    */
+  private[graft] def dedupBounded(threshold: Double, maxDriverBytes: Long): Long = {
+    require(threshold > 0.0 && threshold <= 1.0, "0 < threshold <= 1")
+    val (n, bands, rpb) = (3, 32, 4)
+    val banded =
+      if (dedupParams().contains((n, bands, rpb)))
+        Stores.readPartition(spark, minhashDir, name, Stores.minhashSchema)
+      else dedupIndexRows(graft.ext.WorkingColumns.respread(docs()), n, bands, rpb)
+    val (losers, removed) = graft.ext.Dedup.bandedClusters(docs(), banded, n, threshold,
+        maxDriverBytes = maxDriverBytes) match {
+      case Left(clusters) =>
+        val ids = clusters.collect { case (id, root) if id != root => id }.toSeq
+        (ids.toDF("id"), ids.size.toLong)
+      case Right((clusters, nonRoots)) =>
+        (clusters.filter($"id" =!= $"cluster").select($"id"), nonRoots)
+    }
+    if (removed > 0) removeFrom(name, losers)
+    removed
   }
 
   /** Index introspection — the "EXPLAIN the index" admin surface (the

@@ -1,9 +1,10 @@
 package graft.ext
 
-import graft.functions.{HashFunctions, TextFunctions, VectorFunctions}
+import graft.functions.{HashFunctions, SortedJaccard, TextFunctions, VectorFunctions}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
 /** Deduplication operators for large-scale training-data pipelines
   * (new-scope per BASELINE.json; the reference has no dedup surface — its
@@ -158,6 +159,7 @@ object Dedup {
                                 contentCol: String, n: Int, bands: Int,
                                 rowsPerBand: Int, threshold: Double,
                                 maxBucket: Int): DataFrame = {
+    requireThreshold(threshold)
     // respread a narrow input (store reads, pipeline stage boundaries):
     // the shingle+MinHash pass below is the suite's heaviest per-row
     // kernel and runs scan-local — identity at real scale
@@ -167,12 +169,14 @@ object Dedup {
     // shared subtree (same exprIds) lets exchange reuse skip a second
     // corpus-wide sha2 + shuffle
     val members = exactMembers(docs, idCol, contentCol)
-    val exact = members.filter(col("id") =!= col("rep"))
-      .select(col("rep").as("id_a"), col("id").as("id_b"))
-    val near = minHashDiag(docs, idCol, contentCol, n, bands, rowsPerBand,
-      threshold, maxBucket, Some(members)).pairs.select(col("id_a"), col("id_b"))
-    dupClusters(exact.unionByName(near))
+    val prep = minHashPrep(repDocs(docs, members, idCol, contentCol), n, bands * rowsPerBand)
+    starClusters(members, minHashBanded(prep, bands, rowsPerBand),
+      prep.select(col("id"), col("shh")), threshold, maxBucket)._1
   }
+
+  /** The near-dup detectors' threshold contract: a Jaccard bound in (0, 1]. */
+  private def requireThreshold(threshold: Double): Unit =
+    require(threshold > 0.0 && threshold <= 1.0, s"threshold in (0, 1], got $threshold")
 
   private def freshCol(df: DataFrame, base: String): String =
     WorkingColumns.fresh(df, base)
@@ -817,9 +821,11 @@ object Dedup {
                       contentCol: String = "content", n: Int = 3,
                       bands: Int = 32, rowsPerBand: Int = 4,
                       threshold: Double = 0.8,
-                      maxBucket: Int = 256): DataFrame =
+                      maxBucket: Int = 256): DataFrame = {
+    requireThreshold(threshold)
     minHashDiag(docs, idCol, contentCol, n, bands, rowsPerBand,
       threshold, maxBucket).pairs
+  }
 
   /** The staged frames of [[minHashDupPairs]] — identical plan pieces, for
     * probe instrumentation: materializing each in order (every stage
@@ -834,9 +840,8 @@ object Dedup {
                                  contentCol: String = "content", n: Int = 3,
                                  bands: Int = 32, rowsPerBand: Int = 4,
                                  threshold: Double = 0.8,
-                                 maxBucket: Int = 256,
-                                 membersOpt: Option[DataFrame] = None): MinHashDiag = {
-    val members = membersOpt.getOrElse(exactMembers(docs, idCol, contentCol))
+                                 maxBucket: Int = 256): MinHashDiag = {
+    val members = exactMembers(docs, idCol, contentCol)
     val prep = minHashPrep(repDocs(docs, members, idCol, contentCol), n, bands * rowsPerBand)
     val banded = minHashBanded(prep, bands, rowsPerBand)
     // skinny banding rows → bucket-content collection + in-set generator
@@ -1068,7 +1073,7 @@ object Dedup {
                                   threshold: Double, dfOrdered: Boolean,
                                   maxBucket: Int,
                                   orientedOnly: Boolean): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0, "threshold in (0, 1]")
+    requireThreshold(threshold)
     require(maxBucket >= 1, "maxBucket >= 1")
     val withH = docs.select(
         col(idCol).as("id"),
@@ -1217,7 +1222,13 @@ object Dedup {
     * `maxIter` rounds don't reach the fixpoint. Strictly cluster-minimal,
     * unlike the greedy `dropNearDups`.
     */
-  def dupClusters(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
+  def dupClusters(pairs: DataFrame, maxIter: Int = 50): DataFrame =
+    starRounds(pairs, maxIter)._1
+
+  /** [[dupClusters]] plus the number of non-root ids in its output — the
+    * final round's edge count, already known from the convergence digest.
+    */
+  private def starRounds(pairs: DataFrame, maxIter: Int): (DataFrame, Long) = {
     // Lineage MUST be truncated each round, not merely persisted: a cached
     // frame still carries its full logical plan, and an iterative
     // window+distinct round multiplies plan size ~8× per iteration —
@@ -1305,8 +1316,180 @@ object Dedup {
     // at the fixpoint every component is a star rooted at its min id; the
     // returned frame reads the final round's checkpoint — no iterative
     // lineage beneath it
-    edges.select(col("l").as("id"), col("s").as("cluster"))
-      .unionByName(edges.select(col("s").as("id"), col("s").as("cluster")).distinct())
+    (edges.select(col("l").as("id"), col("s").as("cluster"))
+      .unionByName(edges.select(col("s").as("id"), col("s").as("cluster")).distinct()),
+      edgesDigest._1)
+  }
+
+  /** The distributed cluster route shared by [[corpusClusters]] and the
+    * over-bound arm of [[bandedClusters]]: exact pairs (rep, member) ∪
+    * verified pairs of the representatives' LSH buckets (`repBanded`:
+    * (id, band, bh) rows of representatives only; `payload`: (id, shh)) →
+    * star rounds. Expanding the representative pairs over their exact
+    * groups is skipped: every member is already joined to its rep, so the
+    * expansion cannot change a component.
+    */
+  private def starClusters(members: DataFrame, repBanded: DataFrame,
+                           payload: DataFrame, threshold: Double,
+                           maxBucket: Int): (DataFrame, Long) = {
+    val exact = members.filter(col("id") =!= col("rep"))
+      .select(col("rep").as("id_a"), col("id").as("id_b"))
+    val near = jaccardSetStages(repBanded, Seq("band", "bh"), payload,
+      threshold, maxBucket).pairs.select(col("id_a"), col("id_b"))
+    starRounds(exact.unionByName(near), maxIter = 50)
+  }
+
+  // -------------------------------------------------------------------------
+  // Corpus clusters from stored bands, components on the driver
+  // -------------------------------------------------------------------------
+
+  /** Largest collect [[bandedClusters]] takes to the driver: per row of a
+    * multi-member bucket its id bytes + 12, per member doc its id bytes,
+    * its 64-char content hash and 8 bytes per shingle. Above it the
+    * clusters stay distributed. A fixed bound, as the IVF driver-training
+    * gate ([[Ivf.driverTrainOk]]) bounds its sample.
+    */
+  private[graft] val DriverClusterMaxBytes: Long = 64L << 20
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** [[corpusClusters]] at shingle size `n` from rows that are ALREADY
+    * banded — `banded` is (id, band, bh), the stored dedup index or
+    * [[bandedSignatureRows]] of `docs` (id, content) — so the corpus is not
+    * re-shingled or re-banded. Same semantics: exact collapse to the min
+    * id per content hash, buckets over representatives only, buckets over
+    * `maxBucket` degrade to star edges, cluster = min reachable id in
+    * Spark's string order. Band rows whose id is not in `docs` (crash
+    * residue) are dropped.
+    *
+    * Left: when the rows of the multi-member buckets and their members'
+    * hashes and shingle sets fit `maxDriverBytes` (see
+    * [[DriverClusterMaxBytes]]), they are collected, verified with
+    * [[graft.functions.SortedJaccard]] and unioned on the driver, giving
+    * id → cluster for every clustered id. Right: otherwise the
+    * [[starClusters]] frame (id, cluster) and its number of non-root ids;
+    * that fallback logs the measured bytes and the bound at INFO.
+    */
+  private[graft] def bandedClusters(docs: DataFrame, banded: DataFrame, n: Int,
+                                    threshold: Double, maxBucket: Int = 256,
+                                    maxDriverBytes: Long = DriverClusterMaxBytes):
+      Either[Map[String, String], (DataFrame, Long)] = {
+    requireThreshold(threshold)
+    require(maxBucket >= 1, "maxBucket >= 1")
+    // rows of the buckets holding 2+ ids. Exact copies share every bucket,
+    // so each doc with a copy is among them: the exact collapse needs no
+    // corpus-wide hash shuffle, only the members' hashes
+    val cand = banded.select(col("id"), col("band"), col("bh"))
+      .withColumn("__sz", count(lit(1)).over(Window.partitionBy(col("band"), col("bh"))))
+      .filter(col("__sz") > 1)
+    val payload = docs.join(cand.select(col("id")), Seq("id"), "left_semi")
+      .select(col("id"), sha2(col("content"), 256).as("h"),
+        shingleSet(col("content"), n).as("shh"))
+    // ONE collectable frame: bucket rows (kind 0) and member payloads (kind 1)
+    val rows = cand.select(lit(0).as("kind"), col("id"), col("band"), col("bh"),
+        lit(null).cast("string").as("h"), lit(null).cast("array<bigint>").as("shh"),
+        (octet_length(col("id")) + 12L).as("bytes"))
+      .unionByName(payload.select(lit(1).as("kind"), col("id"),
+        lit(null).cast("int").as("band"), lit(null).cast("long").as("bh"), col("h"),
+        col("shh"), (octet_length(col("id")) + 64L + size(col("shh")) * 8L).as("bytes")))
+      .persist()
+    try {
+      val r = rows.agg(sum(col("bytes"))).head()
+      val bytes = if (r.isNullAt(0)) 0L else r.getLong(0)
+      if (bytes <= maxDriverBytes) Left(driverClusters(rows.collect(), threshold, maxBucket))
+      else {
+        log.info(s"dedup clusters stay distributed: $bytes candidate bytes " +
+          s"exceed the driver bound of $maxDriverBytes")
+        val exact = exactMembers(docs, "id", "content")
+        val repBanded = banded.select(col("id"), col("band"), col("bh"))
+          .join(exact.filter(col("id") === col("rep")).select(col("id")), Seq("id"), "left_semi")
+        Right(starClusters(exact, repBanded,
+          docs.select(col("id"), shingleSet(col("content"), n).as("shh")),
+          threshold, maxBucket))
+      }
+    } finally rows.unpersist()
+  }
+
+  /** The driver arm of [[bandedClusters]] over its collected rows. A pair
+    * already in one component is not verified: the edge could not change
+    * the components.
+    */
+  private def driverClusters(rows: Array[org.apache.spark.sql.Row], threshold: Double,
+                             maxBucket: Int): Map[String, String] = {
+    val buckets = mutable.HashMap.empty[(Int, Long), mutable.ArrayBuffer[String]]
+    val hashes = mutable.HashMap.empty[String, Option[String]]
+    val sets = mutable.HashMap.empty[String, Array[Long]]
+    rows.foreach { r =>
+      val id = r.getString(1)
+      if (r.getInt(0) == 0)
+        buckets.getOrElseUpdate((r.getInt(2), r.getLong(3)), mutable.ArrayBuffer.empty[String]) += id
+      else {
+        hashes(id) = Option(r.getString(4)) // null content: one group, as in exactMembers
+        if (!r.isNullAt(5)) sets(id) = r.getSeq[Long](5).toArray
+      }
+    }
+    val uf = new UnionFind
+    // exact collapse: each content group joins its min id, the representative
+    val repOf = hashes.groupBy(_._2).valuesIterator.flatMap { g =>
+      val rep = g.keys.min(SparkStringOrder)
+      g.keys.map { id => uf.union(rep, id); id -> rep }
+    }.toMap
+    def verify(a: String, b: String): Unit =
+      if (uf.find(a) != uf.find(b)) (sets.get(a), sets.get(b)) match {
+        case (Some(x), Some(y)) if SortedJaccard.atLeast(x, y, threshold) >= 0.0 =>
+          uf.union(a, b)
+        case _ =>
+      }
+    // buckets over representatives (ids absent from docs have no rep);
+    // identical member sets — a tight cluster colliding in many bands —
+    // are verified once
+    buckets.valuesIterator
+      .map(_.flatMap(repOf.get).distinct.sorted(SparkStringOrder).toVector)
+      .filter(_.size > 1).toSet
+      .foreach { (ms: Vector[String]) =>
+        if (ms.size <= maxBucket)
+          for (i <- ms.indices; j <- i + 1 until ms.size) verify(ms(i), ms(j))
+        else ms.tail.foreach(verify(ms.head, _)) // star edges from the min id
+      }
+    uf.clusters
+  }
+
+  /** Spark's string order (unsigned UTF-8 bytes), so driver-side min ids
+    * equal `min`/`sort_array` over the id column.
+    */
+  private[graft] val SparkStringOrder: Ordering[String] = new Ordering[String] {
+    def compare(a: String, b: String): Int =
+      org.apache.spark.unsafe.types.UTF8String.fromString(a)
+        .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
+  }
+
+  /** Driver-side union-find whose roots are the minimum id of each
+    * component ([[SparkStringOrder]]) — [[dupClusters]]' contract: only ids
+    * that took part in a union (with another id) appear in [[clusters]].
+    */
+  private[graft] final class UnionFind {
+    private val parent = mutable.HashMap.empty[String, String]
+
+    def find(x: String): String = {
+      var root = x
+      var up = parent.getOrElse(root, root)
+      while (up != root) { root = up; up = parent.getOrElse(root, root) }
+      var y = x // path compression
+      while (y != root) { val next = parent(y); parent(y) = root; y = next }
+      root
+    }
+
+    def union(a: String, b: String): Unit = if (a != b) {
+      val (ra, rb) = (find(a), find(b))
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
+      if (ra != rb) {
+        if (SparkStringOrder.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb
+      }
+    }
+
+    /** id → component root for every id that took part in a union. */
+    def clusters: Map[String, String] = parent.keys.toSeq.map(k => k -> find(k)).toMap
   }
 
   /** Duplicate-cluster size histogram — the dedup AUDIT report read before

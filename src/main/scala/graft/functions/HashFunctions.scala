@@ -364,6 +364,7 @@ case class JaccardSimilarity(left: Expression, right: Expression)
   * representation the in-bucket dedup verification ships through its shuffle.
   * 0.0 when both sides are empty (same contract as JaccardSimilarity; the
   * value is identical to string-set Jaccard short of a 64-bit hash collision).
+  * The arithmetic is [[SortedJaccard.atLeast]] at threshold 0.
   */
 case class SortedLongJaccard(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression with CodegenFallback {
@@ -371,27 +372,53 @@ case class SortedLongJaccard(left: Expression, right: Expression)
   override def dataType: DataType = org.apache.spark.sql.types.DoubleType
   override def prettyName: String = "sorted_long_jaccard"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    val ys = b.asInstanceOf[ArrayData]
-    val nx = xs.numElements()
-    val ny = ys.numElements()
-    if (nx == 0 && ny == 0) return 0.0
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SortedJaccard.atLeast(a.asInstanceOf[ArrayData].toLongArray(),
+      b.asInstanceOf[ArrayData].toLongArray(), 0.0)
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+/** The one Jaccard kernel over sorted distinct hashed shingle sets, shared
+  * by [[SortedLongJaccard]], [[BucketJaccardPairs]] and the driver-side
+  * dedup verify ([[graft.ext.Dedup]]), so every route qualifies a pair by
+  * the same arithmetic.
+  */
+object SortedJaccard {
+  /** Exact Jaccard of `a` and `b` if it is ≥ `threshold`, −1.0 otherwise;
+    * early-exits once even matching every remaining element cannot reach
+    * the smallest qualifying intersection. Two empty sets score 0.0.
+    */
+  def atLeast(a: Array[Long], b: Array[Long], threshold: Double): Double = {
+    val na = a.length
+    val nb = b.length
+    if (na == 0 && nb == 0) return if (0.0 >= threshold) 0.0 else -1.0
+    // smallest integer intersection size that qualifies, pinned with the
+    // same double division the final value uses (decision parity with
+    // jaccard >= threshold)
+    var minInter = math.ceil(threshold * (na + nb) / (1.0 + threshold)).toLong
+    while (minInter > 0 &&
+      (minInter - 1).toDouble / (na + nb - (minInter - 1)).toDouble >= threshold)
+      minInter -= 1
+    while (minInter <= math.min(na, nb) &&
+      minInter.toDouble / (na + nb - minInter).toDouble < threshold)
+      minInter += 1
+    if (minInter > math.min(na, nb)) return -1.0
     var i = 0
     var j = 0
-    var inter = 0
-    while (i < nx && j < ny) {
-      val x = xs.getLong(i)
-      val y = ys.getLong(j)
+    var inter = 0L
+    while (i < na && j < nb) {
+      if (inter + math.min(na - i, nb - j) < minInter) return -1.0
+      val x = a(i)
+      val y = b(j)
       if (x == y) { inter += 1; i += 1; j += 1 }
       else if (x < y) i += 1
       else j += 1
     }
-    inter.toDouble / (nx + ny - inter).toDouble
+    if (inter < minInter) -1.0
+    else inter.toDouble / (na + nb - inter).toDouble
   }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
 }
 
 /** WHOLE-BUCKET near-duplicate verification as a generator: the input is one
@@ -441,7 +468,7 @@ case class BucketJaccardPairs(child: Expression, threshold: Double)
     // one task's heap; only the O(m) member arrays above are resident.
     Iterator.range(0, m).flatMap { i =>
       Iterator.range(i + 1, m).flatMap { j =>
-        val jac = jaccardIfAtLeast(sets(i), sets(j))
+        val jac = SortedJaccard.atLeast(sets(i), sets(j), threshold)
         if (jac >= 0.0)
           // ids are pre-sorted ascending by the caller (sort_array), so
           // (i, j) is already (a < b); don't re-compare per pair
@@ -450,39 +477,6 @@ case class BucketJaccardPairs(child: Expression, threshold: Double)
         else Iterator.empty
       }
     }
-  }
-
-  /** Exact Jaccard if ≥ threshold, −1.0 otherwise; early-exits when even
-    * matching every remaining element cannot reach `minInter`.
-    */
-  private def jaccardIfAtLeast(a: Array[Long], b: Array[Long]): Double = {
-    val na = a.length
-    val nb = b.length
-    if (na == 0 && nb == 0) return if (0.0 >= threshold) 0.0 else -1.0
-    // smallest integer intersection size that qualifies, pinned with the
-    // same double division the final value uses (decision parity with
-    // SortedLongJaccard >= threshold)
-    var minInter = math.ceil(threshold * (na + nb) / (1.0 + threshold)).toLong
-    while (minInter > 0 &&
-      (minInter - 1).toDouble / (na + nb - (minInter - 1)).toDouble >= threshold)
-      minInter -= 1
-    while (minInter <= math.min(na, nb) &&
-      minInter.toDouble / (na + nb - minInter).toDouble < threshold)
-      minInter += 1
-    if (minInter > math.min(na, nb)) return -1.0
-    var i = 0
-    var j = 0
-    var inter = 0L
-    while (i < na && j < nb) {
-      if (inter + math.min(na - i, nb - j) < minInter) return -1.0
-      val x = a(i)
-      val y = b(j)
-      if (x == y) { inter += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    if (inter < minInter) -1.0
-    else inter.toDouble / (na + nb - inter).toDouble
   }
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)

@@ -2,6 +2,7 @@ package graft
 
 import graft.api.{Collection, Embedder}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Ports the reference's behavioral test matrix (tests/sifts/test_sqlite.py,
   * FIXTURES.md §1) against the Spark-native Collection.
@@ -1118,24 +1119,142 @@ class CollectionSpec extends AnyFunSuite {
     assert(e.getMessage.contains("no FTS-capable"))
   }
 
-  test("dedup: in-place removal, index rebuild, idempotence") {
+  /** Six docs: 2 is an exact copy of 1, 3 a near copy of 1 (one token
+    * appended: 3-shingle Jaccard 10/11), 6 an exact copy of 5.
+    */
+  private val dupFixture = {
+    val base = (1 to 12).map(i => s"w$i").mkString(" ")
+    Seq("1" -> base, "2" -> base, "3" -> s"$base tail",
+      "4" -> "completely different text about spark plans here",
+      "5" -> "unique little document", "6" -> "unique little document")
+  }
+
+  test("dedup: in-place removal via delete, every index consistent, idempotence") {
     import spark.implicits._
-    val c = coll(freshRoot(), "cdup")
-    c.addDf(Seq(
-      ("1", "the quick brown fox jumps over the lazy dog"),
-      ("2", "the quick brown fox jumps over the lazy dog"),   // exact dup of 1
-      ("3", "completely different text about spark plans here"),
-      ("4", "unique little document")).toDF("id", "content"))
-    val removed = c.dedup()
-    assert(removed === 1L)
-    assert(c.count() === 3L)
-    assert(c.docs().select("id").as[String].collect().toSet === Set("1", "3", "4"))
-    // the index was rebuilt from survivors: FTS finds the keeper, not the loser
-    assert(c.query("quick fox").results.map(_.id) === Seq("1"))
-    // stats follow: indexStats n_docs reflects the removal
-    assert(c.indexStats(topK = 1).head().getLong(3) === 3L)
-    // idempotent: a second pass removes nothing
-    assert(c.dedup() === 0L)
+    import graft.index.Stores
+    def build(dedupIndex: Option[Int]): (String, Collection) = {
+      val root = freshRoot()
+      val c = coll(root, "cdup", embedder = Some(OpenDictEmbedder))
+      c.add(dupFixture.map(_._2), ids = Some(dupFixture.map(_._1)))
+      c.createImpactIndex()
+      c.createVectorIndex(numTables = 8, numPlanes = 2, dim = 3)
+      dedupIndex.foreach(n => c.createDedupIndex(n = n))
+      (root, c)
+    }
+    def ids(df: org.apache.spark.sql.DataFrame) = df.select("id").as[String].collect().toSet
+    val removedIds = Set("2", "3", "6")
+    val survivors = Set("1", "4", "5")
+    for (dedupIndex <- Seq(None, Some(3), Some(5))) {
+      val (root, c) = build(dedupIndex)
+      val embedded = c.docs().select("id", "embedding").as[(String, Seq[Float])].collect().toMap
+      assert(c.dedup() === 3L, s"dedupIndex $dedupIndex")
+      assert(ids(c.docs()) === survivors, s"dedupIndex $dedupIndex")
+      // every index holds exactly the surviving ids
+      def store(dir: String => String, schema: org.apache.spark.sql.types.StructType) =
+        ids(Stores.readPartition(spark, dir(root), "cdup", schema))
+      assert(store(Stores.postingsDir, Stores.postingsSchema) === survivors)
+      assert(store(Stores.doclenDir, Stores.doclenSchema) === survivors)
+      assert(store(Stores.impactDir, Stores.impactSchema) === survivors)
+      assert(ids(c.vectorIndex().get.buckets) === survivors)
+      if (dedupIndex.isDefined) {
+        assert(store(Stores.minhashDir, Stores.minhashSchema) === survivors)
+        assert(c.dedupIndex().map(_._1) === dedupIndex)
+        val near = ids(c.nearDuplicates(dupFixture.map { case (id, t) => id -> t }, 0.8))
+        assert(near.nonEmpty && near.subsetOf(survivors), near)
+      }
+      // no read path returns a removed id
+      assert(c.query("w1 w2").results.map(_.id) === Seq("1"))
+      val top = ids(c.searchTopK("w1", 10)) ++ ids(c.searchTopK("unique", 10))
+      assert(top === Set("1", "5"))
+      val vec = ids(c.vectorTopK(removedIds.toSeq.map(id => id -> embedded(id)), 10))
+      assert(vec.nonEmpty && vec.subsetOf(survivors), vec)
+      assert(c.indexStats(topK = 1).head().getLong(3) === 3L)
+      // idempotent: a second pass removes nothing
+      assert(c.dedup() === 0L)
+      assert(ids(c.docs()) === survivors)
+    }
+  }
+
+  test("dedup: a non-default dedup index is not read; the default one is") {
+    import spark.implicits._
+    import graft.index.Stores
+    // rewrites the stored bands as a hash of the whole content: only exact
+    // copies still share buckets, so a dedup that reads them finds no near
+    // copy
+    def scatterBands(root: String, c: Collection): Unit = {
+      val dir = Stores.minhashDir(root)
+      val scattered = Stores.readPartition(spark, dir, "cdup", Stores.minhashSchema)
+        .join(c.docs().select("id", "content"), "id")
+        .withColumn("bh", org.apache.spark.sql.functions.xxhash64($"content", $"band"))
+        .drop("content")
+      Stores.overwritePartition(spark, dir, "cdup", scattered, sortBy = Seq("band", "bh"))
+    }
+    def survivors(n: Int): Set[String] = {
+      val root = freshRoot()
+      val c = coll(root, "cdup")
+      c.add(dupFixture.map(_._2), ids = Some(dupFixture.map(_._1)))
+      c.createDedupIndex(n = n)
+      scatterBands(root, c)
+      c.dedup()
+      c.docs().select("id").as[String].collect().toSet
+    }
+    assert(survivors(5) === Set("1", "4", "5")) // bands of 5-shingles ignored
+    assert(survivors(3) === Set("1", "3", "4", "5")) // stored bands read
+  }
+
+  test("dedup stays inside its collection: a sibling sharing ids is byte-for-byte untouched") {
+    import spark.implicits._
+    def snapshot(root: String, coll: String): Map[String, Seq[Byte]] = {
+      val base = java.nio.file.Paths.get(root)
+      val s = java.nio.file.Files.walk(base)
+      try s.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => base.relativize(p).toString)
+        .filter(p => p.contains(s"collection=$coll/") || p.endsWith(s"manifest/$coll.json"))
+        .map(p => p -> java.nio.file.Files.readAllBytes(base.resolve(p)).toSeq).toMap
+      finally s.close()
+    }
+    for (deltaPath <- Seq(false, true)) {
+      if (deltaPath) spark.conf.set("spark.graft.store.directUpsertMaxBytes", "0")
+      try {
+        val root = freshRoot()
+        val main = coll(root, "main")
+        val other = coll(root, "other")
+        for (c <- Seq(main, other)) {
+          c.addDf(dupFixture.toDF("id", "content"))
+          c.createImpactIndex()
+          c.createDedupIndex()
+        }
+        val before = snapshot(root, "other")
+        assert(before.keys.exists(_.startsWith("docs/")) &&
+          before.keys.exists(_.startsWith("minhash/")), before.keys)
+        assert(main.dedup() === 3L)
+        assert(main.docs().select("id").as[String].collect().toSet === Set("1", "4", "5"))
+        val after = snapshot(root, "other")
+        assert(after.keySet === before.keySet, s"deltaPath=$deltaPath")
+        before.foreach { case (p, bytes) => assert(after(p) == bytes, s"$p changed, deltaPath=$deltaPath") }
+        assert(other.count() === 6L)
+      } finally spark.conf.unset("spark.graft.store.directUpsertMaxBytes")
+    }
+  }
+
+  test("dedup: the distributed cluster route removes the same docs") {
+    import spark.implicits._
+    def run(maxDriverBytes: Long): (Long, Set[String]) = {
+      val c = coll(freshRoot(), "cdup")
+      c.add(dupFixture.map(_._2), ids = Some(dupFixture.map(_._1)))
+      c.createDedupIndex()
+      (c.dedupBounded(0.8, maxDriverBytes), c.docs().select("id").as[String].collect().toSet)
+    }
+    assert(run(0L) === (3L, Set("1", "4", "5")))
+    assert(run(graft.ext.Dedup.DriverClusterMaxBytes) === (3L, Set("1", "4", "5")))
+  }
+
+  test("dedup: a threshold outside (0, 1] fails fast") {
+    val c = coll()
+    c.add(dupFixture.map(_._2), ids = Some(dupFixture.map(_._1)))
+    for (t <- Seq(1.5, Double.NaN, -1.0, 0.0))
+      intercept[IllegalArgumentException](c.dedup(t))
+    assert(c.count() === 6L)
   }
 
   test("diffSnapshots + Collection.list: era classification and store catalog") {
