@@ -1705,7 +1705,7 @@ object EntryQueries {
         .toDF("metric", "ok")
     }, Some("SELECT 'stream_equals_batch' AS metric, true AS ok")),
 
-    // X122: impact-ordered postings sidecar — certified-exact ranked top-k
+    // X122: certified impact top-k over postings — certified-exact ranked top-k
     // serving (Collection.searchTopK / exec.ImpactTopK). The synthetic corpus
     // is tf-flat (max tf 9), so high-tf docs are PLANTED deterministically
     // (repeat-'customer' bodies keyed off doc_id — DuckDB replays them with
@@ -1718,7 +1718,7 @@ object EntryQueries {
     //   bound0 — fully-stored term, bound == 0;
     //   prefix — wildcard query MUST take the full path (asserted), values
     //            replayed with q4b's prefix-leaf arithmetic;
-    //   upsert — after a pure-insert batch the O(batch)-maintained sidecar
+    //   upsert — after a pure-insert batch the O(batch)-maintained meta
     //            must still serve, with the UPDATED exact df, and the new
     //            docs must enter the top-k.
     // WHICH-PATH is asserted in-entry (certified serve vs fallback), so a
@@ -1749,7 +1749,7 @@ object EntryQueries {
       }
       def served(label: String, q: String, k: Int): DataFrame =
         freeze(c.impactCertifiedTopK(q, k, 0).getOrElse(throw new IllegalStateException(
-          s"x122: '$q' must serve from the impact sidecar")), label)
+          s"x122: '$q' must serve from the impact index")), label)
       val pre = served("single", "customer", 10)
         .unionByName(served("and", "needle customer", 25))
         .unionByName(served("bound0", "needle", 5))

@@ -56,8 +56,18 @@ final class Collection private (
   private val pqBookDir = Stores.pqBookDir(root)
   private val ivfPqDir = Stores.ivfPqDir(root)
   private val minhashDir = Stores.minhashDir(root)
-  private val impactDir = Stores.impactDir(root)
   private val impactMetaDir = Stores.impactMetaDir(root)
+
+  /** Every store this collection keeps a partition in — what
+    * [[compact]]/[[maintain]] sweep and [[deleteAll]] drops. */
+  private val storeDirs = Seq(docsDir, postingsDir, statsDir, annDir,
+    doclenDir, ivfDir, ivfCentDir, pqDir, pqBookDir, ivfPqDir, minhashDir,
+    impactMetaDir)
+
+  /** Postings sort order within each file of a full write: by term, then
+    * tf, so a certified top-k's `term = t AND tf > bound` read skips the
+    * hot term's low-tf row groups. */
+  private val postingsOrder = Seq("term", "tf")
 
   /** This collection's documents (partition-pruned read). */
   def docs(): DataFrame = Stores.readPartition(spark, docsDir, name, Stores.docsSchema)
@@ -563,7 +573,7 @@ final class Collection private (
     Stores.compactPartition(spark, docsDir, name, Stores.docsSchema,
       sortBy = Seq("id"), rangeBy = Seq("id"))
     Stores.compactPartition(spark, postingsDir, name, Stores.postingsSchema,
-      sortBy = Seq("term"), rangeBy = Seq("term"))
+      sortBy = postingsOrder, rangeBy = Seq("term"))
     Stores.compactPartition(spark, annDir, name, Stores.annSchema,
       sortBy = Seq("table", "bucket"))
     Stores.compactPartition(spark, doclenDir, name, Stores.doclenSchema)
@@ -614,21 +624,13 @@ final class Collection private (
       sortBy = Seq("cluster"))
     Stores.compactPartition(spark, minhashDir, name, Stores.minhashSchema,
       sortBy = Seq("band", "bh"))
-    // impact sidecar: re-derive rows + meta from the just-folded postings —
-    // re-truncates the delta-appended rows back to top-cap per term and
-    // heals a dropped/stale meta (the update/delete invalidation path). A
+    // impact meta: re-derive exact df, bounds and watermark from the
+    // just-folded postings — heals a stale-df or behind-watermark meta. A
     // collection emptied of postings drops the index, like the IVF branch.
-    impactParams().foreach { cap =>
-      if (postings().limit(1).isEmpty) {
-        Stores.dropPartition(spark, impactDir, name)
-        Stores.dropPartition(spark, impactMetaDir, name)
-      } else rebuildImpact(cap, postings())
-    }
+    impactParams().foreach(rebuildImpact(_, postings()))
     // sweep crash residue while we're off the ingest path anyway: orphaned
     // .tmp-* always, .old-* (crash-recovery copies) past their grace window
-    Seq(docsDir, postingsDir, statsDir, annDir, doclenDir, ivfDir, ivfCentDir,
-        pqDir, pqBookDir, ivfPqDir, minhashDir, impactDir, impactMetaDir)
-      .foreach(Stores.sweep(spark, _))
+    storeDirs.foreach(Stores.sweep(spark, _))
   }
 
   /** One-call operational hygiene for a long-lived store — the explicit
@@ -649,9 +651,7 @@ final class Collection private (
     // stats refresh even when compact() had nothing to fold: the row is
     // overwrite-only and cheap (one agg over the skinny doclen store)
     if (Stores.partitionExists(spark, doclenDir, name)) writeStatsFrom(doclen())
-    val swept = Seq(docsDir, postingsDir, statsDir, annDir, doclenDir,
-        ivfDir, ivfCentDir, pqDir, pqBookDir, ivfPqDir, minhashDir,
-        impactDir, impactMetaDir)
+    val swept = storeDirs
       .map(Stores.sweep(spark, _, oldGraceMs = 0L, tmpGraceMs = 0L)).sum
     val s = collStats().head()
     Seq((s.getLong(0), s.getDouble(1),
@@ -676,19 +676,7 @@ final class Collection private (
     * partition drop, no data rewrite.
     */
   def deleteAll(): Unit = {
-    Stores.dropPartition(spark, docsDir, name)
-    Stores.dropPartition(spark, postingsDir, name)
-    Stores.dropPartition(spark, statsDir, name)
-    Stores.dropPartition(spark, annDir, name)
-    Stores.dropPartition(spark, doclenDir, name)
-    Stores.dropPartition(spark, ivfDir, name)
-    Stores.dropPartition(spark, ivfCentDir, name)
-    Stores.dropPartition(spark, pqDir, name)
-    Stores.dropPartition(spark, pqBookDir, name)
-    Stores.dropPartition(spark, ivfPqDir, name)
-    Stores.dropPartition(spark, minhashDir, name)
-    Stores.dropPartition(spark, impactDir, name)
-    Stores.dropPartition(spark, impactMetaDir, name)
+    storeDirs.foreach(Stores.dropPartition(spark, _, name))
     Stores.dropManifest(spark, root, name) // a recreate may change flags
     // Retire the ANN-rewrite registration with the store it points at. The
     // Deferred guard would decline anyway (no ann partition), but a retained
@@ -1201,25 +1189,27 @@ final class Collection private (
   }
 
   // -------------------------------------------------------------------------
-  // Persisted impact-ordered postings: per term, the top-`cap` postings by
-  // tf plus the term's EXACT df — the ranked-FTS early-termination sidecar
-  // (FTS5 gets this pruning from its own internals, core.py:408-414; the
-  // full Bm25 path scores every posting of every query leaf). Serving is
-  // CERTIFIED-exact: the candidate top-k is returned only when its k-th
-  // score provably beats every non-candidate (see graft.exec.ImpactTopK);
-  // anything unprovable falls back to full scoring. Pure-insert batches
-  // maintain df incrementally in O(batch); updates/deletes MIRROR into the
-  // rows store (gone-claimed, O(batch)) and flag the meta's df stale —
-  // serving stays certified-exact through them, re-counting df for just
-  // its query terms from the term-pruned resolved postings, until
-  // compact()/maintain() re-derives the exact meta (crash windows still
-  // read as fallback, never as a wrong serve).
+  // Certified impact top-k over the postings store: per term, the EXACT df
+  // plus a tf bound (the tf at rank `cap`, 0 when the term has at most
+  // `cap` postings) — the ranked-FTS early-termination index (FTS5 gets
+  // this pruning from its own internals, core.py:408-414; the full Bm25
+  // path scores every posting of every query leaf). Serving reads only the
+  // postings with tf above their term's bound and is CERTIFIED-exact: the
+  // candidate top-k is returned only when its k-th score provably beats
+  // every non-candidate (see graft.exec.ImpactTopK); anything unprovable
+  // falls back to full scoring. The bound holds for every postings state
+  // by construction, so only the df half is maintained: pure-insert
+  // batches add per-term df increments in O(batch); updates/deletes flag
+  // the meta's df stale and serving recounts df for just its query terms,
+  // until compact()/maintain() re-derives the exact meta. A watermark
+  // (the postings fingerprint the meta reflects) turns every crash window
+  // into a fallback, never a wrong serve.
   // -------------------------------------------------------------------------
 
-  /** Build (or rebuild) the impact-ordered postings sidecar: per term, the
-    * `cap` highest-tf postings plus exact df. Requires FTS and a non-empty
-    * index (an empty collection has nothing to rank; call after ingest).
-    * `cap` trades sidecar size for certificate strength — it must comfortably
+  /** Build (or rebuild) the impact meta: per term, exact df and the tf
+    * bound at rank `cap`. Requires FTS and a non-empty index (an empty
+    * collection has nothing to rank; call after ingest). `cap` trades
+    * candidate-read size for certificate strength — it must comfortably
     * exceed the k you serve (top-10 serving with cap 128 certifies unless
     * the corpus is pathologically tf-flat).
     */
@@ -1231,19 +1221,20 @@ final class Collection private (
     rebuildImpact(cap, postings(), requireNonEmpty = true)
   }
 
-  /** The stored cap of the impact sidecar, if one was built. */
+  /** The stored cap of the impact index, if one was built. */
   def impactIndex(): Option[Int] = impactParams()
 
   /** Certified-exact ranked top-k search — the serving-path API: documents
     * matching `query` (reference grammar, exact terms only for the fast
     * path), ordered rank DESC / id ASC, rows `offset+1 … offset+k`, shaped
-    * (id, content, metadata, rank) like [[queryFrame]]. With a valid impact
-    * sidecar and a provable certificate the answer touches O(cap × terms)
-    * sidecar rows (single-term queries never read the postings store at
-    * all) plus a k-row docs join; every other case — prefix/wildcard or
-    * mixed-boolean queries, invalidated meta, failed certificate — is the
-    * byte-identical full path [[queryFrame]](query, k, offset). Results
-    * are ALWAYS exact; the sidecar only changes the cost.
+    * (id, content, metadata, rank) like [[queryFrame]]. With a current
+    * impact meta and a provable certificate the answer reads only the
+    * query terms' postings above their tf bounds (about `cap` rows per
+    * term) plus a k-row docs join; every other case — prefix/wildcard or
+    * mixed-boolean queries, a meta behind the postings, failed
+    * certificate — is the byte-identical full path
+    * [[queryFrame]](query, k, offset). Results are ALWAYS exact; the index
+    * only changes the cost.
     */
   def searchTopK(query: String, k: Int, offset: Int = 0): DataFrame = {
     require(k >= 1, "k >= 1")
@@ -1253,19 +1244,20 @@ final class Collection private (
   }
 
   /** The certified arm of [[searchTopK]]: Some(frame) only when the impact
-    * sidecar served (and certified) the answer — exposed for tests and
+    * index served (and certified) the answer — exposed for tests and
     * probes that pin WHICH path ran; callers use [[searchTopK]].
     */
   private[graft] def impactCertifiedTopK(query: String, k: Int,
                                          offset: Int): Option[DataFrame] = {
     if (!useFts) return None
     val (cap, wm, (nDocs, avgDl)) = impactGate()
-    if (cap.isEmpty || !wm.exists(_._1 == postingsSeg())) return None
-    // gone-aware serving: a stale-df watermark means updates/deletes were
-    // mirrored into the rows store — still certified-exact, with df
-    // re-counted per query term from the resolved postings (cached under
-    // the postings fingerprint, so hot terms pay the recount once per
-    // store state)
+    if (cap.isEmpty) return None
+    val postingsFp = Stores.partitionFingerprint(spark, postingsDir, name)
+    if (!wm.exists(_._1 == postingsFp)) return None
+    // a stale-df watermark means updates/deletes landed since the meta was
+    // derived — still certified-exact, with df re-counted per query term
+    // from the resolved postings (cached under the postings fingerprint,
+    // so hot terms pay the recount once per store state)
     val dfStale = wm.exists(_._2 != 0L)
     val folded = if (foldAccents) graft.functions.StringFold.fold(query) else query
     // k + offset in Int can wrap negative (k = Int.MaxValue, offset > 0) —
@@ -1274,11 +1266,9 @@ final class Collection private (
     for {
       ast <- QueryParser.parse(folded)
       (isAnd, terms) <- Bm25.flatExactTerms(ast)
-      dfOverride = if (dfStale) Some(staleDfFor(terms)) else None
-      top <- graft.exec.ImpactTopK.certifiedTopK(
-        Stores.readPartition(spark, impactDir, name, Stores.impactSchema),
-        impactMetaRows(), postings(), nDocs, avgDl, terms, isAnd, k + offset,
-        dfOverride = dfOverride)
+      dfOverride = if (dfStale) Some(staleDfFor(terms, postingsFp)) else None
+      top <- graft.exec.ImpactTopK.certifiedTopK(impactMetaRows(), postings(),
+        nDocs, avgDl, terms, isAnd, k + offset, dfOverride = dfOverride)
     } yield {
       val page = top.drop(offset)
       if (page.isEmpty)
@@ -1305,62 +1295,48 @@ final class Collection private (
     }
   }
 
-  /** Re-derive rows + meta from `from` (the current postings). Rows first,
-    * meta (the serving gate) LAST: any crash window leaves the sidecar
-    * unservable — full-path fallback — never wrong.
+  /** Re-derive the meta from `from` (the current postings, already
+    * written): exact df and bounds plus the cap and watermark rows, in one
+    * partition swap.
     */
   private def rebuildImpact(cap: Int, from: DataFrame,
                             requireNonEmpty: Boolean = false): Unit = {
-    // emptied corpus (e.g. a merge-path delete of every doc): drop both
-    // stores, mirroring compact()'s emptied-collection branch — an empty
-    // rows store would silently lose the cap registration (impactParams()
-    // = None) and orphan two empty store dirs. Checked on the RAW frame:
-    // probing the ranked one would pay its window for a 1-row answer.
-    // requireNonEmpty = createImpactIndex's explicit-build contract (throw,
-    // don't silently drop), sharing this one probe job.
+    // emptied corpus (e.g. a merge-path delete of every doc): drop the
+    // meta, mirroring the IVF branch of compact(). Checked on the RAW
+    // frame: probing the ranked one would pay its window for a 1-row
+    // answer. requireNonEmpty = createImpactIndex's explicit-build
+    // contract (throw, don't silently drop), sharing this one probe job.
     if (from.limit(1).isEmpty) {
       require(!requireNonEmpty,
         s"Collection '$name' has no postings to index; ingest before createImpactIndex().")
-      Stores.dropPartition(spark, impactDir, name)
       Stores.dropPartition(spark, impactMetaDir, name)
       return
     }
-    val r = graft.exec.ImpactTopK.ranked(from, cap).persist()
-    try {
-      // cap-truncated postings rows: the postings store's segment bytes
-      // (freshly written by every caller before this) bound the sidecar —
-      // no optimizer stats probe over the ranked-window plan
-      val (pb, pd) = Stores.segmentBytes(spark, postingsDir, name)
-      Stores.overwritePartition(spark, impactDir, name,
-        graft.exec.ImpactTopK.rowsFromRanked(r, cap),
-        sortBy = Seq("term"), rangeBy = Seq("term"),
-        sizeHintBytes = Some(BigInt(pb) + BigInt(pd)))
-      Stores.overwritePartition(spark, impactMetaDir, name,
-        graft.exec.ImpactTopK.metaFromRanked(from, r, cap)
-          .unionByName(impactWatermarkRow(postingsSeg())),
-        sortBy = Seq("id"))
-    } finally r.unpersist()
+    Stores.overwritePartition(spark, impactMetaDir, name,
+      graft.exec.ImpactTopK.metaFromRanked(from,
+          graft.exec.ImpactTopK.ranked(from, cap), cap)
+        .unionByName(impactWatermarkRow())
+        .unionByName(Seq((graft.exec.ImpactTopK.CapKey, cap.toLong, 0L))
+          .toDF("id", "df", "bound_tf")),
+      sortBy = Seq("id"))
   }
 
   /** The serving gate's (cap, watermark, (n_docs, avg_dl)), cached under a
-    * filesystem fingerprint of both sidecar partitions AND the stats store:
-    * a warm [[searchTopK]] pays three FS listings — zero Spark jobs —
-    * before the real query, instead of a rows-store head(), a watermark
-    * filter+head, and a stats head() per call. Any store rewrite or delta
-    * append changes the fingerprint (part files are job-unique), so
-    * staleness is impossible, including through OTHER Collection handles
-    * on the same root.
+    * filesystem fingerprint of the meta partition AND the stats store: a
+    * warm [[searchTopK]] pays two FS listings — zero Spark jobs — before
+    * the real query, instead of a sentinel filter+collect and a stats
+    * head() per call. Any store rewrite or delta append changes the
+    * fingerprint (part files are job-unique), so staleness is impossible,
+    * including through OTHER Collection handles on the same root.
     */
   private def impactGate(): (Option[Int], Option[(Long, Long)], (Long, Double)) = {
-    val fpRows = Stores.partitionFingerprint(spark, impactDir, name)
     val fpMeta = Stores.partitionFingerprint(spark, impactMetaDir, name)
-    // no sidecar at all (the common case for collections that never built
-    // one, e.g. a federated root's other members): answer from the two
-    // listings alone — no stats job, no cache entry to churn
-    if (fpRows == 0L && fpMeta == 0L) return (None, None, (0L, 0.0))
-    val fp = fpRows ^ java.lang.Long.rotateLeft(fpMeta, 17) ^
-      java.lang.Long.rotateLeft(
-        Stores.partitionFingerprint(spark, statsDir, name), 34)
+    // no index at all (the common case for collections that never built
+    // one, e.g. a federated root's other members): answer from the
+    // listing alone — no stats job, no cache entry to churn
+    if (fpMeta == 0L) return (None, None, (0L, 0.0))
+    val fp = fpMeta ^ java.lang.Long.rotateLeft(
+      Stores.partitionFingerprint(spark, statsDir, name), 17)
     Collection.impactGateCache.getOrElseUpdate((root, name, fp), {
       // bounded size without wholesale wipes: dropping ONE arbitrary entry
       // keeps every other collection's hot gate cached (a full clear() made
@@ -1369,33 +1345,54 @@ final class Collection private (
         Collection.impactGateCache.headOption.foreach(kv =>
           Collection.impactGateCache.remove(kv._1))
       val st = collStats().select($"n_docs", $"avg_dl").head()
-      (impactParams(), impactWatermark(), (st.getLong(0), st.getDouble(1)))
+      val (cap, wm) = impactSentinels()
+      (cap, wm, (st.getLong(0), st.getDouble(1)))
     })
   }
 
-  /** Stored cap (rows-store constant column), None without a sidecar
-    * (fingerprint-memoized, see [[ivfParams]]). */
-  private def impactParams(): Option[Int] =
-    Stores.memoizedMeta(spark, impactDir, name, "impactParams") {
-      if (!Stores.partitionExists(spark, impactDir, name)) None
-      else Stores.readPartition(spark, impactDir, name, Stores.impactSchema)
-        .select($"cap").head(1).headOption.map(_.getInt(0))
+  /** Stored cap, None without an impact index (or with a meta written
+    * before the cap moved into it, which serves nothing until
+    * [[createImpactIndex]] runs again). */
+  private def impactParams(): Option[Int] = impactSentinels()._1
+
+  /** (postings fingerprint the meta claims to reflect, df-staleness flag)
+    * — the flag rides the watermark row's otherwise-unused bound_tf slot:
+    * 0 = the meta's df column is exact (serve straight from it), 1 = some
+    * update/delete landed since the last build/compact, so serving must
+    * recount df for its query terms (see
+    * [[graft.exec.ImpactTopK.certifiedTopK]]'s `dfOverride`).
+    */
+  private def impactWatermark(): Option[(Long, Long)] = impactSentinels()._2
+
+  /** The meta's (cap, watermark) sentinel rows, fingerprint-memoized like
+    * [[ivfParams]]. */
+  private def impactSentinels(): (Option[Int], Option[(Long, Long)]) =
+    Stores.memoizedMeta(spark, impactMetaDir, name, "impactSentinels") {
+      if (!Stores.partitionExists(spark, impactMetaDir, name)) (None, None)
+      else {
+        val rows = impactMetaRows()
+          .filter($"id".isin(graft.exec.ImpactTopK.CapKey,
+            graft.exec.ImpactTopK.WatermarkKey))
+          .select($"id", $"df", $"bound_tf").collect()
+          .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+        (rows.get(graft.exec.ImpactTopK.CapKey).map(_._1.toInt),
+          rows.get(graft.exec.ImpactTopK.WatermarkKey))
+      }
     }
 
   private def impactMetaRows(): DataFrame =
     Stores.readPartition(spark, impactMetaDir, name, Stores.impactMetaSchema)
 
-  /** Exact per-term df in the GONE-AWARE (stale-meta) serving regime:
-    * terms missing from the cache pay ONE term-pruned count over the
-    * resolved postings; every hit is free until the next write changes the
-    * postings fingerprint (recursive listing — delta and gone files
-    * included, so staleness is impossible, like [[Collection.impactGate]]).
-    * Dead terms cache as 0 — they stay dead until the store changes.
+  /** Exact per-term df in the stale-df serving regime: terms missing from
+    * the cache pay ONE term-pruned count over the resolved postings; every
+    * hit is free until the next write changes `postingsFp`, the postings
+    * fingerprint (recursive listing — delta and gone files included, so
+    * staleness is impossible, like [[Collection.impactGate]]). Dead terms
+    * cache as 0 — they stay dead until the store changes.
     */
-  private def staleDfFor(terms: Seq[String]): Map[String, Long] = {
-    val fp = Stores.partitionFingerprint(spark, postingsDir, name)
+  private def staleDfFor(terms: Seq[String], postingsFp: Long): Map[String, Long] = {
     val cached = terms.flatMap(t =>
-      Collection.staleDfCache.get((root, name, fp, t)).map(t -> _)).toMap
+      Collection.staleDfCache.get((root, name, postingsFp, t)).map(t -> _)).toMap
     val missing = terms.filterNot(cached.contains)
     if (missing.isEmpty) return cached
     val counted = postings().filter($"term".isin(missing: _*))
@@ -1407,33 +1404,19 @@ final class Collection private (
       if (Collection.staleDfCache.size > 4096)
         Collection.staleDfCache.headOption.foreach(kv =>
           Collection.staleDfCache.remove(kv._1))
-      Collection.staleDfCache.put((root, name, fp, t), counted.getOrElse(t, 0L))
+      Collection.staleDfCache.put((root, name, postingsFp, t),
+        counted.getOrElse(t, 0L))
     }
     cached ++ missing.map(t => t -> counted.getOrElse(t, 0L))
   }
 
-  /** (postings segment ordinal the meta claims to reflect, df-staleness
-    * flag) — the flag rides the watermark row's otherwise-unused bound_tf
-    * slot: 0 = the meta's df column is exact (serve straight from it),
-    * 1 = some update/delete was mirrored into the rows store since the
-    * last build/compact, so serving must recount df for its query terms
-    * (see [[graft.exec.ImpactTopK.certifiedTopK]]'s `dfStale`).
-    */
-  private def impactWatermark(): Option[(Long, Long)] =
-    Stores.memoizedMeta(spark, impactMetaDir, name, "impactWatermark") {
-      if (!Stores.partitionExists(spark, impactMetaDir, name)) None
-      else impactMetaRows()
-        .filter($"id" === graft.exec.ImpactTopK.WatermarkKey)
-        .select($"df", $"bound_tf").head(1).headOption
-        .map(r => (r.getLong(0), r.getLong(1)))
-    }
-
-  /** The postings store's newest segment ordinal (0 = flat base). */
-  private def postingsSeg(): Long =
-    Stores.deltaOrdinals(spark, postingsDir, name).lastOption.getOrElse(0L)
-
-  private def impactWatermarkRow(seg: Long, staleDf: Boolean = false): DataFrame =
-    Seq((graft.exec.ImpactTopK.WatermarkKey, seg, if (staleDf) 1L else 0L))
+  /** The watermark row for the postings as they are NOW — written after
+    * the postings write it reflects, so a crash between the two leaves
+    * the meta behind (fallback), never ahead. */
+  private def impactWatermarkRow(staleDf: Boolean = false): DataFrame =
+    Seq((graft.exec.ImpactTopK.WatermarkKey,
+        Stores.partitionFingerprint(spark, postingsDir, name),
+        if (staleDf) 1L else 0L))
       .toDF("id", "df", "bound_tf")
 
   /** Approximate top-k neighbors of each query vector via the PERSISTED
@@ -1601,8 +1584,8 @@ final class Collection private (
       "vec" -> hybridVectorArm(qvec, depth, where)), k, depth, weights)
   }
 
-  /** The hybrid FTS arm: a certified impact-sidecar serve of the top-`depth`
-    * when provable (`where` must be empty — the sidecar cannot pre-filter),
+  /** The hybrid FTS arm: a certified impact serve of the top-`depth`
+    * when provable (`where` must be empty — the index cannot pre-filter),
     * full scoring otherwise. Equivalent by construction: both fusers cut
     * every arm to its top-`depth` by (rank DESC, id ASC) before ranking,
     * which is exactly the certified result's contract, with the full path's
@@ -1638,7 +1621,7 @@ final class Collection private (
       val fresh = PostingsIndex.build(source, foldAccents).persist()
       try {
         Stores.overwritePartition(spark, postingsDir, name, fresh,
-          sortBy = Seq("term"), rangeBy = Seq("term"), sizeHintBytes = batchEst)
+          sortBy = postingsOrder, rangeBy = Seq("term"), sizeHintBytes = batchEst)
         writeDoclenFull(doclenOfPostings(source.select($"id"), fresh))
         impactParams().foreach(rebuildImpact(_, fresh))
       } finally fresh.unpersist()
@@ -1681,11 +1664,11 @@ final class Collection private (
         // path)
         val (pb, pd) = Stores.segmentBytes(spark, postingsDir, name)
         Stores.overwritePartition(spark, postingsDir, name, fresh,
-          sortBy = Seq("term"), rangeBy = Seq("term"),
+          sortBy = postingsOrder, rangeBy = Seq("term"),
           sizeHintBytes = batchEst.map(BigInt(pb) + BigInt(pd) + _))
         writeDoclenFull(doclen().join(batchIds, Seq("id"), "left_anti")
           .unionByName(doclenOfPostings(rawIds, freshBatch, hintAgg = smallIds)))
-        // below the direct threshold a full sidecar re-derive is the cheap
+        // below the direct threshold a full meta re-derive is the cheap
         // move (exact df either way, no staleness window)
         impactParams().foreach(rebuildImpact(_, fresh))
       } finally { fresh.unpersist(); freshBatch.unpersist() }
@@ -1761,24 +1744,20 @@ final class Collection private (
     */
   private def refreshIndexesDelta(batch: DataFrame): Unit = {
     val batchIds = batch.select("id")
-    // Impact-sidecar state, probed BEFORE the postings/doclen deltas land.
-    // Three regimes (gone-aware serving):
-    //   EXACT  — watermark matches, df flag fresh, and the batch is a PURE
-    //     INSERT (no batch id pre-exists — the skinny doclen store is the
-    //     cheapest id inventory): O(batch) rows delta + per-term df
-    //     increments; serving stays zero-postings-touch.
-    //   MIRROR — watermark matches but the batch updates existing ids (its
-    //     vanished terms are unknowable in O(batch)) or df already went
-    //     stale earlier: O(batch) rows delta (ALL batch postings, gone
-    //     claiming batch ids — the truncation-bound invariant) + a
+    // Impact-meta state, probed BEFORE the postings/doclen deltas land.
+    // Only df needs maintaining (every bound stays valid, see
+    // graft.exec.ImpactTopK); two regimes while the watermark is current:
+    //   EXACT — df flag fresh and the batch is a PURE INSERT (no batch id
+    //     pre-exists — the skinny doclen store is the cheapest id
+    //     inventory): per-term df increments, O(batch).
+    //   STALE — the batch updates existing ids (its vanished terms are
+    //     unknowable in O(batch)) or df already went stale earlier: a
     //     stale-flagged watermark; serving recounts df per query term.
-    //   DROP   — watermark mismatch marks an earlier crash window; don't
-    //     compound it — drop the meta, full-path fallback until
-    //     compact()/maintain() re-derives.
-    val impactWm: Option[(Long, Long)] =
-      if (impactParams().isEmpty) None
-      else impactWatermark().filter(_._1 == postingsSeg())
-    val impactExact: Boolean = impactWm.exists(_._2 == 0L) &&
+    // A watermark already behind the postings (an earlier crash window)
+    // is left behind: serving falls back until compact() re-derives.
+    val impactWm = impactWatermark()
+      .filter(_._1 == Stores.partitionFingerprint(spark, postingsDir, name))
+    val impactExact = impactWm.exists(_._2 == 0L) &&
       (!Stores.partitionExists(spark, doclenDir, name) ||
         doclen().join(batchIds, Seq("id"), "left_semi").limit(1).isEmpty)
     if (useFts) {
@@ -1789,54 +1768,30 @@ final class Collection private (
         // delta frame's own estimate, or the unevaluated tokenize plan
         // lands single-task
         Stores.appendDelta(spark, postingsDir, name,
-          freshBatch, gone = Some(batchIds), sortBy = Seq("term"))
+          freshBatch, gone = Some(batchIds), sortBy = postingsOrder)
         // O(batch) doclen delta (every batch id carries a row, so the data
         // rows alone claim the replacements), then the stats aggregate scans
         // the SKINNY doclen store — never the postings store, whose
         // resolution at 1M docs cost ~10 s per micro-batch
         appendDoclenDelta(doclenOfPostings(batchIds, freshBatch))
-        impactParams().foreach { cap =>
-          if (impactWm.isEmpty) {
-            if (Stores.partitionExists(spark, impactMetaDir, name))
-              Stores.dropPartition(spark, impactMetaDir, name)
-          } else {
-            // O(batch) sidecar delta for BOTH live regimes: ALL the batch's
-            // postings rows go in (keeping the tf-bound invariant — nothing
-            // new is ever truncated out), ids claimed like the postings
-            // delta, so replaced docs' stale sidecar rows die at read …
-            Stores.appendDelta(spark, impactDir, name,
-              freshBatch.select($"term", $"id", $"tf", $"dl")
-                .withColumn("cap", lit(cap)),
-              gone = Some(batchIds), sortBy = Seq("term"))
-            if (impactExact) {
-              // … then per-term df increments (a pure insert adds exactly
-              // its per-term doc counts; bounds are untouched — additions
-              // live in the sidecar, so the build-time bound still covers
-              // everything outside it) + the advanced watermark, LAST:
-              // a crash before this line leaves the watermark behind the
-              // postings segment, which reads as "fall back", never as
-              // stale idf served silently
-              val adds = freshBatch.groupBy($"term")
-                .agg(org.apache.spark.sql.functions.count(lit(1)).as("__add"))
-                .select($"term".as("id"), $"__add")
-              val old = Stores.readPartition(spark, impactMetaDir, name,
-                Stores.impactMetaSchema)
-              Stores.appendDelta(spark, impactMetaDir, name,
-                adds.join(old, Seq("id"), "left")
-                  .select($"id", (coalesce($"df", lit(0L)) + $"__add").as("df"),
-                    coalesce($"bound_tf", lit(0L)).as("bound_tf"))
-                  .unionByName(impactWatermarkRow(postingsSeg())),
-                sortBy = Seq("id"))
-            } else {
-              // … mirror regime: no df rows (serving recounts its query
-              // terms), just the stale-flagged watermark, LAST — same
-              // crash-window contract as above
-              Stores.appendDelta(spark, impactMetaDir, name,
-                impactWatermarkRow(postingsSeg(), staleDf = true),
-                sortBy = Seq("id"))
-            }
-          }
-        }
+        // the advanced watermark goes in LAST, in the same delta as any df
+        // rows: a crash before it leaves the watermark behind the
+        // postings, which reads as "fall back", never as stale idf served
+        if (impactExact) {
+          // a pure insert adds exactly its per-term doc counts; a term
+          // born here gets bound 0
+          val adds = freshBatch.groupBy($"term")
+            .agg(org.apache.spark.sql.functions.count(lit(1)).as("__add"))
+            .select($"term".as("id"), $"__add")
+          Stores.appendDelta(spark, impactMetaDir, name,
+            adds.join(impactMetaRows(), Seq("id"), "left")
+              .select($"id", (coalesce($"df", lit(0L)) + $"__add").as("df"),
+                coalesce($"bound_tf", lit(0L)).as("bound_tf"))
+              .unionByName(impactWatermarkRow()),
+            sortBy = Seq("id"))
+        } else if (impactWm.nonEmpty)
+          Stores.appendDelta(spark, impactMetaDir, name,
+            impactWatermarkRow(staleDf = true), sortBy = Seq("id"))
       } finally freshBatch.unpersist()
     } else {
       appendDoclenDelta(doclenOfBatch(batch))
@@ -1863,7 +1818,7 @@ final class Collection private (
         // bound the rewrite — no optimizer stats probe
         val (pb, pd) = Stores.segmentBytes(spark, postingsDir, name)
         Stores.overwritePartition(spark, postingsDir, name, fresh,
-          sortBy = Seq("term"), rangeBy = Seq("term"),
+          sortBy = postingsOrder, rangeBy = Seq("term"),
           sizeHintBytes = Some(BigInt(pb) + BigInt(pd)))
         writeDoclenFull(doclen().join(idsDf, Seq("id"), "left_anti"))
         impactParams().foreach(rebuildImpact(_, fresh))
@@ -1898,28 +1853,18 @@ final class Collection private (
     */
   private def removeFromIndexes(idsDf: DataFrame): Unit = {
     if (useFts) {
-      // impact sidecar, gone-aware: a delete's vanished terms are
-      // unknowable in O(batch), so the exact-df meta can't be maintained —
-      // but the rows store CAN stay complete: gone-claim the deleted ids
-      // there too and flag the watermark stale, and serving stays
-      // certified-exact with df re-counted per query term (deletions only
-      // REMOVE postings, so the build-time truncation bound still covers
-      // everything outside the resolved rows store). Watermark eligibility
-      // is captured against the PRE-delete segment; the stale watermark is
-      // written LAST, so any crash window reads as "fall back", never as
-      // a silently-wrong serve. A mismatched watermark (earlier crash)
-      // still drops the meta rather than compound.
-      val mirrorable = Stores.partitionExists(spark, impactMetaDir, name) &&
-        impactWatermark().exists(_._1 == postingsSeg())
+      // impact meta: a delete's vanished terms are unknowable in O(batch),
+      // so df goes stale — if the watermark is current against the
+      // PRE-delete postings, the stale-flagged watermark for the
+      // post-delete postings goes in LAST (a crash before it reads as
+      // "fall back"); a watermark already behind stays behind.
+      val impactCurrent = impactWatermark().exists(_._1 ==
+        Stores.partitionFingerprint(spark, postingsDir, name))
       Stores.appendDelta(spark, postingsDir, name,
         emptyFrame(Stores.postingsSchema), gone = Some(idsDf))
-      if (mirrorable) {
-        Stores.appendDelta(spark, impactDir, name,
-          emptyFrame(Stores.impactSchema), gone = Some(idsDf))
+      if (impactCurrent)
         Stores.appendDelta(spark, impactMetaDir, name,
-          impactWatermarkRow(postingsSeg(), staleDf = true), sortBy = Seq("id"))
-      } else if (Stores.partitionExists(spark, impactMetaDir, name))
-        Stores.dropPartition(spark, impactMetaDir, name)
+          impactWatermarkRow(staleDf = true), sortBy = Seq("id"))
     }
     appendDoclenDelta(emptyFrame(Stores.doclenSchema), gone = Some(idsDf))
     if (Stores.partitionExists(spark, annDir, name))
@@ -2512,7 +2457,7 @@ object Collection {
     * page is collected before recounting (delivery normally takes ms). */
   private val ObservedTotalWait = scala.concurrent.duration.Duration(30, "s")
 
-  /** (root, name, sidecar+stats fingerprint) -> (cap, watermark, stats);
+  /** (root, name, impact meta+stats fingerprint) -> (cap, watermark, stats);
     * see [[Collection.impactGate]]. Keyed by content fingerprint, so no
     * invalidation hooks — a changed store simply misses.
     */
@@ -2521,7 +2466,7 @@ object Collection {
       (Option[Int], Option[(Long, Long)], (Long, Double))]()
 
   /** (root, name, postings fingerprint, term) -> exact resolved df, for
-    * the gone-aware serving regime; see [[Collection!.staleDfFor]]. Keyed
+    * the stale-df serving regime; see [[Collection!.staleDfFor]]. Keyed
     * by content fingerprint like [[impactGateCache]] — no invalidation
     * hooks, a changed store simply misses.
     */
@@ -2578,7 +2523,7 @@ object Collection {
     * A BOUNDED unfiltered query (`limit > 0`, empty `where`) is the
     * federated SERVING shape and scatter-gathers instead: each collection
     * answers through [[Collection.searchTopK]], so members with a valid
-    * impact sidecar serve their arm certified from O(cap) rows (collected
+    * impact index serve their arm certified from O(cap) rows (collected
     * driver-side — that is the point of a top-k serving call), and
     * members without one contribute the same lazy full plan as before
     * (their gate check is two filesystem listings, no Spark job).
@@ -2588,7 +2533,7 @@ object Collection {
     * frames), so Spark jobs run — and failures surface — when
     * `searchAll` (or SQL `graft_search_all`) is CALLED, not when the
     * returned frame is executed. That is deliberate: a top-k serving call
-    * exists to answer now, and deferring the O(cap) sidecar read would
+    * exists to answer now, and deferring the O(cap) candidate read would
     * just re-run it per downstream action. The `limit == 0` / filtered
     * shapes stay fully lazy.
     */
@@ -2599,7 +2544,7 @@ object Collection {
       val c = open(spark, root, n)
       if (!c.useFts) None
       // a bounded, unfiltered federated query is exactly searchTopK's
-      // shape: any collection carrying a valid impact sidecar serves its
+      // shape: any collection carrying a valid impact index serves its
       // arm certified (O(cap) rows), the rest fall back to full scoring —
       // identical results either way (searchTopK's contract)
       else if (limit > 0 && where.isEmpty)

@@ -63,7 +63,7 @@ object Bm25 {
 
   /** Some((isAnd, distinct terms)) iff the query is flat AND every leaf is
     * an exact Term — the shape [[ImpactTopK]] can serve from the impact
-    * sidecar (prefix/wildcard leaves have no per-term df/bound rows).
+    * meta (prefix/wildcard leaves have no per-term df/bound rows).
     */
   private[graft] def flatExactTerms(q: BoolQuery): Option[(Boolean, Seq[String])] =
     flatShape(q).flatMap { case (isAnd, leaves) =>

@@ -4,55 +4,62 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
-/** Impact-ordered postings: build + certified-exact serving for the
-  * ranked-FTS early-termination sidecar (stores
-  * [[graft.index.Stores.impactSchema]] / `impactMetaSchema`).
+/** Certified-exact impact top-k over the postings store: build of the
+  * per-term meta ([[graft.index.Stores.impactMetaSchema]]) and serving.
   *
   * The reference gets top-k-by-rank pruning for free from FTS5's internals
   * (src/sifts/core.py:408-414: `ORDER BY rank LIMIT ?` inside SQLite);
   * [[Bm25.scoredIds]] instead joins and scores the FULL postings list of
   * every query leaf — at 100 TB a high-df term is billions of rows paying
-  * BM25 arithmetic for a top-10 answer. This sidecar keeps, per term, only
-  * the `cap` postings with the highest tf (tf is the monotone part of the
-  * BM25 impact at fixed df) plus each term's EXACT df, so a top-k query
-  * touches O(cap × terms) sidecar rows and certifies its own exactness:
+  * BM25 arithmetic for a top-10 answer. The meta keeps, per term, its EXACT
+  * df and a tf bound `bound_tf` (the tf at rank `cap` by tf, 0 when the
+  * term has at most `cap` postings; tf is the monotone part of the BM25
+  * impact at fixed df). A top-k query reads only the postings with
+  * `tf > bound_tf(term)` — postings are sorted by (term, tf), so that read
+  * skips the hot term's low-tf row groups — and certifies its own
+  * exactness:
   *
-  *   - any resolved posting ABSENT from the sidecar has tf <= bound_tf(term)
-  *     (build truncates by tf; every later upsert appends ALL its postings);
+  *   - every non-candidate posting has tf <= bound_tf(term), by the
+  *     candidate filter itself — for ANY postings state, so nothing but df
+  *     needs maintaining as documents come and go;
   *   - a doc outside the candidate set therefore scores at most
   *     B = Σ_t idf(t) · ub(bound_tf(t)), where ub is the dl→0 limit of the
   *     BM25 tf-part (its maximum over every possible doc length);
   *   - if the k-th best candidate's exact score STRICTLY beats B (or every
-  *     query term is fully stored, B = 0), the candidate top-k IS the true
+  *     query term has bound 0, B = 0), the candidate top-k IS the true
   *     top-k — otherwise the caller falls back to the full scoring path.
   *
-  * Exactness of the served scores: candidates are re-scored with the same
-  * arithmetic as [[Bm25]] (same literal structure, same IEEE op order),
-  * idf from the maintained EXACT df, tf/dl from the sidecar rows (single
-  * term — no postings touch at all) or from a candidates-only semi-join
-  * against the term-pruned postings (multi term — the full lists are read
-  * but never shuffled, scored, or sorted).
+  * This is the bound-then-verify shape of REPOSE (ICDE 2021): a stored
+  * bound, no stored candidate prefix. Exactness of the served scores:
+  * candidates are re-scored with the same arithmetic as [[Bm25]] (same
+  * literal structure, same IEEE op order), idf from exact df, tf/dl from
+  * the candidate postings (single term) or from a candidates-only
+  * semi-join against the term-pruned postings (multi term — the full
+  * lists are read but never shuffled, scored, or sorted).
   */
 object ImpactTopK {
 
-  /** Meta-store key of the watermark row (df = the postings segment ordinal
-    * the meta reflects). Tokens are \p{L}\p{N} runs, so no term collides.
+  /** Meta-store key of the watermark row (df = the postings fingerprint
+    * the meta reflects, bound_tf = the df-staleness flag). Tokens are
+    * \p{L}\p{N} runs, so no term collides.
     */
   val WatermarkKey = "\u0000wm"
 
+  /** Meta-store key of the cap row (df = the cap). */
+  private[graft] val CapKey = "\u0000cap"
+
   /** Top-(cap+1) postings per term with the per-term impact rank (`__rn`,
-    * 1 = highest tf). Persist this when deriving both store frames — the
-    * window work runs once.
+    * 1 = highest tf) — the input of [[metaFromRanked]]'s bound row.
     *
     * Skew-proof in two stages: a LOCAL top-(cap+1) per (term, input
     * partition) first — `rn <= cap+1` over a `(term, pid)` window lowers
     * to WindowGroupLimit map-side heaps, so each map task emits at most
     * cap+1 rows per term and a billion-posting hot term never lands on one
     * sort task (any global top-(cap+1) row is also locally top-(cap+1) —
-    * the prune is lossless for both the cap cut and the rank-cap bound
-    * row). The global per-term window then sorts ≤ (cap+1)·partitions
-    * rows per term. EXACT df cannot come from this pruned frame — see
-    * [[metaFromRanked]], which aggregates it from the raw postings.
+    * the prune is lossless for the rank-cap bound row). The global
+    * per-term window then sorts ≤ (cap+1)·partitions rows per term. EXACT
+    * df cannot come from this pruned frame — see [[metaFromRanked]], which
+    * aggregates it from the raw postings.
     */
   def ranked(postings: DataFrame, cap: Int): DataFrame = {
     val base = postings.select(col("term"), col("id"), col("tf"), col("dl"))
@@ -66,18 +73,12 @@ object ImpactTopK {
     pruned.withColumn("__rn", row_number().over(w))
   }
 
-  /** The impact store rows: top-`cap` postings per term, cap riding along. */
-  def rowsFromRanked(ranked: DataFrame, cap: Int): DataFrame =
-    ranked.filter(col("__rn") <= cap)
-      .select(col("term"), col("id"), col("tf"), col("dl"),
-        lit(cap).as("cap"))
-
-  /** The meta store rows: (id = term, EXACT df, bound_tf). bound_tf is the
-    * tf at rank `cap` when the term overflows the cap (every truncated
-    * posting has tf <= it), 0 when the term is fully stored. df is a plain
-    * skew-free aggregate over the RAW postings (the ranked frame is
-    * top-(cap+1)-pruned and must never be counted); the bound row joins in
-    * from the ranked frame (rank cap exists whenever df >= cap).
+  /** The meta store's term rows: (id = term, EXACT df, bound_tf).
+    * bound_tf is the tf at rank `cap` when the term has more than `cap`
+    * postings, 0 otherwise. df is a plain skew-free aggregate over the RAW
+    * postings (the ranked frame is top-(cap+1)-pruned and must never be
+    * counted); the bound row joins in from the ranked frame (rank cap
+    * exists whenever df >= cap).
     */
   def metaFromRanked(postings: DataFrame, ranked: DataFrame, cap: Int): DataFrame = {
     val dfreq = postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
@@ -99,42 +100,34 @@ object ImpactTopK {
         lit(Bm25.K1) * (lit(1.0 - Bm25.B) + lit(Bm25.B) * col("dl").cast("double") / lit(avgDl)))
 
   /** How many candidate ids the multi-term path will force-broadcast; a
-    * candidate set grown past this (pure-insert deltas append ALL their
-    * postings to the rows store between compactions, so the "prefix" is
-    * only O(cap) when freshly built/compacted) returns None — the caller's
-    * full path is always available and always exact, while a forced
-    * multi-GB broadcast would CRASH the query. ~1M ids ≈ tens of MB.
+    * candidate set grown past this (documents inserted since the last
+    * build/compact with tf above their terms' bounds all join it, so it
+    * is only about `cap` per term when freshly built/compacted) returns
+    * None — the caller's full path is always available and always exact,
+    * while a forced multi-GB broadcast would CRASH the query. ~1M ids ≈
+    * tens of MB.
     */
   val MaxBroadcastCands: Long = 1L << 20
 
   /** Certified-exact top-`n` (id, rank) for a flat all-exact-terms query:
     * Some(rows, already (rank desc, id asc) ordered, <= n of them) when the
-    * sidecar can PROVE the answer equals full scoring, None when it cannot
-    * (caller falls back). `postings` is only forced on the multi-term path
-    * — and, with `dfStale`, on the df recount.
+    * meta's bounds can PROVE the answer equals full scoring over the
+    * resolved `postings`, None when they cannot (caller falls back).
     *
-    * `dfOverride` is the GONE-AWARE serving mode: the rows store has been
-    * kept complete through update/delete deltas (every batch mirrored all
-    * its postings in, every batch/delete gone-claimed its ids), but the
-    * meta's df column counts docs that no longer exist. The CALLER then
-    * supplies exact df for the query terms — re-counted from the
-    * term-pruned resolved postings and cached under the postings
-    * fingerprint ([[graft.api.Collection]]'s staleDfCache), so repeated
-    * hot-term queries pay the recount once per store state. A term absent
-    * from the override has no resolved postings (df 0). Everything else
-    * in the proof survives staleness untouched:
-    *
-    *   - bound_tf stays a valid truncation bound: deltas only ADD complete
-    *     posting sets to the rows store and gone-claims only REMOVE, so a
-    *     resolved posting absent from the resolved rows store belongs to a
-    *     doc untouched since the last build/compact, whose tf was <= the
-    *     build-time bound (and is unchanged since);
-    *   - a term with NO meta row was born after the build — its postings
-    *     are fully mirrored, so its bound_tf is 0 (fully stored);
-    *   - candidates come from the RESOLVED rows store, so tombstoned docs
-    *     never appear and updated docs contribute their CURRENT (tf, dl);
-    *   - nDocs/avgDl are the caller's live collstats (exact through
-    *     deletes — the doclen store is gone-claimed like everything else).
+    * `dfOverride` is the STALE-DF serving mode: updates/deletes have
+    * landed since the meta was derived, so its df column counts docs that
+    * no longer exist (or misses vanished ones). The CALLER then supplies
+    * exact df for the query terms — re-counted from the term-pruned
+    * resolved postings and cached under the postings fingerprint
+    * ([[graft.api.Collection]]'s staleDfCache), so repeated hot-term
+    * queries pay the recount once per store state. A term absent from the
+    * override has no resolved postings (df 0). Everything else in the
+    * proof survives staleness untouched: the candidates are read from the
+    * RESOLVED postings, so tombstoned docs never appear and updated docs
+    * contribute their CURRENT (tf, dl); every bound is a valid threshold
+    * whatever its value (a term with no meta row — born after the build —
+    * gets bound 0, all its postings are candidates); nDocs/avgDl are the
+    * caller's live collstats.
     *
     * Driver-side collects are all bounded: <= terms meta rows, <= n result
     * rows (the API's own result size — the [[graft.api.Collection]]
@@ -147,8 +140,8 @@ object ImpactTopK {
     * [[Bm25.scoreExpr]]'s literal structure, and that test is what keeps
     * the two from drifting.
     */
-  def certifiedTopK(rowsStore: DataFrame, metaStore: DataFrame,
-                    postings: => DataFrame, nDocs: Long, avgDl: Double,
+  def certifiedTopK(metaStore: DataFrame, postings: DataFrame,
+                    nDocs: Long, avgDl: Double,
                     terms: Seq[String], isAnd: Boolean, n: Int,
                     dfOverride: Option[Map[String, Long]] = None)
       : Option[Seq[(String, Double)]] = {
@@ -164,15 +157,13 @@ object ImpactTopK {
       .select(col("id"), col("df"), col("bound_tf")).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     // exact per-term df: the meta's column while it is exact; the caller's
-    // fingerprint-cached recount in gone-aware mode. While the meta is
+    // fingerprint-cached recount in stale-df mode. While the meta is
     // exact, EVERY term with any resolved posting has a meta row (build
     // covers all terms; insert deltas cover batch terms) — a missing term
     // matches nothing: AND can't match, OR drops the leaf. In override
     // mode the supplied inventory plays that role directly.
     val dfOf: Map[String, Long] =
       dfOverride.getOrElse(meta.map { case (t, (d, _)) => t -> d })
-    // bound_tf of a term without a meta row: born after the build, fully
-    // mirrored into the rows store, so nothing of it was ever truncated
     def boundTf(t: String): Long = meta.get(t).map(_._2).getOrElse(0L)
     val live = terms.filter(t => dfOf.getOrElse(t, 0L) > 0L)
     if (isAnd && live.size != terms.size) return Some(Nil)
@@ -186,29 +177,28 @@ object ImpactTopK {
       if (b <= 0L) 0.0
       else (b * (Bm25.K1 + 1.0)) / (b + Bm25.K1 * (1.0 - Bm25.B))
     val bound = live.map(t => idfs(t) * ub(boundTf(t))).sum
+    // the candidate postings of term t: its postings above the bound
+    def above(t: String): Column =
+      col("term") === t && col("tf") > lit(boundTf(t))
 
     // per-(term, doc) contribution rows for the CANDIDATES; `cleanup`
     // releases the multi-term path's persisted candidate distinct once the
     // top rows (collected below, in-function) no longer reference it
     val (contrib, cleanup): (DataFrame, () => Unit) =
       if (live.size == 1)
-        // single term: the sidecar rows ARE the candidates with exact
-        // (tf, dl) — the postings store is never touched
-        (rowsStore.filter(col("term") === live.head)
+        // single term: the candidate postings carry exact (tf, dl)
+        (postings.filter(above(live.head))
           .select(col("id"), col("tf"), col("dl"),
             lit(idfs(live.head)).as("__idf")), () => ())
       else {
-        // multi term: a candidate found in one term's prefix may match the
-        // other terms OUTSIDE their prefixes — exact scores need its full
+        // multi term: a candidate found above one term's bound may match
+        // the other terms BELOW their bounds — exact scores need its full
         // (term, tf, dl) rows, via a candidates-only semi-join against the
-        // term-pruned postings (read, but never shuffled/scored in full)
-        // O(cap × terms) rows when freshly built/compacted, but delta
-        // appends grow it between compactions — gate the forced broadcast
-        // (one skinny count over the term-pruned, range-laid-out sidecar)
-        // and fall back rather than attempt an unbounded broadcast.
-        // PERSISTED across the gate count and the broadcast, so the
-        // rows-store distinct runs once, not twice.
-        val cands = rowsStore.filter(col("term").isin(live: _*))
+        // term-pruned postings (read, but never shuffled/scored in full).
+        // The candidate count is gated before the forced broadcast (see
+        // MaxBroadcastCands); PERSISTED across the gate count and the
+        // broadcast, so the candidate distinct runs once, not twice.
+        val cands = postings.filter(live.map(above).reduce(_ || _))
           .select(col("id")).distinct().persist()
         // the gate count is a Spark job — if IT fails, the persist must
         // not outlive this call (the finally below only guards the
@@ -229,7 +219,7 @@ object ImpactTopK {
     val top = try {
       val scored = contrib.select(col("id"), (col("__idf") * tfPart(avgDl)).as("__s"))
       val perDoc =
-        // one rows-store row per (term, id): a single term's rows already
+        // one postings row per (term, id): a single term's rows already
         // are the per-doc scores — no aggregate, no shuffle
         if (live.size == 1) scored.select(col("id"), col("__s").as("rank"))
         else {
@@ -244,9 +234,9 @@ object ImpactTopK {
     //   COMPLETE — the candidate set provably contains EVERY match, so the
     //   ordered candidates are the answer at any k (covers the common
     //   "k exceeds the hit count" case, which a score bound alone can never
-    //   certify): bound == 0 (all terms fully stored) or, for AND, ANY live
-    //   term fully stored — every AND match appears in that term's complete
-    //   prefix, so it is a candidate and scored exactly;
+    //   certify): bound == 0 (every posting of every term is a candidate)
+    //   or, for AND, ANY live term with bound 0 — every AND match has a
+    //   posting of that term, so it is a candidate and scored exactly;
     //   BOUNDED — the n-th candidate's exact score STRICTLY beats the best
     //   possible non-candidate (a tie could reorder against the full path's
     //   id tiebreak).

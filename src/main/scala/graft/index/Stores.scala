@@ -181,33 +181,19 @@ object Stores {
     StructField("rows_per_band", IntegerType, nullable = false)
   ))
 
-  /** impact: per term, the top-`cap` postings by tf (tf is the BM25-impact
-    * upper bound at fixed df) — the ranked-FTS early-termination sidecar.
-    * `cap` rides along as a constant column (RLE'd to nothing) so the index
-    * is self-describing. Range-clustered + sorted by term so a query's
-    * literal terms prune files, not just row groups. Delta-maintained by id
-    * claims, with every upsert batch appending ALL its postings rows — that
-    * keeps the serving invariant that a resolved posting ABSENT from this
-    * store has tf <= the term's build-time bound.
-    */
-  val impactSchema: StructType = StructType(Seq(
-    StructField("term", StringType, nullable = false),
-    StructField("id", StringType, nullable = false),
-    StructField("tf", LongType, nullable = false),
-    StructField("dl", LongType, nullable = false),
-    StructField("cap", IntegerType, nullable = false)
-  ))
-
-  /** impactmeta: one row per term — EXACT document frequency plus the tf
-    * bound for postings truncated out of the impact store (0 = the term is
-    * fully stored) — and one watermark row (id = [[graft.exec.ImpactTopK
-    * .WatermarkKey]], df = postings segment ordinal) tying the meta to the
-    * postings state it reflects: a mismatch (crash window between the
-    * postings delta and this store's) makes serving fall back to full
-    * scoring instead of silently serving stale idf. Keyed by `id` = the
-    * term, so the segment layout's last-wins-by-id resolution gives
-    * last-wins-per-term meta updates. Updates/deletes DROP this partition
-    * (their vanished terms are unknowable in O(batch)); compact()
+  /** impactmeta: the certified impact top-k index over postings. One row
+    * per term — EXACT document frequency plus `bound_tf`, the tf at rank
+    * `cap` (0 when the term has at most `cap` postings); serving reads only
+    * the postings above it — and two sentinel rows: the cap row
+    * (id = [[graft.exec.ImpactTopK.CapKey]], df = cap) and the watermark
+    * row (id = [[graft.exec.ImpactTopK.WatermarkKey]], df = the postings
+    * [[partitionFingerprint]] the meta reflects, bound_tf = the
+    * df-staleness flag). A watermark behind the postings (a crash window
+    * between a postings write and this store's) makes serving fall back
+    * to full scoring instead of silently serving stale idf. Keyed by
+    * `id` = the term, so the segment layout's last-wins-by-id resolution
+    * gives last-wins-per-term meta updates. Updates/deletes only flag df
+    * stale (their vanished terms are unknowable in O(batch)); compact()
     * re-derives it.
     */
   val impactMetaSchema: StructType = StructType(Seq(
@@ -217,7 +203,6 @@ object Stores {
   ))
 
   def docsDir(root: String) = s"$root/docs"
-  def impactDir(root: String) = s"$root/impact"
   def impactMetaDir(root: String) = s"$root/impactmeta"
   def postingsDir(root: String) = s"$root/postings"
   def collStatsDir(root: String) = s"$root/collstats"

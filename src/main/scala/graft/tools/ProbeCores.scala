@@ -112,10 +112,11 @@ object ProbeCores {
     // postings build — the a1/ingest tokenize kernel
     time("postings_build_2m_sec")(
       noop(graft.index.PostingsIndex.build(docs.select($"id", $"content"))))
-    // impact sidecar ranking over the built postings (x122 build side)
+    // impact meta (ranked bound rows + exact df) over the built postings
+    // (x122 build side)
     time("impact_ranked_2m_sec") {
       val p = graft.index.PostingsIndex.build(docs.select($"id", $"content"))
-      noop(graft.exec.ImpactTopK.rowsFromRanked(
+      noop(graft.exec.ImpactTopK.metaFromRanked(p,
         graft.exec.ImpactTopK.ranked(p, cap = 128), cap = 128))
     }
     // HTML→text extraction (x128/x135 kernel)

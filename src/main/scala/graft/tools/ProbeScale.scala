@@ -979,15 +979,16 @@ object ProbeScale {
         s"PROBE   rows = ${left.join(right, Seq("id")).count()}"))
       writeOut(); return
     }
-    // `r14ops` = ingest + the impact-ordered postings sidecar at corpus size
+    // `r14ops` = ingest + the certified impact top-k index at corpus size
     // (run with copies=400 -> 2M docs). The replicated corpus is tf-flat
     // (max organic tf ~9 — BM25's tf-part saturates, no bounded certificate
     // exists), so 500 high-tf docs are PLANTED for 'customer'; then the
     // serving claim is pinned with numbers: a certified single-term top-10
-    // touches O(cap) sidecar rows + a k-id pruned docs fetch — never the
-    // term's ~1.6M-row postings list — while the full BM25 path pays the
-    // whole list. Also pins both range layouts (postings by term, docs by
-    // id) at corpus scale via scan-emitted row counts.
+    // reads the term's O(cap) postings above its tf bound + a k-id pruned
+    // docs fetch — never its whole ~1.6M-row postings list — while the
+    // full BM25 path pays the whole list. Also pins both range layouts
+    // (postings by term, docs by id) at corpus scale via scan-emitted row
+    // counts.
     if (mode.contains("r14ops")) {
       import graft.index.Stores
       // 16 MB target partitions for the probe's store writes: the template
@@ -1032,18 +1033,24 @@ object ProbeScale {
       require(served.nonEmpty, "2M-doc single-term top-10 must certify")
       require(served.get.select($"id").collect().forall(_.getString(0).startsWith("hv")),
         "planted docs must own the top-10")
-      val candRows = Stores.readPartition(spark, Stores.impactDir(root), "big",
-        Stores.impactSchema).filter($"term" === "customer").count()
-      println(s"PROBE   impact candidates for term = $candRows (cap 1024, df $dfCust)")
-      metrics += ("impact_candidate_rows" -> candRows)
-      require(candRows <= 1024L, "sidecar must hold at most cap rows per term")
+      // the certified read: the term's postings above its stored tf bound
+      val boundTf = Stores.readPartition(spark, Stores.impactMetaDir(root), "big",
+        Stores.impactMetaSchema).filter($"id" === "customer")
+        .select($"bound_tf").as[Long].head()
+      val (candRows, candScanned) =
+        runScanned(post.filter($"term" === "customer" && $"tf" > boundTf))
+      println(s"PROBE   impact candidates for term = $candRows scanned=$candScanned " +
+        s"(cap 1024, bound_tf $boundTf, df $dfCust)")
+      metrics += ("impact_candidate_rows" -> candRows,
+        "impact_candidate_scanned_rows" -> candScanned)
+      require(candRows <= 1024L, "at most cap postings lie above the bound")
       time("impact_serve_10q_sec")(
         (1 to 10).foreach(_ => c.searchTopK("customer", 10).collect()))
       time("full_bm25_topk_10q_sec")(
         (1 to 10).foreach(_ => c.queryFrame("customer", limit = 10).collect()))
 
       // O(batch) maintenance at 2M: a small pure-insert delta must keep the
-      // sidecar servable (updated exact df) without any rebuild
+      // impact index servable (updated exact df) without any rebuild
       val batch2 = spark.range(200).select(
         concat(lit("hw"), $"id".cast("string")).as("id"),
         concat(concat_ws(" ", transform(
@@ -1165,13 +1172,13 @@ object ProbeScale {
       writeOut(); return
     }
     // `r16ops` = ingest + (a) GONE-AWARE certified serving at 2M: delete
-    // and update DELTAS keep the impact sidecar serving (stale-df regime,
+    // and update DELTAS keep the impact index serving (stale-df regime,
     // df re-counted per query term) — measure that serve cost against the
     // exact regime and the full BM25 path; (b) the X125c containment
     // cap-sizing profile at 2M+snippets — the shared-shingle df evidence
     // behind the maxBucket=4096 default; (c) federated scatter-gather
     // serving over a 4-member root (three 100k members on the full path +
-    // the 2M member through its STALE sidecar) with per-member serve
+    // the 2M member through its STALE impact meta) with per-member serve
     // attribution, so the searchAll/vectorSearchAll/hybridAll cost reads
     // off as additive.
     if (mode.contains("r16ops")) {
@@ -1195,7 +1202,7 @@ object ProbeScale {
         time("impact_delete_2_sec")(c.delete(top2))
         val stale = c.impactCertifiedTopK("customer", 10, 0)
         require(stale.nonEmpty,
-          "a delete delta must keep the sidecar serving (gone-aware)")
+          "a delete delta must keep the impact index serving (stale df)")
         require(!stale.get.select($"id").as[String].collect().exists(top2.contains),
           "deleted docs must vanish from the certified top-k")
         time("impact_serve_stale_10q_sec")(
@@ -1210,7 +1217,7 @@ object ProbeScale {
           map(lit("lang"), lit("en")).as("metadata"))
         time("impact_update_200_sec")(c.addDf(upd)) // ids pre-exist -> mirror
         require(c.impactCertifiedTopK("customer", 10, 0).nonEmpty,
-          "an update delta must keep the sidecar serving (gone-aware)")
+          "an update delta must keep the impact index serving (stale df)")
         time("impact_serve_after_update_sec")(c.searchTopK("customer", 10).collect())
       } finally {
         spark.conf.unset("spark.graft.store.directUpsertMaxBytes")

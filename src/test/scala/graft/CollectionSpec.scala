@@ -1154,7 +1154,6 @@ class CollectionSpec extends AnyFunSuite {
         ids(Stores.readPartition(spark, dir(root), "cdup", schema))
       assert(store(Stores.postingsDir, Stores.postingsSchema) === survivors)
       assert(store(Stores.doclenDir, Stores.doclenSchema) === survivors)
-      assert(store(Stores.impactDir, Stores.impactSchema) === survivors)
       assert(ids(c.vectorIndex().get.buckets) === survivors)
       if (dedupIndex.isDefined) {
         assert(store(Stores.minhashDir, Stores.minhashSchema) === survivors)

@@ -5,9 +5,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The impact-ordered postings sidecar (ranked-FTS early termination):
-  * certified-exact serving, full-path fallback, and the O(batch) insert /
-  * invalidate-on-update maintenance contract.
+/** The certified impact top-k over postings (ranked-FTS early
+  * termination): certified-exact serving, full-path fallback, and the
+  * O(batch) insert / stale-df-on-update maintenance contract.
   */
 class ImpactSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -17,8 +17,8 @@ class ImpactSpec extends AnyFunSuite {
     java.nio.file.Files.createTempDirectory("graft-impact-").toString
 
   /** Corpus with a REALISTIC (zipf-ish) tf profile — what the certificate
-    * is designed for: "common" appears once in most docs (so the sidecar
-    * truncation bound is ub(tf=1), well under saturation) and ~50 times in
+    * is designed for: "common" appears once in most docs (so its tf
+    * bound is ub(tf=1), well under saturation) and ~50 times in
     * every 13th doc (the unambiguous top-tf serving set); "rare" rides on
     * those docs; "alpha" is everywhere with tf 1-3. A tf-FLAT corpus (all
     * postings near the same tf) makes single-term certificates fail by
@@ -103,19 +103,22 @@ class ImpactSpec extends AnyFunSuite {
     assertSameTopK(c, "common rare or alpha", 5)
   }
 
-  test("single-term serving never touches the postings store") {
+  test("single-term certified scan pushes the term and tf-bound filters") {
     val c = build(300, cap = 64)
-    val served = c.impactCertifiedTopK("common", 10, 0)
-    assert(served.nonEmpty)
-    val expected = pairs(served.get)
-    // brutal proof: remove the postings partition and serve again — the
-    // certified single-term path reads meta + sidecar + collstats + docs only
-    val postingsPart = new java.io.File(
-      graft.index.Stores.partitionPath(graft.index.Stores.postingsDir(c.root), "t"))
-    val moved = new java.io.File(postingsPart.getParent, "collection=hidden")
-    assert(postingsPart.renameTo(moved))
-    try assert(pairs(c.impactCertifiedTopK("common", 10, 0).get) === expected)
-    finally assert(moved.renameTo(postingsPart))
+    c.impactCertifiedTopK("common", 10, 0) // warm the gate and meta caches
+    var served: Option[DataFrame] = None
+    val acts = TestSpark.actionsOf { served = c.impactCertifiedTopK("common", 10, 0) }
+    assert(served.nonEmpty, "expected certified serve")
+    // the candidate read is the postings scan itself: both the term
+    // equality and the tf bound reach the parquet reader, so the hot
+    // term's low-tf row groups are skipped, not read and filtered
+    val scans = acts.map(_._2).flatMap(_.linesIterator)
+      .filter(l => l.contains("postings") && l.contains("PushedFilters"))
+    assert(scans.nonEmpty, acts.map(_._2).mkString("\n"))
+    scans.foreach { scan =>
+      assert(scan.contains("EqualTo(term,common)"), scan)
+      assert(scan.contains("GreaterThan(tf,"), scan)
+    }
   }
 
   test("single-term certified serving plans no shuffle") {
@@ -124,7 +127,7 @@ class ImpactSpec extends AnyFunSuite {
     var served: Option[DataFrame] = None
     val acts = TestSpark.actionsOf { served = c.impactCertifiedTopK("common", 10, 0) }
     assert(served.nonEmpty, "expected certified serve")
-    // one rows-store row per (term, id): the per-doc scores need no aggregate
+    // one postings row per (term, id): the per-doc scores need no aggregate
     acts.foreach { case (_, plan) =>
       assert(!plan.contains("Exchange") && !plan.contains("HashAggregate"), plan)
     }
@@ -143,7 +146,7 @@ class ImpactSpec extends AnyFunSuite {
       c.addDf(batch.toDF("id", "content"))
       val served = c.impactCertifiedTopK("common", 10, 0)
       assert(served.nonEmpty, "pure insert must stay servable")
-      // delta-born docs actually serve from the sidecar
+      // delta-born docs actually serve from the postings delta
       assert(served.get.select("id").as[String].collect().exists(_.startsWith("n")))
       assertSameTopK(c, "common", 10)
       assertSameTopK(c, "rare gamma", 5)
@@ -169,11 +172,11 @@ class ImpactSpec extends AnyFunSuite {
         "the updated doc no longer matches its OLD terms")
       assertSameTopK(c, "common", 10)
       assertSameTopK(c, "rare", 5) // df shrank by the update — recounted
-      // terms born in the update serve from the mirrored rows (no meta row
-      // -> bound 0 -> completeness certificate)
+      // terms born in the update serve from the postings delta (no meta
+      // row -> bound 0 -> completeness certificate)
       assert(c.impactCertifiedTopK("different", 3, 0).nonEmpty)
       assertSameTopK(c, "different", 3)
-      // a pure insert while stale keeps the mirror regime (still serves)
+      // a pure insert while stale keeps the stale-df regime (still serves)
       c.addDf(Seq(("n99901", Seq.fill(300)("common").mkString(" ") + " rare"))
         .toDF("id", "content"))
       assert(c.impactCertifiedTopK("common", 10, 0).nonEmpty)
@@ -207,7 +210,7 @@ class ImpactSpec extends AnyFunSuite {
       assert(!ids.contains("d00013") && !ids.contains("d00026"))
       assertSameTopK(c, "common", 10)
       assertSameTopK(c, "rare", 5)    // df shrank by 2 — recounted exactly
-      assertSameTopK(c, "common rare", 5) // multi-term through the mirror
+      assertSameTopK(c, "common rare", 5) // multi-term with stale df
       // a SECOND delete while already stale: the fingerprint-keyed df
       // cache must miss (new postings state) and the newly-deleted doc
       // must vanish — a cache serving the previous stale state would
@@ -229,12 +232,12 @@ class ImpactSpec extends AnyFunSuite {
     }
   }
 
-  test("merge-path delete to EMPTY drops both impact stores, no orphans; rebuild re-registers") {
+  test("merge-path delete to EMPTY drops the impact meta; rebuild re-registers") {
     // default directUpsertMaxBytes: the delete takes the merge-rewrite path,
-    // whose sidecar re-derive sees an EMPTY postings frame — it must drop
-    // BOTH stores (registration gone, impactParams() None, no orphaned
-    // empty dirs), mirroring compact()'s emptied-collection branch, and a
-    // later re-add + createImpactIndex must register cleanly again
+    // whose meta re-derive sees an EMPTY postings frame — it must drop the
+    // meta (registration gone, impactParams() None, no orphaned empty
+    // dir), mirroring compact()'s emptied-collection branch, and a later
+    // re-add + createImpactIndex must register cleanly again
     import graft.index.Stores
     val root = freshRoot()
     val c = Collection(spark, root, "t")
@@ -244,8 +247,6 @@ class ImpactSpec extends AnyFunSuite {
     c.delete((1 to 50).map(i => f"d$i%05d"))
     assert(c.count() === 0L)
     assert(c.impactIndex() === None, "emptied corpus must drop the registration")
-    assert(!Stores.partitionExists(spark, Stores.impactDir(root), "t"),
-      "rows store dir must not be orphaned")
     assert(!Stores.partitionExists(spark, Stores.impactMetaDir(root), "t"),
       "meta store dir must not be orphaned")
     assert(c.searchTopK("common", 5).isEmpty) // serving survives the drop
@@ -261,14 +262,40 @@ class ImpactSpec extends AnyFunSuite {
 
   test("small-collection merge path rebuilds the sidecar exactly") {
     // default directUpsertMaxBytes: updates/deletes take the merge-rewrite
-    // path, which re-derives the sidecar — no staleness window at all
+    // path, which re-derives the meta — no staleness window at all
     val c = build(200, cap = 32)
     c.update(Seq("d00001"), Seq("fresh words here"))
     assert(c.impactCertifiedTopK("common", 10, 0).nonEmpty,
-      "merge path must leave a servable sidecar")
+      "merge path must leave a servable impact index")
     assertSameTopK(c, "common", 10)
     c.delete(Seq("d00015", "d00014"))
     assert(c.impactCertifiedTopK("common", 10, 0).nonEmpty)
+    assertSameTopK(c, "common", 10)
+  }
+
+  test("a pre-rewrite impact meta put back after a merge-path update falls back") {
+    // the crash window of a merge-path update: the postings rewrite lands,
+    // the meta re-derive does not. A rewrite leaves no delta segments, so
+    // only a watermark that identifies the postings FILES (their
+    // fingerprint) can tell the old meta from a current one.
+    import graft.index.Stores
+    import java.nio.file.{Files, Path, Paths}
+    def copyTree(from: Path, to: Path): Unit =
+      Files.walk(from).toArray.map(_.asInstanceOf[Path]).foreach { p =>
+        val dest = to.resolve(from.relativize(p).toString)
+        if (Files.isDirectory(p)) Files.createDirectories(dest) else Files.copy(p, dest)
+      }
+    val c = build(200, cap = 32)
+    val metaPart = Paths.get(Stores.partitionPath(Stores.impactMetaDir(c.root), "t"))
+    val saved = Files.createTempDirectory("graft-impact-meta-").resolve("meta")
+    copyTree(metaPart, saved)
+    // removes one 'common' posting: the old meta's df is now wrong
+    c.update(Seq("d00001"), Seq("fresh words here"))
+    assert(c.impactCertifiedTopK("common", 10, 0).nonEmpty)
+    Files.walk(metaPart).toArray.map(_.asInstanceOf[Path]).reverse.foreach(Files.delete)
+    copyTree(saved, metaPart)
+    assert(c.impactCertifiedTopK("common", 10, 0).isEmpty,
+      "a meta behind the postings must fall back, not serve its stale df")
     assertSameTopK(c, "common", 10)
   }
 
@@ -276,7 +303,7 @@ class ImpactSpec extends AnyFunSuite {
     // Fixed-seed fuzz over tf-flat-ish random corpora, small caps, and k
     // far beyond the hit counts — the regimes where a wrong certificate
     // would hide (saturated tf-parts, under-full results, OR-dropped
-    // leaves). Whatever the sidecar certifies must equal the full path;
+    // leaves). Whatever the index certifies must equal the full path;
     // whatever it declines must still be served exactly via fallback.
     val rnd = new scala.util.Random(1234)
     val vocab = Vector("aa", "bb", "cc", "dd", "ee", "ff", "gg")
@@ -387,12 +414,12 @@ class ImpactSpec extends AnyFunSuite {
     // certify a WRONG empty answer — the contract rejects them up front
     val empty = spark.emptyDataFrame
     val e = intercept[IllegalArgumentException](ImpactTopK.certifiedTopK(
-      empty, empty, empty, 10L, 5.0, Seq("a", "a"), isAnd = true, n = 5))
+      empty, empty, 10L, 5.0, Seq("a", "a"), isAnd = true, n = 5))
     assert(e.getMessage.contains("distinct"))
     // k + offset overflows Int: the certified arm must DECLINE (never wrap
     // negative and crash on its own n >= 1 require); the fallback then
     // surfaces Spark's own clear SUM_OF_LIMIT_AND_OFFSET analysis error —
-    // byte-identical with what a sidecar-less collection does at this depth
+    // byte-identical with what an index-less collection does at this depth
     val c = build(60, cap = 16)
     assert(c.impactCertifiedTopK("common", Int.MaxValue, 2).isEmpty,
       "wrapped depth must decline, not crash")
@@ -414,13 +441,13 @@ class ImpactSpec extends AnyFunSuite {
     val r = ImpactTopK.ranked(post, cap)
     val plan = r.queryExecution.executedPlan.toString
     assert(plan.contains("WindowGroupLimit"), plan)
-    val rows = ImpactTopK.rowsFromRanked(r, cap).collect()
-    assert(rows.length === cap)
+    val rows = r.filter($"__rn" <= cap).select($"id", $"tf", $"__rn")
+      .as[(String, Long, Int)].collect().sortBy(_._3)
+    assert(rows.map(_._3).toSeq === (1 to cap))
     // top-cap by (tf desc, id asc) — recompute naively
     val naive = (1 to 500).map(i => (f"d$i%04d", (i % 97).toLong))
       .sortBy { case (id, tf) => (-tf, id) }.take(cap)
-    assert(rows.map(x => (x.getString(1), x.getLong(2))).sortBy(naive.indexOf)
-      .toSeq === naive)
+    assert(rows.map(x => (x._1, x._2)).toSeq === naive)
     val meta = ImpactTopK.metaFromRanked(post, r, cap).collect().head
     assert(meta.getLong(1) === 500L, "df must count the RAW postings")
     assert(meta.getLong(2) === naive.last._2,

@@ -140,4 +140,27 @@ class StoreLayoutSpec extends AnyFunSuite {
       spark.conf.set("spark.graft.compact.auto", "true")
     }
   }
+
+  test("postings sort by (term, tf): a tf-bound read skips the hot term's low-tf row groups") {
+    // the certified impact top-k's candidate read (term = t AND tf > bound)
+    // through the REAL full-write path; small row groups for the write
+    // only, so the hot term spans many of them like it does at scale
+    spark.conf.set("parquet.block.size", (32L << 10).toString)
+    val c = try {
+      val c = graft.api.Collection(spark, freshStore(), "t")
+      c.addDf((0 until 8000).map { i =>
+        (f"d$i%05d", (Seq.fill(1 + i % 40)("hot") :+ f"w${i % 300}%03d").mkString(" "))
+      }.toDF("id", "content").repartition(4))
+      c
+    } finally spark.conf.unset("parquet.block.size")
+    val post = Stores.readPartition(spark, c.root + "/postings", "t", Stores.postingsSchema)
+    val (df, termScanned) = ScanStats.collectAndScanRows(post.filter($"term" === "hot"))
+    assert(df === 8000L)
+    assert(termScanned >= df, "the term-only read must see all of the term's rows")
+    val (n, scanned) = ScanStats.collectAndScanRows(
+      post.filter($"term" === "hot" && $"tf" > 32L))
+    assert(n === (0 until 8000).count(i => 1 + i % 40 > 32).toLong)
+    assert(scanned * 2 <= df,
+      s"a tf-bound read must skip low-tf row groups (scanned $scanned of $df)")
+  }
 }
