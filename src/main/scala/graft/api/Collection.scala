@@ -7,6 +7,7 @@ import graft.model._
 import graft.parse.QueryParser
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
 /** Batch embedding callback — the reference's single UDF surface
@@ -34,6 +35,15 @@ private[graft] case class DocRow(id: String, content: String,
   * (see [[graft.index.Stores]]); full rebuilds and [[Collection.compact]]
   * rewrite the partition via write-temp + swap. The skinny doclen store
   * exists so the per-upsert stats refresh never rescans postings.
+  *
+  * The five id-keyed secondary index stores (LSH, IVF, PQ, IVF-PQ and the
+  * MinHash dedup index) are each described once as an `IndexKind`; one
+  * loop keeps every live kind current on each write path (full build,
+  * merge rewrite, delta append, delete, compaction), deriving a batch's
+  * rows under the kind's stored parameters. A store that exists but has
+  * no readable parameters (emptied of rows, or a crash residue) is dropped
+  * by the next write. Postings, doclen, collstats and the impact meta keep
+  * their own maintenance.
   */
 final class Collection private (
     val spark: SparkSession,
@@ -68,6 +78,46 @@ final class Collection private (
     * tf, so a certified top-k's `term = t AND tf > bound` read skips the
     * hot term's low-tf row groups. */
   private val postingsOrder = Seq("term", "tf")
+
+  /** One id-keyed secondary index store, described once for every write
+    * path. `dirs` is the rows store followed by the parameter tables the
+    * kind owns; `sortBy`/`rangeBy` give the rows' file layout; `live`
+    * returns the kind's row derivation from any frame of docs under its
+    * STORED parameters, None while the rows store is absent or holds no
+    * readable parameters. The kind's accessor and
+    * [[hasPersistedVectorIndex]] use the same test.
+    */
+  private final class IndexKind(val dirs: Seq[String], val schema: StructType,
+                                val sortBy: Seq[String], val rangeBy: Seq[String],
+                                val live: () => Option[DataFrame => DataFrame]) {
+    def dir: String = dirs.head
+  }
+
+  private val lshKind = new IndexKind(Seq(annDir), Stores.annSchema,
+    sortBy = Seq("table", "bucket"), rangeBy = Seq("table", "bucket"),
+    live = () => lshParams().map { case (t, p, d, s) => lshRows(t, p, d, s)(_) })
+  // IVF re-assigns and PQ re-encodes against the STORED centroids/codebooks
+  // (zero-shuffle scans); retraining is compact()'s staleness policy
+  private val ivfKind = new IndexKind(Seq(ivfDir, ivfCentDir), Stores.ivfSchema,
+    sortBy = Seq("cluster"), rangeBy = Nil,
+    live = () =>
+      if (!Stores.partitionExists(spark, ivfDir, name)) None
+      else ivfCentroidsRaw().map(cents => graft.ext.Ivf.assign(_, cents)))
+  private val pqKind = new IndexKind(Seq(pqDir, pqBookDir), Stores.pqSchema,
+    sortBy = Nil, rangeBy = Nil,
+    live = () => pqCodebook().map(cb => graft.ext.Pq.encode(_, cb)))
+  private val ivfPqKind = new IndexKind(Seq(ivfPqDir, ivfCentDir, pqBookDir),
+    Stores.ivfPqSchema, sortBy = Seq("cluster"), rangeBy = Nil,
+    live = () => ivfPqParts().map { case (cents, cb) =>
+      ivfPqRows(_, cents, cb, ivfPqResidual()) })
+  private val minhashKind = new IndexKind(Seq(minhashDir), Stores.minhashSchema,
+    sortBy = Seq("band", "bh"), rangeBy = Nil,
+    live = () => dedupParams().map { case (n, bands, rpb) =>
+      dedupIndexRows(_, n, bands, rpb) })
+
+  /** The mutually exclusive vector-index kinds ([[createVectorIndex]]). */
+  private val vectorKinds = Seq(lshKind, ivfKind, pqKind, ivfPqKind)
+  private val indexKinds = vectorKinds :+ minhashKind
 
   /** This collection's documents (partition-pruned read). */
   def docs(): DataFrame = Stores.readPartition(spark, docsDir, name, Stores.docsSchema)
@@ -529,7 +579,7 @@ final class Collection private (
     }
   }
 
-  private def emptyFrame(schema: org.apache.spark.sql.types.StructType): DataFrame =
+  private def emptyFrame(schema: StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
   /** Fold any accumulated delta segments of this collection's stores back
@@ -537,21 +587,18 @@ final class Collection private (
     * [[Stores.MaxDeltas]] policy trigger it).
     */
   def compact(): Unit = {
+    def outgrown(k: IndexKind) = {
+      val (b, d) = Stores.segmentBytes(spark, k.dir, name)
+      b > 0 && d * 2 > b
+    }
     // IVF staleness check BEFORE the fold (deltas are the staleness signal):
     // when the delta-assigned mass rivals the base, the stored centroids were
     // trained on a minority of the current data — retrain from docs() with
     // the stored params; otherwise just fold the assignment deltas flat.
-    val ivfStale = Stores.partitionExists(spark, ivfCentDir, name) && {
-      val (b, d) = Stores.segmentBytes(spark, ivfDir, name)
-      b > 0 && d * 2 > b
-    }
+    val ivfStale = Stores.partitionExists(spark, ivfCentDir, name) && outgrown(ivfKind)
     // PQ shares the policy: delta-encoded mass rivaling the base means the
     // codebooks were trained on a minority of the current data
-    val pqStale = Stores.partitionExists(spark, pqBookDir, name) &&
-      Stores.partitionExists(spark, pqDir, name) && {
-        val (b, d) = Stores.segmentBytes(spark, pqDir, name)
-        b > 0 && d * 2 > b
-      }
+    val pqStale = Stores.partitionExists(spark, pqBookDir, name) && outgrown(pqKind)
     // crash-residue guard BEFORE the staleness math: an ivfpq codes
     // partition whose parameter tables are incomplete (a crash inside
     // writeIvfPq's codes→books→centroids window) can never serve or
@@ -561,49 +608,39 @@ final class Collection private (
     // (centroids, no ivfPqDir) never matches: the guard keys on ivfPqDir.
     if (Stores.partitionExists(spark, ivfPqDir, name) &&
         (!Stores.partitionExists(spark, ivfCentDir, name) ||
-         !Stores.partitionExists(spark, pqBookDir, name))) {
-      Stores.dropPartition(spark, ivfPqDir, name)
-      Stores.dropPartition(spark, ivfCentDir, name)
-      Stores.dropPartition(spark, pqBookDir, name)
-    }
-    val ivfPqStale = Stores.partitionExists(spark, ivfPqDir, name) && {
-      val (b, d) = Stores.segmentBytes(spark, ivfPqDir, name)
-      b > 0 && d * 2 > b
-    }
+         !Stores.partitionExists(spark, pqBookDir, name)))
+      dropIndex(ivfPqKind)
+    val ivfPqStale = outgrown(ivfPqKind)
     Stores.compactPartition(spark, docsDir, name, Stores.docsSchema,
       sortBy = Seq("id"), rangeBy = Seq("id"))
     Stores.compactPartition(spark, postingsDir, name, Stores.postingsSchema,
       sortBy = postingsOrder, rangeBy = Seq("term"))
-    Stores.compactPartition(spark, annDir, name, Stores.annSchema,
-      sortBy = Seq("table", "bucket"))
     Stores.compactPartition(spark, doclenDir, name, Stores.doclenSchema)
+    // fold every index store except the stale ones retrained below
+    val retrained = Seq(ivfKind -> ivfStale, pqKind -> pqStale, ivfPqKind -> ivfPqStale)
+      .collect { case (k, true) => k }
+    indexKinds.filterNot(retrained.contains).foreach(k =>
+      Stores.compactPartition(spark, k.dir, name, k.schema, k.sortBy, k.rangeBy))
     if (ivfStale) ivfParams().foreach { case (nprobe, iters, maxSample, seed) =>
       val k = ivfCentroidsRaw().map(_.size).getOrElse(256)
       // a collection emptied of embedded docs can't retrain (k-means has no
       // sample) — drop the index like the LSH path does, instead of letting
       // Ivf.build throw from inside an auto-triggered compaction and wedge
       // every subsequent write
-      if (docs().filter($"embedding".isNotNull).limit(1).isEmpty) {
-        Stores.dropPartition(spark, ivfDir, name)
-        Stores.dropPartition(spark, ivfCentDir, name)
-      } else
+      if (docs().filter($"embedding".isNotNull).limit(1).isEmpty) dropIndex(ivfKind)
+      else
         writeIvf(graft.ext.Ivf.build(docs(), "id", "embedding",
           k, iters, 1.0, maxSample, seed), nprobe, iters, maxSample, seed)
     }
-    else Stores.compactPartition(spark, ivfDir, name, Stores.ivfSchema,
-      sortBy = Seq("cluster"))
     if (pqStale) pqParams().foreach { case (candK, iters, maxSample, seed) =>
       pqCodebook() match {
         case Some(old) if !docs().filter($"embedding".isNotNull).limit(1).isEmpty =>
           writePq(graft.ext.Pq.train(docs(), "embedding",
             old.m, old.books.head.size, iters, maxSample, seed),
             candK, iters, maxSample, seed)
-        case _ => // emptied of embedded docs: drop, like the IVF branch
-          Stores.dropPartition(spark, pqDir, name)
-          Stores.dropPartition(spark, pqBookDir, name)
+        case _ => dropIndex(pqKind) // emptied of embedded docs, like the IVF branch
       }
     }
-    else Stores.compactPartition(spark, pqDir, name, Stores.pqSchema)
     if (ivfPqStale) ivfParams().foreach { case (nprobe, iters, maxSample, seed) =>
       (ivfCentroidsRaw(), pqCodebookRaw()) match {
         case (Some(oldCents), Some(oldCb))
@@ -614,16 +651,9 @@ final class Collection private (
             iters, maxSample, seed)
           writeIvfPq(cents, cb, nprobe,
             pqParams().map(_._1).getOrElse(50), iters, maxSample, seed, residual)
-        case _ => // emptied of embedded docs: drop, like the other kinds
-          Stores.dropPartition(spark, ivfPqDir, name)
-          Stores.dropPartition(spark, ivfCentDir, name)
-          Stores.dropPartition(spark, pqBookDir, name)
+        case _ => dropIndex(ivfPqKind) // emptied of embedded docs, like the other kinds
       }
     }
-    else Stores.compactPartition(spark, ivfPqDir, name, Stores.ivfPqSchema,
-      sortBy = Seq("cluster"))
-    Stores.compactPartition(spark, minhashDir, name, Stores.minhashSchema,
-      sortBy = Seq("band", "bh"))
     // impact meta: re-derive exact df, bounds and watermark from the
     // just-folded postings — heals a stale-df or behind-watermark meta. A
     // collection emptied of postings drops the index, like the IVF branch.
@@ -689,8 +719,9 @@ final class Collection private (
   // -------------------------------------------------------------------------
   // Persisted vector index (the pgvector-analog decision, core.py:319-321:
   // the reference leans on the database's vector index; here the index is a
-  // first-class partition of the store, built once and maintained as a delta
-  // alongside postings)
+  // first-class partition of the store, built once, then kept current by the
+  // index maintenance loop (eachLiveIndex) on every write path, like the dedup index;
+  // building, training and retraining stay per kind)
   // -------------------------------------------------------------------------
 
   /** Build (or rebuild) this collection's persisted vector index over the
@@ -706,94 +737,83 @@ final class Collection private (
     * them; uses `numCentroids` (=coarse lists)/`nprobe`/`m`/`candK`/
     * `iters`/`maxSample`; codewords fixed at 256).
     * Docs without embeddings are simply absent from the index. The kinds
-    * are mutually exclusive — building one drops the others. Subsequent
-    * `add`/`update`/`delete` maintain the built index incrementally (IVF
+    * are mutually exclusive — building one first drops every vector store
+    * the target kind does not own. Subsequent `add`/`update`/`delete`
+    * maintain the built index incrementally (LSH batches re-bucket, IVF
     * batches re-assign and PQ batches re-encode against the STORED
-    * centroids/codebooks — zero-shuffle scans; `compact()` retrains when
-    * the delta mass rivals the base); `vectorTopK` probes it without
-    * touching the corpus scan.
+    * planes/centroids/codebooks — zero-shuffle scans; `compact()` retrains
+    * IVF/PQ when the delta mass rivals the base); `vectorTopK` probes it
+    * without touching the corpus scan. An LSH index emptied of embedded
+    * docs serves nothing (the auto paths take the exact fallback) and is
+    * dropped by the next write.
     */
   def createVectorIndex(numTables: Int = 16, numPlanes: Int = 4,
                         dim: Int = 64, seed: Long = 42L,
                         kind: String = "lsh", numCentroids: Int = 256,
                         iters: Int = 10, maxSample: Int = 100000,
-                        nprobe: Int = 8, m: Int = 8, candK: Int = 50): Unit = kind match {
-    case "lsh" =>
-      // drop the OTHER kinds FIRST: a crash mid-build then leaves no index
-      // (vectorTopK throws loudly) instead of the stale other-kind index
-      // silently shadowing the one the caller asked for
-      Stores.dropPartition(spark, ivfDir, name)
-      Stores.dropPartition(spark, ivfCentDir, name)
-      Stores.dropPartition(spark, pqDir, name)
-      Stores.dropPartition(spark, pqBookDir, name)
-      Stores.dropPartition(spark, ivfPqDir, name)
-      val ix = LshIndex.build(docs(), "id", "embedding", numTables, numPlanes, dim, seed)
-      // toStoreFrame is already range-clustered + sorted; no write-time re-sort
-      Stores.overwritePartition(spark, annDir, name, ix.toStoreFrame)
-      // Arm the cosine-top-k → ANN rewrite for direct scans of this
-      // collection's docs store (the pgvector planner analogue,
-      // core.py:319-321). Two-layer opt-in: this registration is INERT
-      // unless the session also installed the rule (GraftExtensions or
-      // AnnCatalog.install) — exact queries stay exact everywhere else.
-      // Deferred: every rewrite re-reads the CURRENT persisted index
-      // (delta-maintained by add/update/delete), and a dropped index
-      // declines instead of serving stale buckets.
-      graft.plans.AnnCatalog.register(spark, Stores.partitionPath(docsDir, name),
-        graft.plans.AnnCatalog.Entry("id", "embedding",
-          graft.plans.AnnCatalog.Deferred(() =>
-            vectorIndex().map(graft.plans.AnnCatalog.LshRegistered(_)))))
-    case "ivf" =>
-      require(nprobe >= 1 && nprobe <= numCentroids, "1 <= nprobe <= numCentroids")
-      Stores.dropPartition(spark, annDir, name) // see the lsh branch's ordering note
-      Stores.dropPartition(spark, pqDir, name)
-      Stores.dropPartition(spark, pqBookDir, name)
-      Stores.dropPartition(spark, ivfPqDir, name)
-      val ix = graft.ext.Ivf.build(docs(), "id", "embedding",
-        numCentroids, iters, 1.0, maxSample, seed)
-      writeIvf(ix, nprobe, iters, maxSample, seed)
-      graft.plans.AnnCatalog.register(spark, Stores.partitionPath(docsDir, name),
-        graft.plans.AnnCatalog.Entry("id", "embedding",
-          graft.plans.AnnCatalog.Deferred(() => ivfIndex().map(ix =>
-            graft.plans.AnnCatalog.IvfRegistered(ix, ivfParams().map(_._1).getOrElse(8))))))
-    case "pq" =>
-      require(candK >= 1, "candK >= 1")
-      Stores.dropPartition(spark, annDir, name) // see the lsh branch's ordering note
-      Stores.dropPartition(spark, ivfDir, name)
-      Stores.dropPartition(spark, ivfCentDir, name)
-      Stores.dropPartition(spark, ivfPqDir, name)
-      val cb = graft.ext.Pq.train(docs(), "embedding",
-        m, numCentroids, iters, maxSample, seed)
-      writePq(cb, candK, iters, maxSample, seed)
-      graft.plans.AnnCatalog.register(spark, Stores.partitionPath(docsDir, name),
-        graft.plans.AnnCatalog.Entry("id", "embedding",
-          graft.plans.AnnCatalog.Deferred(() => pqIndex().map { case (cb, codes, candK) =>
-            graft.plans.AnnCatalog.PqRegistered(codes, cb, candK) })))
-    case "ivfpq" =>
-      // The FAISS IVFPQ composite: coarse IVF lists partition the corpus,
-      // PQ codes compress it — a probe ADC-scans ~nprobe/numCentroids of
-      // the codes instead of all of them (the flat "pq" kind's cost) and
-      // reranks candK floats. The encoding — residual
-      // (normalize(v) − centroid[cluster], the FAISS recipe) vs raw — is
-      // CHOSEN BY MEASUREMENT on the training sample (chooseIvfPqCodebook);
-      // residual serving restores the q·centroid[cluster] term per row
-      // (Pq.adcTopKResidual), and the choice persists with the books.
-      require(nprobe >= 1 && nprobe <= numCentroids, "1 <= nprobe <= numCentroids")
-      require(candK >= 1, "candK >= 1")
-      Stores.dropPartition(spark, annDir, name) // see the lsh branch's ordering note
-      Stores.dropPartition(spark, ivfDir, name)
-      Stores.dropPartition(spark, pqDir, name)
-      val (cents, cb, residual) = trainIvfPqTables(numCentroids, m, iters,
-        maxSample, seed)
-      writeIvfPq(cents, cb, nprobe, candK, iters, maxSample, seed, residual)
-      graft.plans.AnnCatalog.register(spark, Stores.partitionPath(docsDir, name),
-        graft.plans.AnnCatalog.Entry("id", "embedding",
-          graft.plans.AnnCatalog.Deferred(() => ivfPqIndex().map {
-            case (cents, cb, rows, nprobe, candK) =>
-              graft.plans.AnnCatalog.IvfPqRegistered(rows, cents, cb, nprobe,
-                candK, ivfPqResidual()) })))
-    case other =>
-      throw new IllegalArgumentException(
-        s"Unknown vector index kind '$other' (expected \"lsh\", \"ivf\", \"pq\" or \"ivfpq\").")
+                        nprobe: Int = 8, m: Int = 8, candK: Int = 50): Unit = {
+    import graft.plans.AnnCatalog
+    val target = kind match {
+      case "lsh" => lshKind
+      case "ivf" =>
+        require(nprobe >= 1 && nprobe <= numCentroids, "1 <= nprobe <= numCentroids")
+        ivfKind
+      case "pq" =>
+        require(candK >= 1, "candK >= 1")
+        pqKind
+      case "ivfpq" =>
+        require(nprobe >= 1 && nprobe <= numCentroids, "1 <= nprobe <= numCentroids")
+        require(candK >= 1, "candK >= 1")
+        ivfPqKind
+      case other =>
+        throw new IllegalArgumentException(
+          s"Unknown vector index kind '$other' (expected \"lsh\", \"ivf\", \"pq\" or \"ivfpq\").")
+    }
+    // drop every vector dir the target kind does not own FIRST: a crash
+    // mid-build then leaves no index (vectorTopK throws loudly) instead of
+    // the stale other-kind index silently shadowing the one asked for
+    vectorKinds.flatMap(_.dirs).distinct.filterNot(target.dirs.contains)
+      .foreach(Stores.dropPartition(spark, _, name))
+    val served: () => Option[AnnCatalog.Registered] = kind match {
+      case "lsh" =>
+        Stores.overwritePartition(spark, annDir, name,
+          lshRows(numTables, numPlanes, dim, seed)(docs()), lshKind.sortBy, lshKind.rangeBy)
+        () => vectorIndex().map(AnnCatalog.LshRegistered(_))
+      case "ivf" =>
+        writeIvf(graft.ext.Ivf.build(docs(), "id", "embedding",
+          numCentroids, iters, 1.0, maxSample, seed), nprobe, iters, maxSample, seed)
+        () => ivfIndex().map(ix =>
+          AnnCatalog.IvfRegistered(ix, ivfParams().map(_._1).getOrElse(8)))
+      case "pq" =>
+        writePq(graft.ext.Pq.train(docs(), "embedding",
+          m, numCentroids, iters, maxSample, seed), candK, iters, maxSample, seed)
+        () => pqIndex().map { case (cb, codes, candK) =>
+          AnnCatalog.PqRegistered(codes, cb, candK) }
+      case _ => // "ivfpq"
+        // The FAISS IVFPQ composite: coarse IVF lists partition the corpus,
+        // PQ codes compress it — a probe ADC-scans ~nprobe/numCentroids of
+        // the codes instead of all of them (the flat "pq" kind's cost) and
+        // reranks candK floats. The encoding — residual
+        // (normalize(v) − centroid[cluster], the FAISS recipe) vs raw — is
+        // CHOSEN BY MEASUREMENT on the training sample (chooseIvfPqCodebook);
+        // residual serving restores the q·centroid[cluster] term per row
+        // (Pq.adcTopKResidual), and the choice persists with the books.
+        val (cents, cb, residual) = trainIvfPqTables(numCentroids, m, iters,
+          maxSample, seed)
+        writeIvfPq(cents, cb, nprobe, candK, iters, maxSample, seed, residual)
+        () => ivfPqIndex().map { case (cents, cb, rows, nprobe, candK) =>
+          AnnCatalog.IvfPqRegistered(rows, cents, cb, nprobe, candK, ivfPqResidual()) }
+    }
+    // Arm the cosine-top-k → ANN rewrite for direct scans of this
+    // collection's docs store (the pgvector planner analogue,
+    // core.py:319-321). Two-layer opt-in: this registration is INERT
+    // unless the session also installed the rule (GraftExtensions or
+    // AnnCatalog.install) — exact queries stay exact everywhere else.
+    // Deferred: every rewrite re-reads the CURRENT persisted index
+    // (maintained by add/update/delete), and a dropped index declines
+    // instead of serving stale buckets.
+    AnnCatalog.register(spark, Stores.partitionPath(docsDir, name),
+      AnnCatalog.Entry("id", "embedding", AnnCatalog.Deferred(served)))
   }
 
   private def writeIvf(ix: graft.ext.IvfIndex, nprobe: Int, iters: Int,
@@ -974,17 +994,8 @@ final class Collection private (
     * stored rerank depth.
     */
   def pqIndex(): Option[(graft.ext.PqCodebook, DataFrame, Int)] =
-    // BOTH stores: the codebook table alone is shared with the IVF-PQ kind
-    // (whose codes live in annivfpq, not annpq)
-    if (!Stores.partitionExists(spark, pqBookDir, name) ||
-        !Stores.partitionExists(spark, pqDir, name)) None
-    else {
-      val book = Stores.readPartition(spark, pqBookDir, name, Stores.pqBookSchema)
-      graft.ext.PqCodebook.fromStoreFrame(book).map { cb =>
-        (cb, Stores.readPartition(spark, pqDir, name, Stores.pqSchema),
-          pqParams().map(_._1).getOrElse(50))
-      }
-    }
+    pqCodebook().map(cb => (cb, Stores.readPartition(spark, pqDir, name, Stores.pqSchema),
+      pqParams().map(_._1).getOrElse(50)))
 
   /** (candK, iters, maxSample, seed) of the stored PQ index
     * (fingerprint-memoized, see [[ivfParams]]). */
@@ -1006,7 +1017,9 @@ final class Collection private (
     }
 
   /** Stored PQ codebooks of the FLAT PQ index, or None (the IVF-PQ kind
-    * reads its books through [[ivfPqParts]]). */
+    * reads its books through [[ivfPqParts]]). BOTH stores: the codebook
+    * table alone is shared with the IVF-PQ kind (whose codes live in
+    * annivfpq, not annpq). */
   private def pqCodebook(): Option[graft.ext.PqCodebook] =
     if (!Stores.partitionExists(spark, pqDir, name)) None
     else pqCodebookRaw()
@@ -1016,11 +1029,7 @@ final class Collection private (
     * k×dim centroids, m×256×dsub codewords). */
   private def ivfPqParts(): Option[(Seq[Seq[Float]], graft.ext.PqCodebook)] =
     if (!Stores.partitionExists(spark, ivfPqDir, name)) None
-    else for {
-      cents <- ivfCentroidsRaw()
-      cb <- graft.ext.PqCodebook.fromStoreFrame(
-        Stores.readPartition(spark, pqBookDir, name, Stores.pqBookSchema))
-    } yield (cents, cb)
+    else for (cents <- ivfCentroidsRaw(); cb <- pqCodebookRaw()) yield (cents, cb)
 
   /** Whether the stored IVF-PQ codes are RESIDUALS (vector − coarse
     * centroid). NULL — a pre-residual store — reads as raw, so old indexes
@@ -1085,17 +1094,19 @@ final class Collection private (
         .map(ix => (ix.numTables, ix.numPlanes, ix.dim, ix.seed))
     }
 
-  /** Maintain the stored LSH index with `f`, or drop a store that no
-    * longer holds any rows; no-op without one. */
-  private def maintainVectorIndex(f: LshIndex => Unit): Unit =
-    if (Stores.partitionExists(spark, annDir, name)) vectorIndex() match {
-      case Some(ix) => f(ix)
-      case None => Stores.dropPartition(spark, annDir, name)
-    }
+  /** LSH store rows of `source`'s embedded docs under the given plane
+    * parameters, which every row repeats as constant columns. */
+  private def lshRows(numTables: Int, numPlanes: Int, dim: Int, seed: Long)(
+      source: DataFrame): DataFrame =
+    Ann.lshTables(source.filter($"embedding".isNotNull), "id", "embedding",
+        numTables, numPlanes, dim, seed)
+      .withColumn("num_tables", lit(numTables)).withColumn("num_planes", lit(numPlanes))
+      .withColumn("dim", lit(dim)).withColumn("seed", lit(seed))
 
   // -------------------------------------------------------------------------
   // Persisted dedup-screening index: banded MinHash signatures, stored and
-  // delta-maintained exactly like the vector indexes. The serving story —
+  // maintained by the same loop as the vector indexes (an emptied
+  // store is dropped by the next write). The serving story —
   // "is this batch of texts a near-duplicate of anything in the corpus?" —
   // is the recrawl/contamination screen: WITHOUT the index each screen
   // re-shingles and re-bands the WHOLE corpus (graft.ext.Dedup.dedupAgainst
@@ -1474,20 +1485,15 @@ final class Collection private (
     if (hasPersistedVectorIndex) vectorTopK(queries, k)
     else graft.ext.Ann.exactTopK(docs(), queries, k)
 
-  /** True iff some persisted index can actually SERVE — each kind's check
-    * mirrors its accessor's store gating exactly. A single shared-table
-    * existence test would disagree with the accessors inside writeIvfPq's
-    * crash window (codes+books present, centroids not yet written): the
-    * accessors all read None there, and a route-to-vectorTopK would throw
-    * instead of taking the documented exact fallback.
+  /** True iff some persisted vector index can actually SERVE: a kind is
+    * live ([[IndexKind]]), the test its accessor and every write path use.
+    * A store that exists without readable parameters — an LSH store
+    * emptied of embedded docs, or writeIvfPq's crash window (codes+books
+    * present, centroids not yet written) — reads None in the accessors, so
+    * routing it to vectorTopK would throw instead of taking the documented
+    * exact fallback.
     */
-  private def hasPersistedVectorIndex: Boolean = {
-    def ex(dir: String) = Stores.partitionExists(spark, dir, name)
-    ex(annDir) ||
-      (ex(ivfCentDir) && ex(ivfDir)) ||
-      (ex(pqBookDir) && ex(pqDir)) ||
-      (ex(ivfPqDir) && ex(ivfCentDir) && ex(pqBookDir))
-  }
+  private def hasPersistedVectorIndex: Boolean = vectorKinds.exists(_.live().isDefined)
 
   /** FILTERED approximate vector search — top-k per query AMONG the docs
     * passing `where` (the qdrant/pgvector "metadata filter + ANN"
@@ -1630,16 +1636,12 @@ final class Collection private (
       // non-FTS collections whose stats are informational)
       writeDoclenFull(doclenOfBatch(source))
     }
-    refreshVectorIndexFull()
-    // dedup index: re-band everything with the STORED shape parameters
-    dedupParams().foreach { case (n, bands, rpb) =>
-      Stores.overwritePartition(spark, minhashDir, name,
-        dedupIndexRows(docs(), n, bands, rpb), sortBy = Seq("band", "bh"))
-    }
+    eachLiveIndex((k, rows) => overwriteIndex(k, rows(source)))
   }
 
   /** Small-collection upsert index maintenance: merge-rewrite postings and
-    * ann (anti-join out the batch ids, union the batch's fresh rows) —
+    * every live index store (anti-join out the batch ids, union the
+    * batch's fresh rows) —
     * below the direct threshold, rewriting the partition beats making every
     * subsequent read resolve deltas. Only the batch tokenizes either way.
     */
@@ -1676,46 +1678,8 @@ final class Collection private (
       writeDoclenFull(doclen().join(batchIds, Seq("id"), "left_anti")
         .unionByName(doclenOfBatch(batch)))
     }
-    refreshVectorIndexMerge(batch, batchIds)
-    // dedup index: anti-join out the batch ids, union the batch's fresh rows
-    dedupParams().foreach { case (n, bands, rpb) =>
-      Stores.overwritePartition(spark, minhashDir, name,
-        Stores.readPartition(spark, minhashDir, name, Stores.minhashSchema)
-          .join(batchIds, Seq("id"), "left_anti")
-          .unionByName(dedupIndexRows(batch, n, bands, rpb)),
-        sortBy = Seq("band", "bh"))
-    }
-  }
-
-  private def refreshVectorIndexMerge(batch: DataFrame, batchIds: DataFrame): Unit = {
-    maintainVectorIndex { ix =>
-      val kept = ix.buckets.join(batchIds, Seq("id"), "left_anti")
-      val added = Ann.lshTables(batch.filter($"embedding".isNotNull),
-        "id", "embedding", ix.numTables, ix.numPlanes, ix.dim, ix.seed)
-      Stores.overwritePartition(spark, annDir, name,
-        ix.copy(buckets = kept.unionByName(added)).toStoreFrame)
-    }
-    if (Stores.partitionExists(spark, ivfDir, name))
-      ivfCentroidsRaw().foreach { cents =>
-        val kept = Stores.readPartition(spark, ivfDir, name, Stores.ivfSchema)
-          .join(batchIds, Seq("id"), "left_anti")
-        val added = graft.ext.Ivf.assign(batch, cents)
-        Stores.overwritePartition(spark, ivfDir, name,
-          kept.unionByName(added), sortBy = Seq("cluster"))
-      }
-    pqCodebook().foreach { cb =>
-      val kept = Stores.readPartition(spark, pqDir, name, Stores.pqSchema)
-        .join(batchIds, Seq("id"), "left_anti")
-      Stores.overwritePartition(spark, pqDir, name,
-        kept.unionByName(graft.ext.Pq.encode(batch, cb)))
-    }
-    ivfPqParts().foreach { case (cents, cb) =>
-      val kept = Stores.readPartition(spark, ivfPqDir, name, Stores.ivfPqSchema)
-        .join(batchIds, Seq("id"), "left_anti")
-      Stores.overwritePartition(spark, ivfPqDir, name,
-        kept.unionByName(ivfPqRows(batch, cents, cb, ivfPqResidual())),
-        sortBy = Seq("cluster"))
-    }
+    eachLiveIndex((k, rows) =>
+      overwriteIndex(k, indexRowsWithout(k, batchIds).unionByName(rows(batch))))
   }
 
   /** Stored coarse centroids (driver-side, k×dim — broadcast-sized), or
@@ -1796,19 +1760,15 @@ final class Collection private (
     } else {
       appendDoclenDelta(doclenOfBatch(batch))
     }
-    refreshVectorIndexDelta(batch, batchIds)
-    // dedup index: O(batch) delta — only the batch re-shingles/re-bands
-    // (with the stored shape), the gone sidecar claims every batch id
-    dedupParams().foreach { case (n, bands, rpb) =>
-      Stores.appendDelta(spark, minhashDir, name,
-        dedupIndexRows(batch, n, bands, rpb),
-        gone = Some(batchIds), sortBy = Seq("band", "bh"))
-    }
+    // O(batch) index deltas: only the batch derives rows, and the gone
+    // sidecar claims every batch id, so replaced or unembedded docs leave
+    eachLiveIndex((k, rows) => Stores.appendDelta(spark, k.dir, name, rows(batch),
+      gone = Some(batchIds), sortBy = k.sortBy))
   }
 
   /** Small-collection delete index maintenance: anti-join rewrite of
-    * postings and ann (the pre-segment shape — optimal when the partition
-    * is small).
+    * postings and every live index store (the pre-segment shape — optimal
+    * when the partition is small).
     */
   private def removeFromIndexesMerge(idsDf: DataFrame): Unit = {
     if (useFts) {
@@ -1826,26 +1786,7 @@ final class Collection private (
     } else {
       writeDoclenFull(doclen().join(idsDf, Seq("id"), "left_anti"))
     }
-    maintainVectorIndex { ix =>
-      Stores.overwritePartition(spark, annDir, name,
-        ix.copy(buckets = ix.buckets.join(idsDf, Seq("id"), "left_anti")).toStoreFrame)
-    }
-    if (Stores.partitionExists(spark, ivfDir, name))
-      Stores.overwritePartition(spark, ivfDir, name,
-        Stores.readPartition(spark, ivfDir, name, Stores.ivfSchema)
-          .join(idsDf, Seq("id"), "left_anti"), sortBy = Seq("cluster"))
-    if (Stores.partitionExists(spark, pqDir, name))
-      Stores.overwritePartition(spark, pqDir, name,
-        Stores.readPartition(spark, pqDir, name, Stores.pqSchema)
-          .join(idsDf, Seq("id"), "left_anti"))
-    if (Stores.partitionExists(spark, ivfPqDir, name))
-      Stores.overwritePartition(spark, ivfPqDir, name,
-        Stores.readPartition(spark, ivfPqDir, name, Stores.ivfPqSchema)
-          .join(idsDf, Seq("id"), "left_anti"), sortBy = Seq("cluster"))
-    if (Stores.partitionExists(spark, minhashDir, name))
-      Stores.overwritePartition(spark, minhashDir, name,
-        Stores.readPartition(spark, minhashDir, name, Stores.minhashSchema)
-          .join(idsDf, Seq("id"), "left_anti"), sortBy = Seq("band", "bh"))
+    eachLiveIndex((k, _) => overwriteIndex(k, indexRowsWithout(k, idsDf)))
   }
 
   /** Index maintenance for a delete: gone-only deltas (no tokenize, no
@@ -1867,21 +1808,8 @@ final class Collection private (
           impactWatermarkRow(staleDf = true), sortBy = Seq("id"))
     }
     appendDoclenDelta(emptyFrame(Stores.doclenSchema), gone = Some(idsDf))
-    if (Stores.partitionExists(spark, annDir, name))
-      Stores.appendDelta(spark, annDir, name,
-        emptyFrame(Stores.annSchema), gone = Some(idsDf))
-    if (Stores.partitionExists(spark, ivfDir, name))
-      Stores.appendDelta(spark, ivfDir, name,
-        emptyFrame(Stores.ivfSchema), gone = Some(idsDf))
-    if (Stores.partitionExists(spark, pqDir, name))
-      Stores.appendDelta(spark, pqDir, name,
-        emptyFrame(Stores.pqSchema), gone = Some(idsDf))
-    if (Stores.partitionExists(spark, ivfPqDir, name))
-      Stores.appendDelta(spark, ivfPqDir, name,
-        emptyFrame(Stores.ivfPqSchema), gone = Some(idsDf))
-    if (Stores.partitionExists(spark, minhashDir, name))
-      Stores.appendDelta(spark, minhashDir, name,
-        emptyFrame(Stores.minhashSchema), gone = Some(idsDf))
+    eachLiveIndex((k, _) => Stores.appendDelta(spark, k.dir, name,
+      emptyFrame(k.schema), gone = Some(idsDf)))
   }
 
   // -------------------------------------------------------------------------
@@ -1959,74 +1887,29 @@ final class Collection private (
     Stores.writeCollStats(spark, statsDir, name, r.getLong(0), r.getDouble(1))
   }
 
-  /** Full rebuild of the persisted vector index (if one exists) with its
-    * stored plane parameters. A collection emptied of embedded docs loses
-    * its params row and the index is dropped (rebuild with
-    * `createVectorIndex` after re-adding).
+  /** Runs `f` on every index kind whose store is live, with the kind's
+    * row derivation. A store that exists without readable parameters
+    * (emptied of rows, or a crash residue) is dropped with its parameter
+    * tables instead, so the write returns it cleanly to "no index".
     */
-  private def refreshVectorIndexFull(): Unit = {
-    maintainVectorIndex { ix =>
-      Stores.overwritePartition(spark, annDir, name,
-        LshIndex.build(docs(), "id", "embedding",
-          ix.numTables, ix.numPlanes, ix.dim, ix.seed).toStoreFrame)
-    }
-    // IVF: re-assign everything against the STORED centroids (zero-shuffle
-    // scan); centroid retraining is compact()'s staleness policy, not the
-    // write path's job
-    if (Stores.partitionExists(spark, ivfDir, name))
-      ivfCentroidsRaw().foreach { cents =>
-        Stores.overwritePartition(spark, ivfDir, name,
-          graft.ext.Ivf.assign(docs(), cents), sortBy = Seq("cluster"))
+  private def eachLiveIndex(f: (IndexKind, DataFrame => DataFrame) => Unit): Unit =
+    indexKinds.foreach { k =>
+      if (Stores.partitionExists(spark, k.dir, name)) k.live() match {
+        case Some(rows) => f(k, rows)
+        case None => dropIndex(k)
       }
-    // PQ: re-encode everything against the STORED codebooks (zero-shuffle
-    // scan); codebook retraining is compact()'s staleness policy too
-    pqCodebook().foreach { cb =>
-      Stores.overwritePartition(spark, pqDir, name,
-        graft.ext.Pq.encode(docs(), cb))
     }
-    // IVF-PQ: one scan re-derives both the coarse list and the codes
-    ivfPqParts().foreach { case (cents, cb) =>
-      Stores.overwritePartition(spark, ivfPqDir, name,
-        ivfPqRows(docs(), cents, cb, ivfPqResidual()), sortBy = Seq("cluster"))
-    }
-  }
 
-  /** Delta-maintain the persisted vector index for an upserted batch: only
-    * the batch re-buckets (with the stored plane parameters), written as an
-    * O(batch) delta whose `gone` sidecar claims every batch id — same shape
-    * as the postings delta.
-    */
-  private def refreshVectorIndexDelta(batch: DataFrame, batchIds: DataFrame): Unit = {
-    maintainVectorIndex { ix =>
-      val added = Ann.lshTables(batch.filter($"embedding".isNotNull),
-        "id", "embedding", ix.numTables, ix.numPlanes, ix.dim, ix.seed)
-      Stores.appendDelta(spark, annDir, name,
-        ix.copy(buckets = added).toStoreFrame,
-        gone = Some(batchIds), sortBy = Seq("table", "bucket"))
-    }
-    // IVF: O(batch) delta — the batch re-assigns against the stored
-    // centroids (broadcast expression, zero shuffle); the gone sidecar
-    // claims every batch id so replaced/unembedded docs leave the index
-    if (Stores.partitionExists(spark, ivfDir, name))
-      ivfCentroidsRaw().foreach { cents =>
-        Stores.appendDelta(spark, ivfDir, name,
-          graft.ext.Ivf.assign(batch, cents),
-          gone = Some(batchIds), sortBy = Seq("cluster"))
-      }
-    // PQ: O(batch) delta — the batch re-encodes against the stored
-    // codebooks (codebooks ride in the expression, zero shuffle); same
-    // gone-sidecar contract
-    pqCodebook().foreach { cb =>
-      Stores.appendDelta(spark, pqDir, name,
-        graft.ext.Pq.encode(batch, cb), gone = Some(batchIds))
-    }
-    // IVF-PQ: O(batch) delta — coarse list + codes in one zero-shuffle scan
-    ivfPqParts().foreach { case (cents, cb) =>
-      Stores.appendDelta(spark, ivfPqDir, name,
-        ivfPqRows(batch, cents, cb, ivfPqResidual()),
-        gone = Some(batchIds), sortBy = Seq("cluster"))
-    }
-  }
+  private def dropIndex(k: IndexKind): Unit =
+    k.dirs.foreach(Stores.dropPartition(spark, _, name))
+
+  /** Overwrite kind `k`'s store with `rows`, in the kind's file layout. */
+  private def overwriteIndex(k: IndexKind, rows: DataFrame): Unit =
+    Stores.overwritePartition(spark, k.dir, name, rows, k.sortBy, k.rangeBy)
+
+  /** Kind `k`'s stored rows, minus those of `ids`. */
+  private def indexRowsWithout(k: IndexKind, ids: DataFrame): DataFrame =
+    Stores.readPartition(spark, k.dir, name, k.schema).join(ids, Seq("id"), "left_anti")
 
   // -------------------------------------------------------------------------
   // Read path (reference core.py:190-384)

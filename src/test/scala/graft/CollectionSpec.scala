@@ -504,18 +504,17 @@ class CollectionSpec extends AnyFunSuite {
       === Set("b", "d"))
     // staleness retrain: force delta mass past the base, compact() retrains
     // (params survive; the rebuilt index covers exactly the current docs)
-    spark.conf.set("spark.graft.store.directUpsertMaxBytes", "0")
-    spark.conf.set("spark.graft.compact.auto", "false")
-    (1 to 3).foreach(i => c.add(
-      Seq(s"novum verbum $i", s"aliud verbum $i"), ids = Some(Seq(s"n$i", s"m$i"))))
-    assert(Stores.deltaCount(spark, Stores.ivfDir(root), "test") > 0)
-    c.compact()
-    assert(Stores.deltaCount(spark, Stores.ivfDir(root), "test") === 0)
-    assert(c.ivfIndex().get.assignments.select("id").as[String].collect().toSet
-      === Set("b", "d", "n1", "m1", "n2", "m2", "n3", "m3"))
-    assert(c.vectorTopK(Seq("q" -> Seq(1f, 1f, 1f)), 2).count() === 2)
-    spark.conf.unset("spark.graft.store.directUpsertMaxBytes")
-    spark.conf.set("spark.graft.compact.auto", "true")
+    TestSpark.withConfs("spark.graft.store.directUpsertMaxBytes" -> "0",
+      "spark.graft.compact.auto" -> "false") {
+      (1 to 3).foreach(i => c.add(
+        Seq(s"novum verbum $i", s"aliud verbum $i"), ids = Some(Seq(s"n$i", s"m$i"))))
+      assert(Stores.deltaCount(spark, Stores.ivfDir(root), "test") > 0)
+      c.compact()
+      assert(Stores.deltaCount(spark, Stores.ivfDir(root), "test") === 0)
+      assert(c.ivfIndex().get.assignments.select("id").as[String].collect().toSet
+        === Set("b", "d", "n1", "m1", "n2", "m2", "n3", "m3"))
+      assert(c.vectorTopK(Seq("q" -> Seq(1f, 1f, 1f)), 2).count() === 2)
+    }
     // building LSH drops IVF (mutual exclusion), and vice versa
     c.createVectorIndex(numTables = 4, numPlanes = 2, dim = 3)
     assert(c.ivfIndex().isEmpty && c.vectorIndex().nonEmpty)
@@ -554,18 +553,17 @@ class CollectionSpec extends AnyFunSuite {
       === Set("b", "d"))
     // staleness retrain: force delta mass past the base, compact() retrains
     // codebooks (params survive; the rebuilt codes cover the current docs)
-    spark.conf.set("spark.graft.store.directUpsertMaxBytes", "0")
-    spark.conf.set("spark.graft.compact.auto", "false")
-    (1 to 3).foreach(i => c.add(
-      Seq(s"novum verbum $i", s"aliud verbum $i"), ids = Some(Seq(s"n$i", s"m$i"))))
-    assert(Stores.deltaCount(spark, Stores.pqDir(root), "test") > 0)
-    c.compact()
-    assert(Stores.deltaCount(spark, Stores.pqDir(root), "test") === 0)
-    assert(c.pqIndex().get._2.select("id").as[String].collect().toSet
-      === Set("b", "d", "n1", "m1", "n2", "m2", "n3", "m3"))
-    assert(c.vectorTopK(Seq("q" -> Seq(1f, 1f, 1f)), 2).count() === 2)
-    spark.conf.unset("spark.graft.store.directUpsertMaxBytes")
-    spark.conf.set("spark.graft.compact.auto", "true")
+    TestSpark.withConfs("spark.graft.store.directUpsertMaxBytes" -> "0",
+      "spark.graft.compact.auto" -> "false") {
+      (1 to 3).foreach(i => c.add(
+        Seq(s"novum verbum $i", s"aliud verbum $i"), ids = Some(Seq(s"n$i", s"m$i"))))
+      assert(Stores.deltaCount(spark, Stores.pqDir(root), "test") > 0)
+      c.compact()
+      assert(Stores.deltaCount(spark, Stores.pqDir(root), "test") === 0)
+      assert(c.pqIndex().get._2.select("id").as[String].collect().toSet
+        === Set("b", "d", "n1", "m1", "n2", "m2", "n3", "m3"))
+      assert(c.vectorTopK(Seq("q" -> Seq(1f, 1f, 1f)), 2).count() === 2)
+    }
     // mutual exclusion across all three kinds
     c.createVectorIndex(numTables = 4, numPlanes = 2, dim = 3)
     assert(c.pqIndex().isEmpty && c.vectorIndex().nonEmpty)
@@ -630,13 +628,105 @@ class CollectionSpec extends AnyFunSuite {
     Stores.dropPartition(spark, Stores.ivfCentDir(root), "test")
     assert(c.ivfPqIndex().isEmpty)
     assert(c.vectorTopKAuto(Seq("q" -> Seq(1f, 1f, 1f)), 2).count() === 2) // exact arm, no throw
-    spark.conf.set("spark.graft.compact.auto", "false")
-    c.compact()
-    spark.conf.set("spark.graft.compact.auto", "true")
+    TestSpark.withConfs("spark.graft.compact.auto" -> "false")(c.compact())
     assert(!Stores.partitionExists(spark, Stores.ivfPqDir(root), "test"))
     assert(!Stores.partitionExists(spark, Stores.pqBookDir(root), "test"))
     c.deleteAll()
     assert(c.ivfPqIndex().isEmpty)
+  }
+
+  test("an LSH store without embedded docs takes the exact fallback") {
+    val q = Seq("q" -> Seq(1f, 1f, 1f))
+    // no embedder: createVectorIndex writes an LSH store with no rows
+    val root = freshRoot()
+    val plain = coll(root, "plain")
+    plain.add(Seq("Lorem ipsum dolor", "sit amet"), ids = Some(Seq("a", "b")))
+    plain.createVectorIndex(numTables = 4, numPlanes = 2, dim = 3)
+    assert(plain.vectorIndex().isEmpty)
+    assert(plain.vectorTopKAuto(q, 2).count() === 0)
+    assert(plain.vectorTopKWhere(q, 2, Map("lang" -> "en")).count() === 0)
+    assert(Collection.vectorSearchAll(spark, root, q, 2).count() === 0)
+    // LSH over two embedded docs, then a merge-path delete of both
+    val c = coll(embedder = Some(OpenDictEmbedder))
+    c.add(Seq("Lorem ipsum dolor", "sit amet"), ids = Some(Seq("a", "b")))
+    c.createVectorIndex(numTables = 4, numPlanes = 2, dim = 3)
+    assert(c.vectorIndex().nonEmpty)
+    c.delete(Seq("a", "b"))
+    assert(c.vectorIndex().isEmpty)
+    assert(c.vectorTopKAuto(q, 2).count() === 0)
+  }
+
+  test("index maintenance: every kind's stored rows equal a fresh derivation") {
+    import graft.index.Stores
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col => fcol, lit}
+    def stored(c: Collection, dir: String => String, schema: org.apache.spark.sql.types.StructType) =
+      Stores.readPartition(spark, dir(c.root), c.name, schema)
+    // (kind, build, (stored rows, rows derived from docs() under the stored parameters))
+    val kinds: Seq[(String, Collection => Unit, Collection => (DataFrame, DataFrame))] = Seq(
+      ("lsh", _.createVectorIndex(numTables = 4, numPlanes = 2, dim = 3), { c =>
+        val ix = c.vectorIndex().get
+        (stored(c, Stores.annDir, Stores.annSchema), graft.ext.LshIndex.build(c.docs(), "id",
+          "embedding", ix.numTables, ix.numPlanes, ix.dim, ix.seed).toStoreFrame)
+      }),
+      ("ivf", _.createVectorIndex(kind = "ivf", numCentroids = 2, iters = 3,
+          maxSample = 1000, nprobe = 2), { c =>
+        (stored(c, Stores.ivfDir, Stores.ivfSchema),
+          graft.ext.Ivf.assign(c.docs(), c.ivfIndex().get.centroids))
+      }),
+      ("pq", _.createVectorIndex(kind = "pq", m = 3, numCentroids = 4, iters = 3,
+          maxSample = 1000), { c =>
+        (stored(c, Stores.pqDir, Stores.pqSchema), graft.ext.Pq.encode(c.docs(), c.pqIndex().get._1))
+      }),
+      ("ivfpq", _.createVectorIndex(kind = "ivfpq", numCentroids = 2, nprobe = 2, m = 3,
+          iters = 3, maxSample = 1000), { c =>
+        val (cents, cb, _, _, _) = c.ivfPqIndex().get
+        (stored(c, Stores.ivfPqDir, Stores.ivfPqSchema),
+          graft.ext.Ivf.assign(c.docs(), cents)
+            .join(c.docs().select(fcol("id"), fcol("embedding")), Seq("id"))
+            .select(fcol("id"), fcol("cluster"), graft.ext.Pq.encodeFor(fcol("embedding"),
+              fcol("cluster"), cents, cb, c.ivfPqResidual()).as("codes")))
+      }))
+    def minhash(c: Collection): (DataFrame, DataFrame) = {
+      val (n, bands, rpb) = c.dedupIndex().get
+      (stored(c, Stores.minhashDir, Stores.minhashSchema),
+        graft.ext.Dedup.bandedSignatureRows(c.docs(), "id", "content", n, bands, rpb)
+          .withColumn("n", lit(n)).withColumn("bands", lit(bands))
+          .withColumn("rows_per_band", lit(rpb)))
+    }
+    def sorted(df: DataFrame, cols: Seq[String]) =
+      df.select(cols.map(fcol): _*).collect().map(_.toString).sorted.toSeq
+    def docs(ids: Seq[String], tag: String) = ids.map(i => s"$tag text for $i, $tag words")
+    for ((kind, build, pair) <- kinds; deltaPath <- Seq(false, true)) {
+      def check(c: Collection, step: String): Unit =
+        for ((store, (got, want)) <- Seq(kind -> pair(c), "minhash" -> minhash(c))) {
+          val expected = sorted(want, got.columns.toSeq)
+          assert(expected.nonEmpty, s"$kind/$store deltaPath=$deltaPath after $step")
+          assert(sorted(got, got.columns.toSeq) === expected,
+            s"$kind/$store deltaPath=$deltaPath after $step")
+        }
+      val c = coll(embedder = Some(OpenDictEmbedder))
+      val first = (0 until 8).map(i => s"d$i")
+      c.add(docs(first, "base"), ids = Some(first))
+      build(c)
+      c.createDedupIndex()
+      check(c, "build")
+      val confs = if (deltaPath) Seq("spark.graft.store.directUpsertMaxBytes" -> "0",
+        "spark.graft.compact.auto" -> "false") else Nil
+      TestSpark.withConfs(confs: _*) {
+        c.add(docs(Seq("n0", "n1", "n2"), "added"), ids = Some(Seq("n0", "n1", "n2")))
+        check(c, "add")
+        c.update(Seq("d1", "d2", "n0"), docs(Seq("d1", "d2", "n0"), "updated"))
+        check(c, "update")
+        c.delete(Seq("d3", "n1"))
+        check(c, "delete")
+        c.add(docs(Seq("m0", "d3"), "late"), ids = Some(Seq("m0", "d3")))
+        check(c, "second add")
+        assert(deltaPath == Stores.deltaCount(spark, Stores.docsDir(c.root), c.name) > 0)
+        c.compact()
+        check(c, "compact")
+      }
+    }
   }
 
   test("fts and vector coexist") {
@@ -1283,6 +1373,18 @@ class CollectionSpec extends AnyFunSuite {
     }
   }
 
+  test("an emptied dedup index is dropped by the next write") {
+    import graft.index.Stores
+    val root = freshRoot()
+    val c = coll(root)
+    c.add(Seq("alpha beta gamma delta", "zeta eta theta iota"), ids = Some(Seq("a", "b")))
+    c.createDedupIndex()
+    c.delete(Seq("a", "b"))
+    c.add(Seq("kappa lambda mu nu"), ids = Some(Seq("c")))
+    assert(!Stores.partitionExists(spark, Stores.minhashDir(root), "test"))
+    assert(c.dedupIndex().isEmpty)
+  }
+
   test("phraseSearch: foldAccents collection matches folded phrase both directions") {
     val root = freshRoot()
     val c = Collection(spark, root, "folded", foldAccents = true)
@@ -1316,26 +1418,25 @@ class CollectionSpec extends AnyFunSuite {
     assert(math.abs(hits.find(_._2 == "a").filter(_._1 == "q2").map(_._3).getOrElse(
       hits.find(_._1 == "q2").get._3) - 17.0 / 19.0) < 1e-9)
     // DELTA maintenance: force the delta path, add a near-dup of docA
-    spark.conf.set("spark.graft.store.directUpsertMaxBytes", "0")
-    spark.conf.set("spark.graft.compact.auto", "false")
-    c.add(Seq(docB), ids = Some(Seq("b")))
-    assert(Stores.deltaCount(spark, Stores.minhashDir(root), "test") > 0)
-    val hits2 = c.nearDuplicates(Seq("q" -> docA), threshold = 0.8)
-      .select("id").as[String].collect().toSet
-    assert(hits2 === Set("a", "b")) // found via the delta, no rebuild
-    // compact folds the delta; probe result unchanged
-    c.compact()
-    assert(Stores.deltaCount(spark, Stores.minhashDir(root), "test") === 0)
-    assert(c.nearDuplicates(Seq("q" -> docA), threshold = 0.8).count() === 2)
-    // replacing a doc's content re-bands it (gone sidecar claims the id)
-    c.update(Seq("b"), Seq(distinctDoc))
-    assert(c.nearDuplicates(Seq("q" -> docA), threshold = 0.8)
-      .select("id").as[String].collect().toSet === Set("a"))
-    // delete drops the doc from the index
-    c.delete(Seq("a"))
-    assert(c.nearDuplicates(Seq("q" -> docA), threshold = 0.8).count() === 0)
-    spark.conf.unset("spark.graft.store.directUpsertMaxBytes")
-    spark.conf.set("spark.graft.compact.auto", "true")
+    TestSpark.withConfs("spark.graft.store.directUpsertMaxBytes" -> "0",
+      "spark.graft.compact.auto" -> "false") {
+      c.add(Seq(docB), ids = Some(Seq("b")))
+      assert(Stores.deltaCount(spark, Stores.minhashDir(root), "test") > 0)
+      val hits2 = c.nearDuplicates(Seq("q" -> docA), threshold = 0.8)
+        .select("id").as[String].collect().toSet
+      assert(hits2 === Set("a", "b")) // found via the delta, no rebuild
+      // compact folds the delta; probe result unchanged
+      c.compact()
+      assert(Stores.deltaCount(spark, Stores.minhashDir(root), "test") === 0)
+      assert(c.nearDuplicates(Seq("q" -> docA), threshold = 0.8).count() === 2)
+      // replacing a doc's content re-bands it (gone sidecar claims the id)
+      c.update(Seq("b"), Seq(distinctDoc))
+      assert(c.nearDuplicates(Seq("q" -> docA), threshold = 0.8)
+        .select("id").as[String].collect().toSet === Set("a"))
+      // delete drops the doc from the index
+      c.delete(Seq("a"))
+      assert(c.nearDuplicates(Seq("q" -> docA), threshold = 0.8).count() === 0)
+    }
     // MERGE path maintenance (small partition rewrite) also re-bands
     c.add(Seq(docA), ids = Some(Seq("a2")))
     val probe = c.nearDuplicates(Seq("q" -> docA), threshold = 0.8)

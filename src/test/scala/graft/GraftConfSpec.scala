@@ -17,16 +17,11 @@ class GraftConfSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def withConf[T](key: String, v: String)(f: => T): T = {
-    spark.conf.set(key, v)
-    try f finally spark.conf.unset(key)
-  }
-
   private def freshRoot(): String =
     java.nio.file.Files.createTempDirectory("graft-conf-").toString
 
   private def assertRejected(key: String, value: String)(f: => Unit): Unit = {
-    val e = withConf(key, value)(intercept[IllegalArgumentException](f))
+    val e = TestSpark.withConfs(key -> value)(intercept[IllegalArgumentException](f))
     assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$value'"), e.getMessage)
   }
 
@@ -64,8 +59,8 @@ class GraftConfSpec extends AnyFunSuite {
       AnnCatalog.LshRegistered(LshIndex.build(corpus, numTables = 4, numPlanes = 2, dim = 4))))
     try {
       assert(rewritten())
-      assert(withConf("spark.graft.ann.rewrite", "TRUE")(rewritten()))
-      assert(!withConf("spark.graft.ann.rewrite", "False")(rewritten()))
+      assert(TestSpark.withConfs("spark.graft.ann.rewrite" -> "TRUE")(rewritten()))
+      assert(!TestSpark.withConfs("spark.graft.ann.rewrite" -> "False")(rewritten()))
       assertRejected("spark.graft.ann.rewrite", "yes")(rewritten())
     } finally AnnCatalog.clear()
   }

@@ -10,11 +10,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class R20OptSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def withConf[T](key: String, v: String)(f: => T): T = {
-    spark.conf.set(key, v)
-    try f finally spark.conf.unset(key)
-  }
-
   private def freshRoot(): String =
     java.nio.file.Files.createTempDirectory("graft-r20-").toString
 
@@ -58,8 +53,8 @@ class R20OptSpec extends AnyFunSuite {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     }
     lifecycle(deltas = false) // small collection: every upsert merges directly
-    withConf("spark.graft.compact.auto", "false")(
-      withConf("spark.graft.store.directUpsertMaxBytes", "0")(lifecycle(deltas = true)))
+    TestSpark.withConfs("spark.graft.compact.auto" -> "false",
+      "spark.graft.store.directUpsertMaxBytes" -> "0")(lifecycle(deltas = true))
   }
 
   test("streamIngest and addDf land equal content and postings") {
@@ -102,7 +97,7 @@ class R20OptSpec extends AnyFunSuite {
     val driverArm = graft.ext.Ivf.trainCentroids(corpus, k = 5, iters = 4,
       maxSample = 60, seed = 1L)
     // 60 vecs x 8 dims x 4B = 1920 bytes > 1-byte budget -> distributed arm
-    val distArm = withConf("spark.graft.ivf.driverTrainMaxBytes", "1")(
+    val distArm = TestSpark.withConfs("spark.graft.ivf.driverTrainMaxBytes" -> "1")(
       graft.ext.Ivf.trainCentroids(corpus, k = 5, iters = 4,
         maxSample = 60, seed = 1L))
     assert(driverArm.size == distArm.size)

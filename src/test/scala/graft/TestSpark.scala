@@ -15,6 +15,19 @@ object TestSpark {
     s
   }
 
+  /** Runs `body` with the session confs `kvs` set, then restores each
+    * key's previous value (or unsets it), also when `body` throws.
+    */
+  def withConfs[T](kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.reverse.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** (action name, executed plan) of every Dataset action `f` runs, in
     * order. The listener is fed asynchronously but in order, so a marker
     * action's event arriving proves every earlier event has.
