@@ -36,14 +36,16 @@ private[graft] case class DocRow(id: String, content: String,
   * rewrite the partition via write-temp + swap. The skinny doclen store
   * exists so the per-upsert stats refresh never rescans postings.
   *
-  * The five id-keyed secondary index stores (LSH, IVF, PQ, IVF-PQ and the
-  * MinHash dedup index) are each described once as an `IndexKind`; one
-  * loop keeps every live kind current on each write path (full build,
-  * merge rewrite, delta append, delete, compaction), deriving a batch's
-  * rows under the kind's stored parameters. A store that exists but has
-  * no readable parameters (emptied of rows, or a crash residue) is dropped
-  * by the next write. Postings, doclen, collstats and the impact meta keep
-  * their own maintenance.
+  * Every id-keyed store — docs, postings, doclen and the five secondary
+  * indexes (LSH, IVF, PQ, IVF-PQ and the MinHash dedup index) — is
+  * described once as a `StoreKind`: its dirs, schema, key and row
+  * derivation from a mutation's [[Batch]]. A mutation picks its shape once
+  * (full write, merge rewrite or delta append) and one loop writes every
+  * live kind, docs first, like the reference's delete-stale-then-insert
+  * inside one write (core.py:505-514); the collstats row and the impact
+  * meta follow the loop. A store that exists but has no readable
+  * parameters (emptied of rows, or a crash residue) is dropped by the
+  * next write.
   */
 final class Collection private (
     val spark: SparkSession,
@@ -68,56 +70,89 @@ final class Collection private (
   private val minhashDir = Stores.minhashDir(root)
   private val impactMetaDir = Stores.impactMetaDir(root)
 
-  /** Every store this collection keeps a partition in — what
-    * [[compact]]/[[maintain]] sweep and [[deleteAll]] drops. */
-  private val storeDirs = Seq(docsDir, postingsDir, statsDir, annDir,
-    doclenDir, ivfDir, ivfCentDir, pqDir, pqBookDir, ivfPqDir, minhashDir,
-    impactMetaDir)
-
-  /** Postings sort order within each file of a full write: by term, then
-    * tf, so a certified top-k's `term = t AND tf > bound` read skips the
-    * hot term's low-tf row groups. */
-  private val postingsOrder = Seq("term", "tf")
-
-  /** One id-keyed secondary index store, described once for every write
-    * path. `dirs` is the rows store followed by the parameter tables the
-    * kind owns; `sortBy`/`rangeBy` give the rows' file layout; `live`
-    * returns the kind's row derivation from any frame of docs under its
-    * STORED parameters, None while the rows store is absent or holds no
-    * readable parameters. The kind's accessor and
-    * [[hasPersistedVectorIndex]] use the same test.
+  /** One id-keyed store, described once for every write path. `dirs` is
+    * the rows store followed by the parameter tables the kind owns; `key`
+    * is the rows' file layout — each file holds a disjoint key range,
+    * sorted by `order` (default: the key); `dense` = the kind's rows cover
+    * every id of a batch's frame, so an upsert delta needs no gone
+    * sidecar. `live` returns the kind's row derivation from a [[Batch]]
+    * under its STORED parameters, None while the kind is absent (an index
+    * never built, postings without FTS) or its store holds no readable
+    * parameters. The index accessors and [[hasPersistedVectorIndex]] use
+    * the same test. `stored` reads the current rows.
     */
-  private final class IndexKind(val dirs: Seq[String], val schema: StructType,
-                                val sortBy: Seq[String], val rangeBy: Seq[String],
-                                val live: () => Option[DataFrame => DataFrame]) {
+  private class StoreKind(val dirs: Seq[String], val schema: StructType,
+                          val key: Seq[String], val live: () => Option[Batch => DataFrame],
+                          order: Seq[String] = Nil, val dense: Boolean = false) {
     def dir: String = dirs.head
+    def sortBy: Seq[String] = if (order.isEmpty) key else order
+    def stored(): DataFrame = Stores.readPartition(spark, dir, name, schema)
   }
 
-  private val lshKind = new IndexKind(Seq(annDir), Stores.annSchema,
-    sortBy = Seq("table", "bucket"), rangeBy = Seq("table", "bucket"),
-    live = () => lshParams().map { case (t, p, d, s) => lshRows(t, p, d, s)(_) })
+  private val docsKind = new StoreKind(Seq(docsDir), Stores.docsSchema,
+    key = Seq("id"), live = () => Some(_.frame), dense = true)
+  // sorted by term, then tf, so a certified top-k's `term = t AND tf >
+  // bound` read skips the hot term's low-tf row groups
+  private val postingsKind = new StoreKind(Seq(postingsDir), Stores.postingsSchema,
+    key = Seq("term"), live = () => if (useFts) Some(_.postings) else None,
+    order = Seq("term", "tf"))
+  private val doclenKind = new StoreKind(Seq(doclenDir), Stores.doclenSchema,
+    key = Seq("id"), dense = true, live = () => Some(b =>
+      if (useFts) doclenOfPostings(b.frame, b.postings, hintAgg = b.smallIds)
+      else doclenOfBatch(b.frame))) {
+    override def stored(): DataFrame = doclen()
+  }
+  private val lshKind = new StoreKind(Seq(annDir), Stores.annSchema,
+    key = Seq("table", "bucket"),
+    live = () => lshParams().map { case (t, p, d, s) => b => lshRows(t, p, d, s)(b.frame) })
   // IVF re-assigns and PQ re-encodes against the STORED centroids/codebooks
   // (zero-shuffle scans); retraining is compact()'s staleness policy
-  private val ivfKind = new IndexKind(Seq(ivfDir, ivfCentDir), Stores.ivfSchema,
-    sortBy = Seq("cluster"), rangeBy = Nil,
+  private val ivfKind = new StoreKind(Seq(ivfDir, ivfCentDir), Stores.ivfSchema,
+    key = Seq("cluster"),
     live = () =>
       if (!Stores.partitionExists(spark, ivfDir, name)) None
-      else ivfCentroidsRaw().map(cents => graft.ext.Ivf.assign(_, cents)))
-  private val pqKind = new IndexKind(Seq(pqDir, pqBookDir), Stores.pqSchema,
-    sortBy = Nil, rangeBy = Nil,
-    live = () => pqCodebook().map(cb => graft.ext.Pq.encode(_, cb)))
-  private val ivfPqKind = new IndexKind(Seq(ivfPqDir, ivfCentDir, pqBookDir),
-    Stores.ivfPqSchema, sortBy = Seq("cluster"), rangeBy = Nil,
+      else ivfCentroidsRaw().map(cents => b => graft.ext.Ivf.assign(b.frame, cents)))
+  private val pqKind = new StoreKind(Seq(pqDir, pqBookDir), Stores.pqSchema,
+    key = Seq("id"),
+    live = () => pqCodebook().map(cb => b => graft.ext.Pq.encode(b.frame, cb)))
+  private val ivfPqKind = new StoreKind(Seq(ivfPqDir, ivfCentDir, pqBookDir),
+    Stores.ivfPqSchema, key = Seq("cluster"),
     live = () => ivfPqParts().map { case (cents, cb) =>
-      ivfPqRows(_, cents, cb, ivfPqResidual()) })
-  private val minhashKind = new IndexKind(Seq(minhashDir), Stores.minhashSchema,
-    sortBy = Seq("band", "bh"), rangeBy = Nil,
+      b => ivfPqRows(b.frame, cents, cb, ivfPqResidual()) })
+  private val minhashKind = new StoreKind(Seq(minhashDir), Stores.minhashSchema,
+    key = Seq("band", "bh"),
     live = () => dedupParams().map { case (n, bands, rpb) =>
-      dedupIndexRows(_, n, bands, rpb) })
+      b => dedupIndexRows(b.frame, n, bands, rpb) })
 
   /** The mutually exclusive vector-index kinds ([[createVectorIndex]]). */
   private val vectorKinds = Seq(lshKind, ivfKind, pqKind, ivfPqKind)
-  private val indexKinds = vectorKinds :+ minhashKind
+  /** Every kind, in write order: docs first, then what derives from it. */
+  private val kinds = Seq(docsKind, postingsKind, doclenKind) ++ vectorKinds :+ minhashKind
+
+  /** Every store this collection keeps a partition in — what
+    * [[compact]]/[[maintain]] sweep and [[deleteAll]] drops. */
+  private val storeDirs = (kinds.flatMap(_.dirs) ++ Seq(statsDir, impactMetaDir)).distinct
+
+  /** One mutation's input, shared by every kind's derivation: `frame` holds
+    * the new docs (none for a delete), `ids` every id the mutation claims
+    * — broadcast-hinted in `antiIds` for the merge anti-joins when
+    * `smallIds` — and `bare` says some claimed ids have no row in `frame`.
+    * `est` is the frame's size estimate, None when no size hints apply.
+    * The frame is tokenized once, on first use, for postings and doclen
+    * alike; [[writeKinds]] unpersists it.
+    */
+  private final class Batch(val frame: DataFrame, val ids: DataFrame,
+                            val smallIds: Boolean, val est: Option[BigInt],
+                            val bare: Boolean) {
+    def antiIds: DataFrame = if (smallIds) broadcast(ids) else ids
+    private var tokenized = false
+    lazy val postings: DataFrame = {
+      val p = PostingsIndex.build(frame, foldAccents)
+      // a delete's frame holds no rows: nothing to cache
+      if (bare) p else { tokenized = true; p.persist() }
+    }
+    def release(): Unit = if (tokenized) postings.unpersist()
+  }
 
   /** This collection's documents (partition-pruned read). */
   def docs(): DataFrame = Stores.readPartition(spark, docsDir, name, Stores.docsSchema)
@@ -245,14 +280,14 @@ final class Collection private (
     allIds
   }
 
-  /** Shared upsert core: lands an already last-wins-deduped batch in the
-    * docs store, then maintains postings / stats / ann from the batch alone.
-    * Three write shapes, picked by partition size (a filesystem stat, no
+  /** Shared upsert core: lands an already last-wins-deduped batch in every
+    * store through [[writeKinds]]; only the batch derives rows. Three write
+    * shapes, picked by the docs partition's size (a filesystem stat, no
     * job):
     *
     *   - new collection → full base write;
     *   - partition ≤ [[directUpsertMaxBytes]] → DIRECT MERGE rewrite (one
-    *     job rewrites the small partition; every read stays
+    *     job per store rewrites the small partition; every read stays
     *     resolution-free) — rewriting a small store is cheaper than making
     *     all subsequent reads resolve deltas;
     *   - otherwise → O(batch) DELTA APPEND (the base is never rewritten;
@@ -264,7 +299,6 @@ final class Collection private (
     */
   private def upsert(batch0: DataFrame, idsHint: Option[DataFrame] = None,
                      batchHints: Boolean = true): Unit = {
-    val wasEmpty = !Stores.partitionExists(spark, docsDir, name)
     // Spread a narrow batch across the session's cores before caching
     // (r19 opt, guide §2): AQE coalesces the last-wins window's shuffle by
     // BYTES, so a few-MB batch caches as ~1 partition and the tokenize-
@@ -294,46 +328,32 @@ final class Collection private (
     // 4-core session, ~6% slower end to end) where the per-write probe of
     // the tokenized frame sees the real size.
     val batchEst = if (batchHints) Some(est) else None
+    val shape = writeShape()
     val batch = spread.persist()
-    try {
-      if (wasEmpty) {
-        Stores.overwritePartition(spark, docsDir, name, batch,
-          sortBy = Seq("id"), rangeBy = Seq("id"), sizeHintBytes = batchEst)
-        refreshIndexesFull(batch, batchEst) // tokenize from the cache, not a store re-read
-        // first ingest creates the collection: persist the open-time flags
-        // that change what the stored bytes mean, so mismatched re-opens
-        // throw at Collection() instead of silently mis-querying. Written
-        // LAST — a failed first ingest must not leave a manifest pinning
-        // flags for a collection that holds no data (a crash before this
-        // line degrades to a pre-manifest store: validation skipped)
-        Stores.writeManifest(spark, root, name,
-          Stores.Manifest(useFts, foldAccents))
-      } else {
-        val (baseBytes, deltaBytes) = Stores.segmentBytes(spark, docsDir, name)
-        // callers with a known-small (driver-side) id set mark it via
-        // idsHint; the hint is applied HERE, per join, only where the ids
-        // are the build side (a left_anti's right). Otherwise the unhinted
-        // frame lets AQE pick the join strategy.
-        val smallIds = idsHint.isDefined
-        val rawIds = idsHint.getOrElse(batch.select("id"))
-        val batchIds = if (smallIds) broadcast(rawIds) else rawIds
-        if (baseBytes + deltaBytes <= directUpsertMaxBytes) {
-          // direct merge (also folds any accumulated deltas back flat)
-          val merged = docs().join(batchIds, Seq("id"), "left_anti").unionByName(batch)
-          // merged ≤ current segments + batch: one FS stat + the estimate
-          // already in hand replace a per-write optimizer stats probe over
-          // the resolve∪anti-join∪batch plan
-          Stores.overwritePartition(spark, docsDir, name, merged,
-            sortBy = Seq("id"), rangeBy = Seq("id"),
-            sizeHintBytes = batchEst.map(BigInt(baseBytes) + BigInt(deltaBytes) + _))
-          refreshIndexesMerge(batch, rawIds, smallIds, batchEst)
-        } else {
-          Stores.appendDelta(spark, docsDir, name, batch, sortBy = Seq("id"))
-          refreshIndexesDelta(batch)
-          maybeCompact()
-        }
-      }
-    } finally batch.unpersist()
+    // callers with a known-small (driver-side) id set mark it via idsHint;
+    // the hint is applied per join, only where the ids are the build side
+    // (a left_anti's right). Otherwise the unhinted frame lets AQE pick the
+    // join strategy.
+    try writeKinds(shape, new Batch(batch, idsHint.getOrElse(batch.select("id")),
+      smallIds = idsHint.isDefined, est = batchEst, bare = false))
+    finally batch.unpersist()
+    // first ingest creates the collection: persist the open-time flags that
+    // change what the stored bytes mean, so mismatched re-opens throw at
+    // Collection() instead of silently mis-querying. Written LAST — a failed
+    // first ingest must not leave a manifest pinning flags for a collection
+    // that holds no data (a crash before this line degrades to a
+    // pre-manifest store: validation skipped)
+    if (shape == Collection.FullWrite)
+      Stores.writeManifest(spark, root, name, Stores.Manifest(useFts, foldAccents))
+  }
+
+  /** How the next mutation lands, from the docs partition's size (a
+    * filesystem stat, no job): see [[upsert]]. */
+  private def writeShape(): Collection.Shape = {
+    val (base, deltas) = Stores.segmentBytes(spark, docsKind.dir, name)
+    if (!Stores.partitionExists(spark, docsKind.dir, name)) Collection.FullWrite
+    else if (base + deltas <= directUpsertMaxBytes) Collection.MergeWrite
+    else Collection.DeltaWrite
   }
 
   /** Partitions at or below this size take the direct merge-rewrite path;
@@ -534,10 +554,10 @@ final class Collection private (
       .parquet(docsDir)
       .select(col("collection"), col("id"))
     val deltaScans = collNames
-      .map(n => n -> Stores.deltaDataDirs(spark, docsDir, n))
+      .map(n => n -> Stores.deltaDataFiles(spark, docsDir, n))
       .filter(_._2.nonEmpty)
-      .map { case (n, dirs) =>
-        spark.read.schema(Stores.docsSchema).parquet(dirs: _*)
+      .map { case (n, files) =>
+        spark.read.schema(Stores.docsSchema).parquet(files: _*)
           .select(lit(n).as("collection"), col("id"))
       }
     val touchedColls = deltaScans.foldLeft(baseScan)(_ unionByName _)
@@ -548,46 +568,33 @@ final class Collection private (
 
   /** Removes `idsDf`'s ids from collection `coll` of this root: its docs
     * and every index. The per-collection body of [[delete]], shared with
-    * [[dedup]], which removes from its own collection only.
+    * [[dedup]], which removes from its own collection only. A small
+    * partition takes an anti-join rewrite (reads stay flat), a large one
+    * gone-only deltas (O(ids) bytes, the base is never rewritten).
     */
   private def removeFrom(coll: String, idsDf: DataFrame): Unit = {
     // useFts is decided PER TARGET collection (postings partition exists),
     // not inherited from the caller — a useFts=false caller must not
     // leave sibling collections' postings stale.
-    val targetFts = Stores.partitionExists(spark, Stores.postingsDir(root), coll)
-    // foldAccents=false: the delete path never re-tokenizes an FTS
-    // collection (stats derive from postings), and for non-FTS targets
-    // avg_dl is informational only
+    val targetFts = Stores.partitionExists(spark, postingsKind.dir, coll)
+    // foldAccents=false: a delete tokenizes nothing (its batch has no new
+    // docs), and for non-FTS targets avg_dl is informational only
     val self = new Collection(spark, root, coll, None, targetFts, foldAccents = false)
-    val (baseBytes, deltaBytes) = Stores.segmentBytes(spark, docsDir, coll)
-    if (baseBytes + deltaBytes <= directUpsertMaxBytes) {
-      // small partition: direct anti-join rewrite, reads stay flat; the
-      // segment bytes already in hand bound the anti-join's output — no
-      // per-write optimizer stats probe
-      Stores.overwritePartition(spark, docsDir, coll,
-        Stores.readPartition(spark, docsDir, coll, Stores.docsSchema)
-          .join(broadcast(idsDf), Seq("id"), "left_anti"),
-        sortBy = Seq("id"), rangeBy = Seq("id"),
-        sizeHintBytes = Some(BigInt(baseBytes) + BigInt(deltaBytes)))
-      self.removeFromIndexesMerge(broadcast(idsDf))
-    } else {
-      // gone-only delta: O(ids) bytes, the base is never rewritten
-      Stores.appendDelta(spark, docsDir, coll,
-        emptyFrame(Stores.docsSchema), gone = Some(idsDf))
-      self.removeFromIndexes(idsDf)
-      self.maybeCompact()
-    }
+    val noDocs = spark.createDataFrame(java.util.List.of[Row](), Stores.docsSchema)
+    // est 0: a pure anti-join can only shrink each store, so its segment
+    // bytes bound the rewrite — no per-write optimizer stats probe. The
+    // collection holds docs (delete and dedup only remove from those), so
+    // the shape is a merge or a delta.
+    self.writeKinds(self.writeShape(), new self.Batch(noDocs, idsDf, smallIds = true,
+      est = Some(BigInt(0)), bare = true))
   }
-
-  private def emptyFrame(schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
   /** Fold any accumulated delta segments of this collection's stores back
     * into flat bases — O(collection), run off the ingest path (or let the
     * [[Stores.MaxDeltas]] policy trigger it).
     */
   def compact(): Unit = {
-    def outgrown(k: IndexKind) = {
+    def outgrown(k: StoreKind) = {
       val (b, d) = Stores.segmentBytes(spark, k.dir, name)
       b > 0 && d * 2 > b
     }
@@ -609,25 +616,20 @@ final class Collection private (
     if (Stores.partitionExists(spark, ivfPqDir, name) &&
         (!Stores.partitionExists(spark, ivfCentDir, name) ||
          !Stores.partitionExists(spark, pqBookDir, name)))
-      dropIndex(ivfPqKind)
+      dropKind(ivfPqKind)
     val ivfPqStale = outgrown(ivfPqKind)
-    Stores.compactPartition(spark, docsDir, name, Stores.docsSchema,
-      sortBy = Seq("id"), rangeBy = Seq("id"))
-    Stores.compactPartition(spark, postingsDir, name, Stores.postingsSchema,
-      sortBy = postingsOrder, rangeBy = Seq("term"))
-    Stores.compactPartition(spark, doclenDir, name, Stores.doclenSchema)
-    // fold every index store except the stale ones retrained below
+    // fold every store except the stale indexes retrained below
     val retrained = Seq(ivfKind -> ivfStale, pqKind -> pqStale, ivfPqKind -> ivfPqStale)
       .collect { case (k, true) => k }
-    indexKinds.filterNot(retrained.contains).foreach(k =>
-      Stores.compactPartition(spark, k.dir, name, k.schema, k.sortBy, k.rangeBy))
+    kinds.filterNot(retrained.contains).foreach(k =>
+      Stores.compactPartition(spark, k.dir, name, k.schema, k.sortBy, k.key))
     if (ivfStale) ivfParams().foreach { case (nprobe, iters, maxSample, seed) =>
       val k = ivfCentroidsRaw().map(_.size).getOrElse(256)
       // a collection emptied of embedded docs can't retrain (k-means has no
       // sample) — drop the index like the LSH path does, instead of letting
       // Ivf.build throw from inside an auto-triggered compaction and wedge
       // every subsequent write
-      if (docs().filter($"embedding".isNotNull).limit(1).isEmpty) dropIndex(ivfKind)
+      if (docs().filter($"embedding".isNotNull).limit(1).isEmpty) dropKind(ivfKind)
       else
         writeIvf(graft.ext.Ivf.build(docs(), "id", "embedding",
           k, iters, 1.0, maxSample, seed), nprobe, iters, maxSample, seed)
@@ -638,7 +640,7 @@ final class Collection private (
           writePq(graft.ext.Pq.train(docs(), "embedding",
             old.m, old.books.head.size, iters, maxSample, seed),
             candK, iters, maxSample, seed)
-        case _ => dropIndex(pqKind) // emptied of embedded docs, like the IVF branch
+        case _ => dropKind(pqKind) // emptied of embedded docs, like the IVF branch
       }
     }
     if (ivfPqStale) ivfParams().foreach { case (nprobe, iters, maxSample, seed) =>
@@ -651,13 +653,13 @@ final class Collection private (
             iters, maxSample, seed)
           writeIvfPq(cents, cb, nprobe,
             pqParams().map(_._1).getOrElse(50), iters, maxSample, seed, residual)
-        case _ => dropIndex(ivfPqKind) // emptied of embedded docs, like the other kinds
+        case _ => dropKind(ivfPqKind) // emptied of embedded docs, like the other kinds
       }
     }
     // impact meta: re-derive exact df, bounds and watermark from the
     // just-folded postings — heals a stale-df or behind-watermark meta. A
     // collection emptied of postings drops the index, like the IVF branch.
-    impactParams().foreach(rebuildImpact(_, postings()))
+    impactParams().foreach(rebuildImpact(_, empty = postings().limit(1).isEmpty))
     // sweep crash residue while we're off the ingest path anyway: orphaned
     // .tmp-* always, .old-* (crash-recovery copies) past their grace window
     storeDirs.foreach(Stores.sweep(spark, _))
@@ -720,7 +722,7 @@ final class Collection private (
   // Persisted vector index (the pgvector-analog decision, core.py:319-321:
   // the reference leans on the database's vector index; here the index is a
   // first-class partition of the store, built once, then kept current by the
-  // index maintenance loop (eachLiveIndex) on every write path, like the dedup index;
+  // write loop (writeKinds) on every write path, like the dedup index;
   // building, training and retraining stay per kind)
   // -------------------------------------------------------------------------
 
@@ -776,8 +778,7 @@ final class Collection private (
       .foreach(Stores.dropPartition(spark, _, name))
     val served: () => Option[AnnCatalog.Registered] = kind match {
       case "lsh" =>
-        Stores.overwritePartition(spark, annDir, name,
-          lshRows(numTables, numPlanes, dim, seed)(docs()), lshKind.sortBy, lshKind.rangeBy)
+        buildKind(lshKind, lshRows(numTables, numPlanes, dim, seed)(docs()))
         () => vectorIndex().map(AnnCatalog.LshRegistered(_))
       case "ivf" =>
         writeIvf(graft.ext.Ivf.build(docs(), "id", "embedding",
@@ -825,12 +826,10 @@ final class Collection private (
     // window leaves the index absent/declining, never a new-assignments/
     // old-centroids mismatch served silently.
     Stores.dropPartition(spark, ivfCentDir, name)
-    // toStoreFrame is already range-clustered + sorted by cluster
-    Stores.overwritePartition(spark, ivfDir, name, ix.toStoreFrame)
-    Stores.overwritePartition(spark, ivfCentDir, name,
-      ix.centroidsFrame
-        .withColumn("nprobe", lit(nprobe)).withColumn("iters", lit(iters))
-        .withColumn("max_sample", lit(maxSample)).withColumn("seed", lit(seed)))
+    buildKind(ivfKind, ix.assignments.select($"id", $"cluster"))
+    overwriteParams(ivfCentDir, ix.centroidsFrame
+      .withColumn("nprobe", lit(nprobe)).withColumn("iters", lit(iters))
+      .withColumn("max_sample", lit(maxSample)).withColumn("seed", lit(seed)))
   }
 
   /** The persisted IVF index, if one was built ([[createVectorIndex]] with
@@ -955,21 +954,15 @@ final class Collection private (
     // rows, then books, then centroids last.
     Stores.dropPartition(spark, ivfCentDir, name)
     Stores.dropPartition(spark, pqBookDir, name)
-    Stores.overwritePartition(spark, ivfPqDir, name,
-      ivfPqRows(docs(), cents, cb, residual), sortBy = Seq("cluster"))
-    Stores.overwritePartition(spark, pqBookDir, name,
-      cb.toStoreFrame(spark)
-        .withColumn("cand_k", lit(candK)).withColumn("iters", lit(iters))
-        .withColumn("max_sample", lit(maxSample)).withColumn("seed", lit(seed))
-        .withColumn("residual", lit(residual)))
-    val centsDf = {
-      import spark.implicits._
-      cents.zipWithIndex.map { case (c, i) => (i, c) }.toDF("cluster", "centroid")
-    }
-    Stores.overwritePartition(spark, ivfCentDir, name,
-      centsDf
-        .withColumn("nprobe", lit(nprobe)).withColumn("iters", lit(iters))
-        .withColumn("max_sample", lit(maxSample)).withColumn("seed", lit(seed)))
+    buildKind(ivfPqKind, ivfPqRows(docs(), cents, cb, residual))
+    overwriteParams(pqBookDir, cb.toStoreFrame(spark)
+      .withColumn("cand_k", lit(candK)).withColumn("iters", lit(iters))
+      .withColumn("max_sample", lit(maxSample)).withColumn("seed", lit(seed))
+      .withColumn("residual", lit(residual)))
+    overwriteParams(ivfCentDir, cents.zipWithIndex.map { case (c, i) => (i, c) }
+      .toDF("cluster", "centroid")
+      .withColumn("nprobe", lit(nprobe)).withColumn("iters", lit(iters))
+      .withColumn("max_sample", lit(maxSample)).withColumn("seed", lit(seed)))
   }
 
   private def writePq(cb: graft.ext.PqCodebook, candK: Int, iters: Int,
@@ -979,13 +972,11 @@ final class Collection private (
     // write codes, write books last — any crash window leaves the index
     // absent/declining, never new-codes/old-books served silently.
     Stores.dropPartition(spark, pqBookDir, name)
-    Stores.overwritePartition(spark, pqDir, name,
-      graft.ext.Pq.encode(docs(), cb))
-    Stores.overwritePartition(spark, pqBookDir, name,
-      cb.toStoreFrame(spark)
-        .withColumn("cand_k", lit(candK)).withColumn("iters", lit(iters))
-        .withColumn("max_sample", lit(maxSample)).withColumn("seed", lit(seed))
-        .withColumn("residual", lit(false)))
+    buildKind(pqKind, graft.ext.Pq.encode(docs(), cb))
+    overwriteParams(pqBookDir, cb.toStoreFrame(spark)
+      .withColumn("cand_k", lit(candK)).withColumn("iters", lit(iters))
+      .withColumn("max_sample", lit(maxSample)).withColumn("seed", lit(seed))
+      .withColumn("residual", lit(false)))
   }
 
   /** The persisted PQ index, if one was built ([[createVectorIndex]] with
@@ -1123,9 +1114,7 @@ final class Collection private (
   def createDedupIndex(n: Int = 3, bands: Int = 32, rowsPerBand: Int = 4): Unit = {
     require(n >= 1 && bands >= 1 && rowsPerBand >= 1,
       "n, bands, rowsPerBand must all be >= 1")
-    Stores.overwritePartition(spark, minhashDir, name,
-      dedupIndexRows(docs(), n, bands, rpb = rowsPerBand),
-      sortBy = Seq("band", "bh"))
+    buildKind(minhashKind, dedupIndexRows(docs(), n, bands, rpb = rowsPerBand))
   }
 
   /** (n, bands, rowsPerBand) of the stored dedup index, if one exists. */
@@ -1227,9 +1216,9 @@ final class Collection private (
   def createImpactIndex(cap: Int = 128): Unit = {
     require(useFts, s"Collection '$name' does not support full-text search.")
     require(cap >= 1, "cap >= 1")
-    // the emptiness probe lives in rebuildImpact (it checks anyway for its
-    // drop-on-emptied branch) — one limit-1 job per build, not two
-    rebuildImpact(cap, postings(), requireNonEmpty = true)
+    require(!postings().limit(1).isEmpty,
+      s"Collection '$name' has no postings to index; ingest before createImpactIndex().")
+    rebuildImpact(cap, empty = false)
   }
 
   /** The stored cap of the impact index, if one was built. */
@@ -1306,30 +1295,28 @@ final class Collection private (
     }
   }
 
-  /** Re-derive the meta from `from` (the current postings, already
-    * written): exact df and bounds plus the cap and watermark rows, in one
-    * partition swap.
+  /** Re-derive the meta from the current postings (already written):
+    * exact df and bounds plus the cap and watermark rows, in one partition
+    * swap. `empty` = the postings hold no rows (e.g. a merge-path delete of
+    * every doc): the meta is dropped instead, mirroring the IVF branch of
+    * compact().
     */
-  private def rebuildImpact(cap: Int, from: DataFrame,
-                            requireNonEmpty: Boolean = false): Unit = {
-    // emptied corpus (e.g. a merge-path delete of every doc): drop the
-    // meta, mirroring the IVF branch of compact(). Checked on the RAW
-    // frame: probing the ranked one would pay its window for a 1-row
-    // answer. requireNonEmpty = createImpactIndex's explicit-build
-    // contract (throw, don't silently drop), sharing this one probe job.
-    if (from.limit(1).isEmpty) {
-      require(!requireNonEmpty,
-        s"Collection '$name' has no postings to index; ingest before createImpactIndex().")
+  private def rebuildImpact(cap: Int, empty: Boolean): Unit = {
+    if (empty) {
       Stores.dropPartition(spark, impactMetaDir, name)
       return
     }
+    val from = postings()
+    // one meta row per term, and every term has a posting: the postings'
+    // segment bytes bound the meta — no optimizer stats probe
+    val (pb, pd) = Stores.segmentBytes(spark, postingsDir, name)
     Stores.overwritePartition(spark, impactMetaDir, name,
       graft.exec.ImpactTopK.metaFromRanked(from,
           graft.exec.ImpactTopK.ranked(from, cap), cap)
         .unionByName(impactWatermarkRow())
         .unionByName(Seq((graft.exec.ImpactTopK.CapKey, cap.toLong, 0L))
           .toDF("id", "df", "bound_tf")),
-      sortBy = Seq("id"))
+      sortBy = Seq("id"), rangeBy = Seq("id"), sizeHintBytes = Some(BigInt(pb) + pd))
   }
 
   /** The serving gate's (cap, watermark, (n_docs, avg_dl)), cached under a
@@ -1486,7 +1473,7 @@ final class Collection private (
     else graft.ext.Ann.exactTopK(docs(), queries, k)
 
   /** True iff some persisted vector index can actually SERVE: a kind is
-    * live ([[IndexKind]]), the test its accessor and every write path use.
+    * live ([[StoreKind]]), the test its accessor and every write path use.
     * A store that exists without readable parameters — an LSH store
     * emptied of embedded docs, or writeIvfPq's crash window (codes+books
     * present, centroids not yet written) — reads None in the accessors, so
@@ -1608,80 +1595,6 @@ final class Collection private (
     }
   }
 
-  /** Full postings + stats (re)build from `source` (the cached batch on
-    * first ingest — the collection's full contents by construction there —
-    * so nothing re-reads the just-written store). The fresh postings frame
-    * is persisted so the stats pass reads the cache populated by the store
-    * write: one tokenize, one write, one cached aggregate.
-    */
-  /** batchEst: the ingest batch's size estimate, when the caller already
-    * computed one (upsert does, for its respread decision). Used as the
-    * postings write-size hint — Catalyst's own probe of the tokenize plan
-    * propagates the child scan size through Generate/Aggregate anyway, so
-    * the hint reproduces the same estimate without the extra
-    * analyze+optimize pass per write.
-    */
-  private def refreshIndexesFull(source: DataFrame,
-                                 batchEst: Option[BigInt] = None): Unit = {
-    if (useFts) {
-      val fresh = PostingsIndex.build(source, foldAccents).persist()
-      try {
-        Stores.overwritePartition(spark, postingsDir, name, fresh,
-          sortBy = postingsOrder, rangeBy = Seq("term"), sizeHintBytes = batchEst)
-        writeDoclenFull(doclenOfPostings(source.select($"id"), fresh))
-        impactParams().foreach(rebuildImpact(_, fresh))
-      } finally fresh.unpersist()
-    } else {
-      // no postings to derive from — tokenize (still one pass, only for
-      // non-FTS collections whose stats are informational)
-      writeDoclenFull(doclenOfBatch(source))
-    }
-    eachLiveIndex((k, rows) => overwriteIndex(k, rows(source)))
-  }
-
-  /** Small-collection upsert index maintenance: merge-rewrite postings and
-    * every live index store (anti-join out the batch ids, union the
-    * batch's fresh rows) —
-    * below the direct threshold, rewriting the partition beats making every
-    * subsequent read resolve deltas. Only the batch tokenizes either way.
-    */
-  private def refreshIndexesMerge(batch: DataFrame, rawIds: DataFrame,
-                                  smallIds: Boolean,
-                                  batchEst: Option[BigInt]): Unit = {
-    // hinted form for the joins where the ids are the BUILD side (every
-    // left_anti right below); the doclen left join instead hints its
-    // postings agg (same cardinality bound) via doclenOfPostings — a hint
-    // riding the outer-preserved side would be silently dropped
-    val batchIds = if (smallIds) broadcast(rawIds) else rawIds
-    if (useFts) {
-      // persisted: consumed by the postings overwrite AND the doclen derive —
-      // without it the batch tokenize+shuffle runs twice
-      val freshBatch = PostingsIndex.build(batch, foldAccents).persist()
-      val fresh = postings().join(batchIds, Seq("id"), "left_anti")
-        .unionByName(freshBatch).persist()
-      try {
-        // fresh ≤ current postings segments + the batch's tokenized rows:
-        // one FS stat replaces the optimizer probe over the
-        // anti-join∪tokenize plan (the most expensive probe of the merge
-        // path)
-        val (pb, pd) = Stores.segmentBytes(spark, postingsDir, name)
-        Stores.overwritePartition(spark, postingsDir, name, fresh,
-          sortBy = postingsOrder, rangeBy = Seq("term"),
-          sizeHintBytes = batchEst.map(BigInt(pb) + BigInt(pd) + _))
-        writeDoclenFull(doclen().join(batchIds, Seq("id"), "left_anti")
-          .unionByName(doclenOfPostings(rawIds, freshBatch, hintAgg = smallIds)))
-        // below the direct threshold a full meta re-derive is the cheap
-        // move (exact df either way, no staleness window)
-        impactParams().foreach(rebuildImpact(_, fresh))
-      } finally { fresh.unpersist(); freshBatch.unpersist() }
-    } else {
-      writeDoclenFull(doclen().join(batchIds, Seq("id"), "left_anti")
-        .unionByName(doclenOfBatch(batch)))
-    }
-    eachLiveIndex((k, rows) =>
-      overwriteIndex(k, indexRowsWithout(k, batchIds).unionByName(rows(batch))))
-  }
-
   /** Stored coarse centroids (driver-side, k×dim — broadcast-sized), or
     * None without a centroid table. RAW: the table is shared by the IVF
     * and IVF-PQ kinds — IVF-only call-sites must also check annivf exists.
@@ -1697,119 +1610,86 @@ final class Collection private (
       }
     }
 
-  /** Incremental postings + stats maintenance for an upserted batch: only
-    * the batch tokenizes, and the postings store gets an O(batch) delta
-    * segment whose `gone` sidecar claims every batch id (so replaced docs'
-    * stale rows die even when the new content has no tokens) — the Spark
-    * analogue of the reference's delete-stale-then-insert FTS maintenance
-    * (core.py:505-514), without the O(postings) rewrite the pre-segment
-    * layout paid per batch. The property that keeps `streamIngest`
-    * micro-batches flat as the collection grows.
+  /** The one write path of [[upsert]] and [[removeFrom]]: lands batch `b`
+    * in every kind in one loop, docs first, then writes the collstats row
+    * from the resolved doclen store and brings the impact meta along. Per
+    * live kind, by `shape`:
+    *
+    *   - full: overwrite with the batch's rows;
+    *   - merge: the stored rows anti-joined on the batch ids ∪ the batch's
+    *     rows (which also folds any accumulated deltas back flat);
+    *   - delta: an O(batch) segment of the batch's rows whose gone sidecar
+    *     claims every batch id, so replaced, deleted or row-less docs leave
+    *     — the Spark analogue of the reference's delete-stale-then-insert
+    *     (core.py:505-514). A dense kind's rows already claim an upsert's
+    *     ids, so it writes no sidecar then.
+    *
+    * A kind that is not live but whose store exists is dropped. A rewrite's
+    * size hint is the kind's segment bytes (none for a full write) plus the
+    * batch estimate — its output is at most both — so no write pays an
+    * optimizer stats probe; no hint when the batch has no estimate.
     */
-  private def refreshIndexesDelta(batch: DataFrame): Unit = {
-    val batchIds = batch.select("id")
-    // Impact-meta state, probed BEFORE the postings/doclen deltas land.
-    // Only df needs maintaining (every bound stays valid, see
-    // graft.exec.ImpactTopK); two regimes while the watermark is current:
+  private def writeKinds(shape: Collection.Shape, b: Batch): Unit = {
+    val delta = shape == Collection.DeltaWrite
+    // Impact-meta state, probed BEFORE any store moves. Only df needs
+    // maintaining (every bound stays valid, see graft.exec.ImpactTopK); a
+    // rewrite re-derives the meta, a delta keeps one of two regimes while
+    // the watermark is current:
     //   EXACT — df flag fresh and the batch is a PURE INSERT (no batch id
     //     pre-exists — the skinny doclen store is the cheapest id
     //     inventory): per-term df increments, O(batch).
-    //   STALE — the batch updates existing ids (its vanished terms are
-    //     unknowable in O(batch)) or df already went stale earlier: a
+    //   STALE — the batch updates or deletes existing ids (vanished terms
+    //     are unknowable in O(batch)) or df already went stale earlier: a
     //     stale-flagged watermark; serving recounts df per query term.
-    // A watermark already behind the postings (an earlier crash window)
-    // is left behind: serving falls back until compact() re-derives.
-    val impactWm = impactWatermark()
+    // A watermark already behind the postings (an earlier crash window) is
+    // left behind: serving falls back until compact() re-derives.
+    val impactWm = if (!delta) None else impactWatermark()
       .filter(_._1 == Stores.partitionFingerprint(spark, postingsDir, name))
-    val impactExact = impactWm.exists(_._2 == 0L) &&
+    val impactExact = impactWm.exists(_._2 == 0L) && !b.bare &&
       (!Stores.partitionExists(spark, doclenDir, name) ||
-        doclen().join(batchIds, Seq("id"), "left_semi").limit(1).isEmpty)
-    if (useFts) {
-      val freshBatch = PostingsIndex.build(batch, foldAccents).persist()
-      try {
-        // NO size hints on these deltas (r20, measured — see
-        // Stores.appendDelta): the coalesce decision must come from each
-        // delta frame's own estimate, or the unevaluated tokenize plan
-        // lands single-task
-        Stores.appendDelta(spark, postingsDir, name,
-          freshBatch, gone = Some(batchIds), sortBy = postingsOrder)
-        // O(batch) doclen delta (every batch id carries a row, so the data
-        // rows alone claim the replacements), then the stats aggregate scans
-        // the SKINNY doclen store — never the postings store, whose
-        // resolution at 1M docs cost ~10 s per micro-batch
-        appendDoclenDelta(doclenOfPostings(batchIds, freshBatch))
-        // the advanced watermark goes in LAST, in the same delta as any df
-        // rows: a crash before it leaves the watermark behind the
-        // postings, which reads as "fall back", never as stale idf served
-        if (impactExact) {
-          // a pure insert adds exactly its per-term doc counts; a term
-          // born here gets bound 0
-          val adds = freshBatch.groupBy($"term")
-            .agg(org.apache.spark.sql.functions.count(lit(1)).as("__add"))
-            .select($"term".as("id"), $"__add")
-          Stores.appendDelta(spark, impactMetaDir, name,
-            adds.join(impactMetaRows(), Seq("id"), "left")
-              .select($"id", (coalesce($"df", lit(0L)) + $"__add").as("df"),
-                coalesce($"bound_tf", lit(0L)).as("bound_tf"))
-              .unionByName(impactWatermarkRow()),
-            sortBy = Seq("id"))
-        } else if (impactWm.nonEmpty)
-          Stores.appendDelta(spark, impactMetaDir, name,
-            impactWatermarkRow(staleDf = true), sortBy = Seq("id"))
-      } finally freshBatch.unpersist()
-    } else {
-      appendDoclenDelta(doclenOfBatch(batch))
-    }
-    // O(batch) index deltas: only the batch derives rows, and the gone
-    // sidecar claims every batch id, so replaced or unembedded docs leave
-    eachLiveIndex((k, rows) => Stores.appendDelta(spark, k.dir, name, rows(batch),
-      gone = Some(batchIds), sortBy = k.sortBy))
-  }
-
-  /** Small-collection delete index maintenance: anti-join rewrite of
-    * postings and every live index store (the pre-segment shape — optimal
-    * when the partition is small).
-    */
-  private def removeFromIndexesMerge(idsDf: DataFrame): Unit = {
-    if (useFts) {
-      val fresh = postings().join(idsDf, Seq("id"), "left_anti").persist()
-      try {
-        // a pure anti-join can only shrink the store: its segment bytes
-        // bound the rewrite — no optimizer stats probe
-        val (pb, pd) = Stores.segmentBytes(spark, postingsDir, name)
-        Stores.overwritePartition(spark, postingsDir, name, fresh,
-          sortBy = postingsOrder, rangeBy = Seq("term"),
-          sizeHintBytes = Some(BigInt(pb) + BigInt(pd)))
-        writeDoclenFull(doclen().join(idsDf, Seq("id"), "left_anti"))
-        impactParams().foreach(rebuildImpact(_, fresh))
-      } finally fresh.unpersist()
-    } else {
-      writeDoclenFull(doclen().join(idsDf, Seq("id"), "left_anti"))
-    }
-    eachLiveIndex((k, _) => overwriteIndex(k, indexRowsWithout(k, idsDf)))
-  }
-
-  /** Index maintenance for a delete: gone-only deltas (no tokenize, no
-    * bucket work — the ids simply stop being claimed by any data row).
-    */
-  private def removeFromIndexes(idsDf: DataFrame): Unit = {
-    if (useFts) {
-      // impact meta: a delete's vanished terms are unknowable in O(batch),
-      // so df goes stale — if the watermark is current against the
-      // PRE-delete postings, the stale-flagged watermark for the
-      // post-delete postings goes in LAST (a crash before it reads as
-      // "fall back"); a watermark already behind stays behind.
-      val impactCurrent = impactWatermark().exists(_._1 ==
-        Stores.partitionFingerprint(spark, postingsDir, name))
-      Stores.appendDelta(spark, postingsDir, name,
-        emptyFrame(Stores.postingsSchema), gone = Some(idsDf))
-      if (impactCurrent)
+        doclen().join(b.ids, Seq("id"), "left_semi").limit(1).isEmpty)
+    try {
+      kinds.foreach { k =>
+        k.live() match {
+          case None =>
+            if (Stores.partitionExists(spark, k.dir, name)) dropKind(k)
+          case Some(rows) if shape == Collection.FullWrite =>
+            overwriteKind(k, rows(b), b.est)
+          case Some(rows) if !delta =>
+            val (base, deltas) = Stores.segmentBytes(spark, k.dir, name)
+            overwriteKind(k, k.stored().join(b.antiIds, Seq("id"), "left_anti")
+              .unionByName(rows(b)), b.est.map(BigInt(base) + deltas + _))
+          case Some(rows) =>
+            // a kind without a base partition (the doclen of a store written
+            // before the doclen layout) materializes its resolved rows once
+            if (!Stores.partitionExists(spark, k.dir, name)) overwriteKind(k, k.stored())
+            Stores.appendDelta(spark, k.dir, name, rows(b),
+              gone = if (k.dense && !b.bare) None else Some(b.ids), sortBy = k.sortBy)
+        }
+      }
+      val avgDl = writeStatsFrom(doclen())
+      // the watermark goes in LAST, in the same delta as any df rows: a
+      // crash before it leaves the watermark behind the postings, which
+      // reads as "fall back", never as stale idf served. avg_dl is 0 just
+      // when no doc has a token, so it tells an emptied postings store.
+      if (!delta) impactParams().foreach(rebuildImpact(_, empty = avgDl == 0.0))
+      else if (impactExact) {
+        // a pure insert adds exactly its per-term doc counts; a term born
+        // here gets bound 0
+        val adds = b.postings.groupBy($"term")
+          .agg(org.apache.spark.sql.functions.count(lit(1)).as("__add"))
+          .select($"term".as("id"), $"__add")
+        Stores.appendDelta(spark, impactMetaDir, name,
+          adds.join(impactMetaRows(), Seq("id"), "left")
+            .select($"id", (coalesce($"df", lit(0L)) + $"__add").as("df"),
+              coalesce($"bound_tf", lit(0L)).as("bound_tf"))
+            .unionByName(impactWatermarkRow()),
+          sortBy = Seq("id"))
+      } else if (impactWm.nonEmpty)
         Stores.appendDelta(spark, impactMetaDir, name,
           impactWatermarkRow(staleDf = true), sortBy = Seq("id"))
-    }
-    appendDoclenDelta(emptyFrame(Stores.doclenSchema), gone = Some(idsDf))
-    eachLiveIndex((k, _) => Stores.appendDelta(spark, k.dir, name,
-      emptyFrame(k.schema), gone = Some(idsDf)))
+    } finally b.release()
+    if (delta) maybeCompact()
   }
 
   // -------------------------------------------------------------------------
@@ -1855,29 +1735,8 @@ final class Collection private (
       coalesce(size(graft.functions.TextFunctions.tokens($"content", foldAccents)), lit(0))
         .cast("long").as("dl"))
 
-  /** Full doclen rewrite + stats from the same frame (full-build and
-    * merge-rewrite paths).
-    */
-  private def writeDoclenFull(dl: DataFrame): Unit = {
-    val d = dl.persist()
-    try {
-      Stores.overwritePartition(spark, doclenDir, name, d)
-      writeStatsFrom(d)
-    } finally d.unpersist()
-  }
-
-  /** O(batch) doclen delta + stats from the resolved skinny store (delta
-    * upsert / delete paths).
-    */
-  private def appendDoclenDelta(batchDl: DataFrame,
-                                gone: Option[DataFrame] = None): Unit = {
-    if (!Stores.partitionExists(spark, doclenDir, name))
-      Stores.overwritePartition(spark, doclenDir, name, doclen()) // legacy store: materialize once
-    Stores.appendDelta(spark, doclenDir, name, batchDl, gone)
-    writeStatsFrom(doclen())
-  }
-
-  private def writeStatsFrom(dl: DataFrame): Unit = {
+  /** Writes the collstats row of `dl`; returns its avg_dl. */
+  private def writeStatsFrom(dl: DataFrame): Double = {
     // one aggregate job returning a single row; the one-row stats partition
     // is then written DRIVER-side (no distributed write job / committer
     // round — measurable fixed overhead on every upsert and delete)
@@ -1885,31 +1744,28 @@ final class Collection private (
       org.apache.spark.sql.functions.count(lit(1)).as("n_docs"),
       coalesce(avg($"dl"), lit(0.0)).as("avg_dl")).head()
     Stores.writeCollStats(spark, statsDir, name, r.getLong(0), r.getDouble(1))
+    r.getDouble(1)
   }
 
-  /** Runs `f` on every index kind whose store is live, with the kind's
-    * row derivation. A store that exists without readable parameters
-    * (emptied of rows, or a crash residue) is dropped with its parameter
-    * tables instead, so the write returns it cleanly to "no index".
-    */
-  private def eachLiveIndex(f: (IndexKind, DataFrame => DataFrame) => Unit): Unit =
-    indexKinds.foreach { k =>
-      if (Stores.partitionExists(spark, k.dir, name)) k.live() match {
-        case Some(rows) => f(k, rows)
-        case None => dropIndex(k)
-      }
-    }
-
-  private def dropIndex(k: IndexKind): Unit =
+  private def dropKind(k: StoreKind): Unit =
     k.dirs.foreach(Stores.dropPartition(spark, _, name))
 
   /** Overwrite kind `k`'s store with `rows`, in the kind's file layout. */
-  private def overwriteIndex(k: IndexKind, rows: DataFrame): Unit =
-    Stores.overwritePartition(spark, k.dir, name, rows, k.sortBy, k.rangeBy)
+  private def overwriteKind(k: StoreKind, rows: DataFrame,
+                            sizeHint: Option[BigInt] = None): Unit =
+    Stores.overwritePartition(spark, k.dir, name, rows, k.sortBy, k.key, sizeHint)
 
-  /** Kind `k`'s stored rows, minus those of `ids`. */
-  private def indexRowsWithout(k: IndexKind, ids: DataFrame): DataFrame =
-    Stores.readPartition(spark, k.dir, name, k.schema).join(ids, Seq("id"), "left_anti")
+  /** Build kind `k`'s store from `rows`, derived from the whole docs
+    * store: its segment bytes are the size hint, as a full write's batch
+    * estimate is. */
+  private def buildKind(k: StoreKind, rows: DataFrame): Unit = {
+    val (base, deltas) = Stores.segmentBytes(spark, docsDir, name)
+    overwriteKind(k, rows, Some(BigInt(base) + deltas))
+  }
+
+  /** Overwrite a parameter table (k rows, driver-sized) as one file. */
+  private def overwriteParams(dir: String, table: DataFrame): Unit =
+    Stores.overwritePartition(spark, dir, name, table.coalesce(1))
 
   // -------------------------------------------------------------------------
   // Read path (reference core.py:190-384)
@@ -2335,6 +2191,14 @@ final class Collection private (
 object Collection {
   /** Max docs per Embedder.embed call (bounded executor memory). */
   val EmbedBatchSize: Int = 256
+
+  /** How a mutation lands in the stores ([[Collection.writeKinds]]): a full
+    * write of a new collection, a merge rewrite of a small partition, or
+    * an O(batch) delta segment. */
+  private sealed trait Shape
+  private case object FullWrite extends Shape
+  private case object MergeWrite extends Shape
+  private case object DeltaWrite extends Shape
 
   /** How long [[Collection.query]] waits for its observed total after the
     * page is collected before recounting (delivery normally takes ms). */

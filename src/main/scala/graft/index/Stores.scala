@@ -23,7 +23,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     id it claims) plus an optional `.delta-NNNNNNNN-gone` sidecar
   *     claiming ids with no surviving rows (deletes, token-less docs).
   *     Spark's hidden-path filter skips dot-dirs, so the base read never
-  *     sees them.
+  *     sees them; segment reads name the part files inside.
   *   - [[readPartition]] resolves last-wins per id: the newest segment that
   *     claims an id owns every row of it. The claims frame is O(delta rows)
   *     — small between compactions — so the resolution join broadcasts and
@@ -74,7 +74,8 @@ object Stores {
     * the O(Σ dl) postings store — the difference between a ~10 s and a
     * sub-second micro-batch at 1M docs (ProbeScale `microbatch_big`), and
     * between scanning terabytes and gigabytes at the 100 TB target.
-    * Delta-maintained exactly like docs/postings.
+    * Stored range-clustered + sorted by id, like docs; delta-maintained
+    * exactly like docs/postings.
     */
   val doclenSchema: StructType = StructType(Seq(
     StructField("id", StringType, nullable = false),
@@ -98,8 +99,9 @@ object Stores {
   ))
 
   /** annivf: one row per embedded doc — its IVF posting list (cluster).
-    * Stored range-clustered + sorted by cluster so literal `cluster IN (…)`
-    * probes prune row groups. Delta-maintained like annindex.
+    * Stored range-clustered + sorted by cluster (builds and rewrites
+    * alike) so literal `cluster IN (…)` probes prune files and row groups.
+    * Delta-maintained like annindex.
     */
   val ivfSchema: StructType = StructType(Seq(
     StructField("id", StringType, nullable = false),
@@ -108,7 +110,8 @@ object Stores {
 
   /** annivfcent: k rows — the unit-norm centroid table plus the build
     * parameters (constant columns, RLE-free) so maintenance and retrain
-    * need no caller-carried state. Overwrite-only (never deltas).
+    * need no caller-carried state. Overwrite-only (never deltas), one
+    * file in cluster order.
     */
   val ivfCentSchema: StructType = StructType(Seq(
     StructField("cluster", IntegerType, nullable = false),
@@ -122,8 +125,8 @@ object Stores {
   /** annpq: one row per embedded doc — its m-byte PQ code vector (the
     * whole searchable index is m bytes/doc; a 100 TB float corpus's codes
     * fit in low terabytes). ADC probes scan every code row by design (no
-    * clustering key to prune on), so layout is id-ordered for cheap delta
-    * anti-joins. Delta-maintained like annindex/annivf.
+    * clustering key to prune on), so the layout is range-clustered +
+    * sorted by id, like docs. Delta-maintained like annindex/annivf.
     */
   val pqSchema: StructType = StructType(Seq(
     StructField("id", StringType, nullable = false),
@@ -133,7 +136,8 @@ object Stores {
   /** annpqbook: m×k rows — the trained sub-codebooks (subspace, code,
     * codeword) plus the build/probe parameters as constant columns
     * (RLE-free), so maintenance and retrain need no caller-carried state.
-    * Overwrite-only (never deltas), like annivfcent.
+    * Overwrite-only (never deltas), one file in (subspace, code) order,
+    * like annivfcent.
     */
   val pqBookSchema: StructType = StructType(Seq(
     StructField("subspace", IntegerType, nullable = false),
@@ -151,9 +155,10 @@ object Stores {
 
   /** annivfpq: one row per embedded doc — its coarse IVF list plus its
     * m-byte PQ codes (the FAISS IVFPQ layout). Stored range-clustered +
-    * sorted by cluster, so a probe's literal `cluster IN (…)` prunes row
-    * groups and the ADC scan reads ~nprobe/k of the codes instead of all
-    * of them (the missing piece of the flat PQ index at 100 TB). Shares
+    * sorted by cluster (builds and rewrites alike), so a probe's literal
+    * `cluster IN (…)` prunes row groups and the ADC scan reads ~nprobe/k
+    * of the codes instead of all of them (the missing piece of the flat
+    * PQ index at 100 TB). Shares
     * the centroid table (annivfcent) and codebook table (annpqbook) with
     * the single-structure kinds. Delta-maintained like annivf/annpq.
     */
@@ -170,7 +175,8 @@ object Stores {
     * band identically or buckets never collide. No signature/shingle
     * payload is stored — verification re-derives the few candidates'
     * shingle sets from the docs store, keeping this index a fraction of
-    * corpus size (bands × 12 bytes/doc). Delta-maintained like annindex.
+    * corpus size (bands × 12 bytes/doc). Stored range-clustered + sorted by
+    * (band, bh), the probe's join key. Delta-maintained like annindex.
     */
   val minhashSchema: StructType = StructType(Seq(
     StructField("id", StringType, nullable = false),
@@ -192,9 +198,9 @@ object Stores {
     * between a postings write and this store's) makes serving fall back
     * to full scoring instead of silently serving stale idf. Keyed by
     * `id` = the term, so the segment layout's last-wins-by-id resolution
-    * gives last-wins-per-term meta updates. Updates/deletes only flag df
-    * stale (their vanished terms are unknowable in O(batch)); compact()
-    * re-derives it.
+    * gives last-wins-per-term meta updates; rebuilds are range-clustered
+    * + sorted by id. Updates/deletes only flag df stale (their vanished
+    * terms are unknowable in O(batch)); compact() re-derives it.
     */
   val impactMetaSchema: StructType = StructType(Seq(
     StructField("id", StringType, nullable = false),
@@ -231,6 +237,26 @@ object Stores {
 
   private case class Delta(ordinal: Long, dataDir: String, goneDir: Option[String])
 
+  /** The parquet part files of one segment dir. A read names them, never
+    * the dir: Spark ignores a root path whose own name is hidden (the
+    * segment's leading dot) and warns "All paths were ignored" on every
+    * read, while a part file's name is visible.
+    */
+  private def partFiles(spark: SparkSession, dir: String): Seq[String] = {
+    val p = new Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p).toSeq
+      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
+        !s.getPath.getName.startsWith("."))
+      .map(_.getPath.toString).sorted
+  }
+
+  /** `files` read under `schema`; empty (with schema) for no files. */
+  private def readFiles(spark: SparkSession, schema: StructType,
+                        files: Seq[String]): DataFrame =
+    if (files.isEmpty)
+      spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), schema)
+    else spark.read.schema(schema).parquet(files: _*)
+
   /** The partition's delta segments, ascending by ordinal. */
   private def deltas(spark: SparkSession, dir: String): Seq[Delta] = {
     val p = new Path(dir)
@@ -258,13 +284,14 @@ object Stores {
     else 0L +: deltas(spark, dir).map(_.ordinal)
   }
 
-  /** The partition's delta DATA dirs (no gone sidecars), ascending — for
-    * callers that scan delta-added rows across collections in one job
-    * (hidden dot-dirs are invisible to a whole-store scan).
+  /** The part files of the partition's delta DATA dirs (no gone
+    * sidecars), ascending — for callers that scan delta-added rows across
+    * collections in one job (hidden dot-dirs are invisible to a whole-store
+    * scan).
     */
-  def deltaDataDirs(spark: SparkSession, storeDir: String,
-                    collection: String): Seq[String] =
-    deltas(spark, partDir(storeDir, collection)).map(_.dataDir)
+  def deltaDataFiles(spark: SparkSession, storeDir: String,
+                     collection: String): Seq[String] =
+    deltas(spark, partDir(storeDir, collection)).flatMap(d => partFiles(spark, d.dataDir))
 
   /** (base bytes, delta bytes) of a partition — a filesystem listing, no
     * Spark job. Drives size-ratio compaction: a collection whose deltas
@@ -333,14 +360,14 @@ object Stores {
     val segs = deltas(spark, dir).filter(_.ordinal <= maxSeg)
     if (segs.isEmpty || !schema.fieldNames.contains("id")) base
     else {
-      val all = segs.foldLeft(base.withColumn("__seg", lit(0L))) { (acc, d) =>
-        acc.unionByName(
-          spark.read.schema(schema).parquet(d.dataDir).withColumn("__seg", lit(d.ordinal)))
+      val data = segs.map(d => d -> readFiles(spark, schema, partFiles(spark, d.dataDir)))
+      val all = data.foldLeft(base.withColumn("__seg", lit(0L))) { case (acc, (d, rows)) =>
+        acc.unionByName(rows.withColumn("__seg", lit(d.ordinal)))
       }
-      val claims = segs.map { d =>
-        val dataIds = spark.read.schema(schema).parquet(d.dataDir).select(col("id"))
+      val claims = data.map { case (d, rows) =>
+        val dataIds = rows.select(col("id"))
         d.goneDir.map(g => dataIds.unionByName(
-            spark.read.schema(goneSchema).parquet(g).select(col("id"))))
+            readFiles(spark, goneSchema, partFiles(spark, g)).select(col("id"))))
           .getOrElse(dataIds)
           .withColumn("__w", lit(d.ordinal))
       }.reduce(_ unionByName _)
@@ -398,11 +425,16 @@ object Stores {
     // caller's batch-input bound — a batch-bytes hint flipped the decision
     // on tokenize-derived deltas and cost 1.06-1.12x on the streaming
     // entries in interleaved A/B.
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val sized = if (est < BigInt(GraftConf.rangeTargetBytes(spark))) df.coalesce(1) else df
-    val out = if (sortBy.nonEmpty) sized.sortWithinPartitions(sortBy.head, sortBy.tail: _*) else sized
-    writeVia(out, s"$dir/$name")
-    gone.foreach(g => writeVia(g.select(org.apache.spark.sql.functions.col("id")),
+    // The gone frame takes the same rule: a driver-side id list otherwise
+    // lands as one file per local slice, and every read opens each.
+    def sized(f: DataFrame) =
+      if (f.queryExecution.optimizedPlan.stats.sizeInBytes <
+          BigInt(GraftConf.rangeTargetBytes(spark))) f.coalesce(1)
+      else f
+    val rows = sized(df)
+    writeVia(if (sortBy.nonEmpty) rows.sortWithinPartitions(sortBy.head, sortBy.tail: _*)
+      else rows, s"$dir/$name")
+    gone.foreach(g => writeVia(sized(g.select(org.apache.spark.sql.functions.col("id"))),
       s"$dir/$name-gone"))
   }
 

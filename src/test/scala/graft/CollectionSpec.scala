@@ -657,9 +657,10 @@ class CollectionSpec extends AnyFunSuite {
   }
 
   test("index maintenance: every kind's stored rows equal a fresh derivation") {
-    import graft.index.Stores
+    import graft.index.{PostingsIndex, Stores}
     import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.functions.{col => fcol, lit}
+    import org.apache.spark.sql.functions.{col => fcol, lit, size}
+    import spark.implicits._
     def stored(c: Collection, dir: String => String, schema: org.apache.spark.sql.types.StructType) =
       Stores.readPartition(spark, dir(c.root), c.name, schema)
     // (kind, build, (stored rows, rows derived from docs() under the stored parameters))
@@ -697,30 +698,56 @@ class CollectionSpec extends AnyFunSuite {
     def sorted(df: DataFrame, cols: Seq[String]) =
       df.select(cols.map(fcol): _*).collect().map(_.toString).sorted.toSeq
     def docs(ids: Seq[String], tag: String) = ids.map(i => s"$tag text for $i, $tag words")
-    for ((kind, build, pair) <- kinds; deltaPath <- Seq(false, true)) {
-      def check(c: Collection, step: String): Unit =
-        for ((store, (got, want)) <- Seq(kind -> pair(c), "minhash" -> minhash(c))) {
+    // every vector kind with FTS, plus one collection without it (doclen
+    // then comes from tokenizing the docs)
+    val lifecycles = kinds.map { case (k, b, p) => (k, true, b, Option(p)) } :+
+      (("nofts", false, (_: Collection) => (), None))
+    for ((kind, fts, build, pair) <- lifecycles; deltaPath <- Seq(false, true)) {
+      // the docs the collection must hold: id -> content
+      var live = Map.empty[String, String]
+      def check(c: Collection, step: String): Unit = {
+        val at = s"$kind deltaPath=$deltaPath after $step"
+        for ((store, (got, want)) <- pair.map(p => kind -> p(c)).toSeq :+ ("minhash" -> minhash(c))) {
           val expected = sorted(want, got.columns.toSeq)
-          assert(expected.nonEmpty, s"$kind/$store deltaPath=$deltaPath after $step")
-          assert(sorted(got, got.columns.toSeq) === expected,
-            s"$kind/$store deltaPath=$deltaPath after $step")
+          assert(expected.nonEmpty, s"$store: $at")
+          assert(sorted(got, got.columns.toSeq) === expected, s"$store: $at")
         }
-      val c = coll(embedder = Some(OpenDictEmbedder))
-      val first = (0 until 8).map(i => s"d$i")
-      c.add(docs(first, "base"), ids = Some(first))
+        assert(sorted(c.docs(), Seq("id", "content")) ===
+          live.toSeq.map { case (i, t) => s"[$i,$t]" }.sorted, s"docs: $at")
+        val dl = live.toSeq.toDF("id", "content").select(fcol("id"),
+            size(graft.functions.TextFunctions.tokens(fcol("content"), false)).cast("long"))
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        assert(sorted(stored(c, Stores.doclenDir, Stores.doclenSchema), Seq("id", "dl")) ===
+          dl.toSeq.map { case (i, n) => s"[$i,$n]" }.sorted, s"doclen: $at")
+        val st = stored(c, Stores.collStatsDir, Stores.collStatsSchema).collect()
+        assert(st.map(r => (r.getLong(0), r.getDouble(1))).toSeq ===
+          Seq((dl.size.toLong, dl.values.sum.toDouble / dl.size)), s"collstats: $at")
+        if (fts) assert(sorted(stored(c, Stores.postingsDir, Stores.postingsSchema),
+            Seq("term", "id", "tf", "dl")) === sorted(PostingsIndex.build(c.docs()),
+            Seq("term", "id", "tf", "dl")), s"postings: $at")
+        else assert(!Stores.partitionExists(spark, Stores.postingsDir(c.root), c.name), at)
+      }
+      def add(c: Collection, ids: Seq[String], tag: String): Unit = {
+        val texts = docs(ids, tag)
+        c.add(texts, ids = Some(ids))
+        live ++= ids.zip(texts)
+      }
+      val c = coll(embedder = Some(OpenDictEmbedder), useFts = fts)
+      add(c, (0 until 8).map(i => s"d$i"), "base")
       build(c)
       c.createDedupIndex()
       check(c, "build")
       val confs = if (deltaPath) Seq("spark.graft.store.directUpsertMaxBytes" -> "0",
         "spark.graft.compact.auto" -> "false") else Nil
       TestSpark.withConfs(confs: _*) {
-        c.add(docs(Seq("n0", "n1", "n2"), "added"), ids = Some(Seq("n0", "n1", "n2")))
+        add(c, Seq("n0", "n1", "n2"), "added")
         check(c, "add")
-        c.update(Seq("d1", "d2", "n0"), docs(Seq("d1", "d2", "n0"), "updated"))
+        add(c, Seq("d1", "d2", "n0"), "updated")
         check(c, "update")
         c.delete(Seq("d3", "n1"))
+        live --= Seq("d3", "n1")
         check(c, "delete")
-        c.add(docs(Seq("m0", "d3"), "late"), ids = Some(Seq("m0", "d3")))
+        add(c, Seq("m0", "d3"), "late")
         check(c, "second add")
         assert(deltaPath == Stores.deltaCount(spark, Stores.docsDir(c.root), c.name) > 0)
         c.compact()
@@ -761,9 +788,9 @@ class CollectionSpec extends AnyFunSuite {
 
   test("doclen store: avg_dl stays exact through delta upserts, deletes, compaction") {
     import graft.index.Stores
-    spark.conf.set("spark.graft.store.directUpsertMaxBytes", "0") // force the delta path
-    spark.conf.set("spark.graft.compact.auto", "false")
-    try {
+    // force the delta path
+    TestSpark.withConfs("spark.graft.store.directUpsertMaxBytes" -> "0",
+        "spark.graft.compact.auto" -> "false") {
       val root = freshRoot()
       val c = Collection(spark, root, "dl")
       def stats(): (Long, Double) = {
@@ -782,9 +809,6 @@ class CollectionSpec extends AnyFunSuite {
       c.compact()
       assert(stats() === ((2L, 2.5)))                 // compaction preserves stats inputs
       assert(Stores.deltaCount(spark, Stores.doclenDir(root), "dl") === 0)
-    } finally {
-      spark.conf.unset("spark.graft.store.directUpsertMaxBytes")
-      spark.conf.unset("spark.graft.compact.auto")
     }
   }
 
@@ -814,38 +838,37 @@ class CollectionSpec extends AnyFunSuite {
     import graft.index.Stores
     // toy-sized partitions take the direct merge path and auto-compaction
     // folds small deltas — disable both to pin the raw segment mechanics
-    spark.conf.set("spark.graft.store.directUpsertMaxBytes", "0")
-    spark.conf.set("spark.graft.compact.auto", "false")
-    val root = freshRoot()
-    val c = Collection(spark, root, "seg")
-    c.add(Seq("alpha beta", "gamma delta", "epsilon"), ids = Some(Seq("a", "b", "c")))
-    assert(Stores.deltaCount(spark, Stores.docsDir(root), "seg") === 0) // first write = base
-    // upsert overriding one id + adding one; then a token-less override;
-    // then a delete — each an appended delta, never a base rewrite
-    c.add(Seq("beta replaced", "zeta new"), ids = Some(Seq("b", "d")))
-    assert(Stores.deltaCount(spark, Stores.docsDir(root), "seg") === 1)
-    c.add(Seq(""), ids = Some(Seq("a"))) // now token-less: postings rows must die via gone
-    c.delete(Seq("c"))
-    assert(Stores.deltaCount(spark, Stores.docsDir(root), "seg") === 3)
-    def state(): (Long, Set[(String, String)], Set[String], Long) = {
-      val docs = c.docs().select("id", "content").collect()
-        .map(r => (r.getString(0), r.getString(1))).toSet
-      val hits = c.query("beta").results.map(_.id).toSet
-      val stats = Stores.readPartition(spark, Stores.collStatsDir(root), "seg",
-        Stores.collStatsSchema).head()
-      (c.count(), docs, hits, stats.getLong(0))
+    TestSpark.withConfs("spark.graft.store.directUpsertMaxBytes" -> "0",
+        "spark.graft.compact.auto" -> "false") {
+      val root = freshRoot()
+      val c = Collection(spark, root, "seg")
+      c.add(Seq("alpha beta", "gamma delta", "epsilon"), ids = Some(Seq("a", "b", "c")))
+      assert(Stores.deltaCount(spark, Stores.docsDir(root), "seg") === 0) // first write = base
+      // upsert overriding one id + adding one; then a token-less override;
+      // then a delete — each an appended delta, never a base rewrite
+      c.add(Seq("beta replaced", "zeta new"), ids = Some(Seq("b", "d")))
+      assert(Stores.deltaCount(spark, Stores.docsDir(root), "seg") === 1)
+      c.add(Seq(""), ids = Some(Seq("a"))) // now token-less: postings rows must die via gone
+      c.delete(Seq("c"))
+      assert(Stores.deltaCount(spark, Stores.docsDir(root), "seg") === 3)
+      def state(): (Long, Set[(String, String)], Set[String], Long) = {
+        val docs = c.docs().select("id", "content").collect()
+          .map(r => (r.getString(0), r.getString(1))).toSet
+        val hits = c.query("beta").results.map(_.id).toSet
+        val stats = Stores.readPartition(spark, Stores.collStatsDir(root), "seg",
+          Stores.collStatsSchema).head()
+        (c.count(), docs, hits, stats.getLong(0))
+      }
+      val before = state()
+      assert(before._1 === 3)
+      assert(before._2 === Set("a" -> "", "b" -> "beta replaced", "d" -> "zeta new"))
+      assert(before._3 === Set("b")) // old "alpha beta" postings for a are gone
+      assert(before._4 === 3)
+      c.compact()
+      assert(Stores.deltaCount(spark, Stores.docsDir(root), "seg") === 0)
+      assert(Stores.deltaCount(spark, Stores.postingsDir(root), "seg") === 0)
+      assert(state() === before) // resolution and the compacted base agree
     }
-    val before = state()
-    assert(before._1 === 3)
-    assert(before._2 === Set("a" -> "", "b" -> "beta replaced", "d" -> "zeta new"))
-    assert(before._3 === Set("b")) // old "alpha beta" postings for a are gone
-    assert(before._4 === 3)
-    c.compact()
-    assert(Stores.deltaCount(spark, Stores.docsDir(root), "seg") === 0)
-    assert(Stores.deltaCount(spark, Stores.postingsDir(root), "seg") === 0)
-    assert(state() === before) // resolution and the compacted base agree
-    spark.conf.unset("spark.graft.store.directUpsertMaxBytes")
-    spark.conf.set("spark.graft.compact.auto", "true")
   }
 
   test("delete probes collections in one scan: special-char names and delta-only docs") {
@@ -859,10 +882,10 @@ class CollectionSpec extends AnyFunSuite {
     other.add(Seq("bystander gamma"), ids = Some(Seq("b1")))
     // a doc that exists ONLY in a delta segment (base scan can't see it):
     // force the delta path, then delete it cross-collection from `other`
-    spark.conf.set("spark.graft.store.directUpsertMaxBytes", "0")
-    weird.add(Seq("delta-only doc"), ids = Some(Seq("d1")))
-    other.delete(Seq("t1", "d1", "missing"))
-    spark.conf.unset("spark.graft.store.directUpsertMaxBytes")
+    TestSpark.withConfs("spark.graft.store.directUpsertMaxBytes" -> "0") {
+      weird.add(Seq("delta-only doc"), ids = Some(Seq("d1")))
+      other.delete(Seq("t1", "d1", "missing"))
+    }
     assert(weird.docs().select("id").collect().map(_.getString(0)).toSet === Set("k1"))
     assert(other.count() === 1)
   }
@@ -979,9 +1002,9 @@ class CollectionSpec extends AnyFunSuite {
     import TestSpark.spark.implicits._
     val root = freshRoot()
     val c = Collection(spark, root, "mt", Some(OpenDictEmbedder))
-    spark.conf.set("spark.graft.compact.auto", "false")
-    spark.conf.set("spark.graft.store.directUpsertMaxBytes", "0") // force delta appends
-    try {
+    // force delta appends
+    TestSpark.withConfs("spark.graft.compact.auto" -> "false",
+        "spark.graft.store.directUpsertMaxBytes" -> "0") {
       c.add(Seq("Lorem ipsum dolor", "sit amet"), ids = Some(Seq("a", "b")))
       c.createVectorIndex(numTables = 8, numPlanes = 2, dim = 3)
       (1 to 5).foreach(i => c.add(Seq(s"novel document $i"), ids = Some(Seq(s"d$i"))))
@@ -1010,9 +1033,6 @@ class CollectionSpec extends AnyFunSuite {
       // idempotent: a second maintain reports the same clean state
       val rep2 = c.maintain().head()
       assert(rep2.getLong(0) === 7L && rep2.getLong(2) === 0L && rep2.getLong(3) === 0L)
-    } finally {
-      spark.conf.set("spark.graft.compact.auto", "true")
-      spark.conf.unset("spark.graft.store.directUpsertMaxBytes")
     }
   }
 
@@ -1067,9 +1087,8 @@ class CollectionSpec extends AnyFunSuite {
   }
 
   test("docsAsOf/history: upserts and deletes travel; compaction folds history") {
-    spark.conf.set("spark.graft.store.directUpsertMaxBytes", "0")
-    spark.conf.set("spark.graft.compact.auto", "false")
-    try {
+    TestSpark.withConfs("spark.graft.store.directUpsertMaxBytes" -> "0",
+        "spark.graft.compact.auto" -> "false") {
       import spark.implicits._
       val c = coll(freshRoot(), "tt")
       c.addDf(Seq(("a", "alpha v1"), ("b", "beta v1"), ("d", "doomed")).toDF("id", "content"))
@@ -1090,9 +1109,6 @@ class CollectionSpec extends AnyFunSuite {
       assert(c.history() === Seq(0L))
       assert(state(c.docsAsOf(0)) ===
         Map("a" -> "alpha v2", "b" -> "beta v1", "c" -> "new gamma"))
-    } finally {
-      spark.conf.unset("spark.graft.store.directUpsertMaxBytes")
-      spark.conf.set("spark.graft.compact.auto", "true")
     }
   }
 
@@ -1303,8 +1319,8 @@ class CollectionSpec extends AnyFunSuite {
       finally s.close()
     }
     for (deltaPath <- Seq(false, true)) {
-      if (deltaPath) spark.conf.set("spark.graft.store.directUpsertMaxBytes", "0")
-      try {
+      val confs = if (deltaPath) Seq("spark.graft.store.directUpsertMaxBytes" -> "0") else Nil
+      TestSpark.withConfs(confs: _*) {
         val root = freshRoot()
         val main = coll(root, "main")
         val other = coll(root, "other")
@@ -1322,7 +1338,7 @@ class CollectionSpec extends AnyFunSuite {
         assert(after.keySet === before.keySet, s"deltaPath=$deltaPath")
         before.foreach { case (p, bytes) => assert(after(p) == bytes, s"$p changed, deltaPath=$deltaPath") }
         assert(other.count() === 6L)
-      } finally spark.conf.unset("spark.graft.store.directUpsertMaxBytes")
+      }
     }
   }
 
@@ -1347,9 +1363,8 @@ class CollectionSpec extends AnyFunSuite {
   }
 
   test("diffSnapshots + Collection.list: era classification and store catalog") {
-    spark.conf.set("spark.graft.store.directUpsertMaxBytes", "0")
-    spark.conf.set("spark.graft.compact.auto", "false")
-    try {
+    TestSpark.withConfs("spark.graft.store.directUpsertMaxBytes" -> "0",
+        "spark.graft.compact.auto" -> "false") {
       import spark.implicits._
       val root = freshRoot()
       val c = coll(root, "d1")
@@ -1367,9 +1382,6 @@ class CollectionSpec extends AnyFunSuite {
       coll(root, "d2").add(Seq("x"))
       assert(Collection.list(spark, root) === Seq("d1", "d2"))
       assert(Collection.list(spark, freshRoot()) === Seq.empty)
-    } finally {
-      spark.conf.unset("spark.graft.store.directUpsertMaxBytes")
-      spark.conf.set("spark.graft.compact.auto", "true")
     }
   }
 
@@ -1517,9 +1529,8 @@ class CollectionSpec extends AnyFunSuite {
       // the hinted id set feeds the docs/postings/doclen/minhash merges
       c.add(Seq("alpha epsilon", "zeta eta"), ids = Some(Seq("a", "c")))
       // and the delta path (forced): unhinted, but must also stay silent
-      spark.conf.set("spark.graft.store.directUpsertMaxBytes", "0")
-      try c.add(Seq("theta iota"), ids = Some(Seq("d")))
-      finally spark.conf.unset("spark.graft.store.directUpsertMaxBytes")
+      TestSpark.withConfs("spark.graft.store.directUpsertMaxBytes" -> "0")(
+        c.add(Seq("theta iota"), ids = Some(Seq("d"))))
       assert(c.count() === 4L)
       assert(events.isEmpty,
         s"dropped join hints on the upsert path:\n${events.toArray.mkString("\n")}")
@@ -1590,9 +1601,8 @@ class CollectionSpec extends AnyFunSuite {
     assert(queryAgreesWithFrame(emptied, limit = 10).total === 0)
     assert(queryAgreesWithFrame(emptied, "beta", limit = 10).total === 0)
 
-    spark.conf.set("spark.graft.store.directUpsertMaxBytes", "0")
-    spark.conf.set("spark.graft.compact.auto", "false")
-    try {
+    TestSpark.withConfs("spark.graft.store.directUpsertMaxBytes" -> "0",
+        "spark.graft.compact.auto" -> "false") {
       val c = coll()
       c.add((1 to 5).map(i => s"alpha beta doc$i"), ids = Some((1 to 5).map(i => s"d$i")))
       c.add(Seq("alpha gamma", "alpha delta"), ids = Some(Seq("d2", "d6")))
@@ -1610,9 +1620,6 @@ class CollectionSpec extends AnyFunSuite {
         assert(queryAgreesWithFrame(c, "beta", limit = 10).total === 3)
         assert(queryAgreesWithFrame(c, limit = 2, orderBy = Seq("k")).total === 5)
       } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    } finally {
-      spark.conf.unset("spark.graft.store.directUpsertMaxBytes")
-      spark.conf.unset("spark.graft.compact.auto")
     }
   }
 

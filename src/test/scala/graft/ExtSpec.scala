@@ -666,14 +666,10 @@ class ExtSpec extends AnyFunSuite {
     // a direct merge OR a size-ratio compaction folds history by design,
     // and this tiny base sits right at the deltas-rival-base threshold)
     // then read the pre-upsert era
-    spark.conf.set("spark.graft.store.directUpsertMaxBytes", "0")
-    spark.conf.set("spark.graft.compact.auto", "false")
-    try {
+    TestSpark.withConfs("spark.graft.store.directUpsertMaxBytes" -> "0",
+        "spark.graft.compact.auto" -> "false") {
       graft.api.Collection(spark, root, "main").addDf(
         Seq(("1", "spark makes analytics very fast")).toDF("id", "content"))
-    } finally {
-      spark.conf.unset("spark.graft.store.directUpsertMaxBytes")
-      spark.conf.set("spark.graft.compact.auto", "true")
     }
     val v0 = spark.sql(s"SELECT content FROM graft_docs_asof('$root', 'main', 0) WHERE id = '1'")
       .head().getString(0)

@@ -135,9 +135,8 @@ class ImpactSpec extends AnyFunSuite {
   }
 
   test("pure-insert delta keeps the sidecar exact and servable") {
-    spark.conf.set("spark.graft.store.directUpsertMaxBytes", "0")
-    spark.conf.set("spark.graft.compact.auto", "false")
-    try {
+    TestSpark.withConfs("spark.graft.store.directUpsertMaxBytes" -> "0",
+        "spark.graft.compact.auto" -> "false") {
       val c = build(300, cap = 32)
       // new ids only, including docs that must ENTER the common top-k
       val batch = (1 to 40).map { i =>
@@ -151,16 +150,12 @@ class ImpactSpec extends AnyFunSuite {
       assertSameTopK(c, "common", 10)
       assertSameTopK(c, "rare gamma", 5)
       assertSameTopK(c, "gamma", 5) // brand-new term, fully delta-born
-    } finally {
-      spark.conf.unset("spark.graft.store.directUpsertMaxBytes")
-      spark.conf.set("spark.graft.compact.auto", "true")
     }
   }
 
   test("gone-aware: an update delta KEEPS serving certified; compact() restores the exact meta") {
-    spark.conf.set("spark.graft.store.directUpsertMaxBytes", "0")
-    spark.conf.set("spark.graft.compact.auto", "false")
-    try {
+    TestSpark.withConfs("spark.graft.store.directUpsertMaxBytes" -> "0",
+        "spark.graft.compact.auto" -> "false") {
       val c = build(300, cap = 32)
       // d00013 is a top-tf 'common' doc AND a 'rare' doc — replacing its
       // content exercises both removal (old terms) and birth (new terms)
@@ -187,16 +182,12 @@ class ImpactSpec extends AnyFunSuite {
         "compact must re-derive the exact meta")
       assertSameTopK(c, "common", 10)
       assertSameTopK(c, "different", 3)
-    } finally {
-      spark.conf.unset("spark.graft.store.directUpsertMaxBytes")
-      spark.conf.set("spark.graft.compact.auto", "true")
     }
   }
 
   test("gone-aware: a delete delta KEEPS serving certified; deleted docs are provably gone") {
-    spark.conf.set("spark.graft.store.directUpsertMaxBytes", "0")
-    spark.conf.set("spark.graft.compact.auto", "false")
-    try {
+    TestSpark.withConfs("spark.graft.store.directUpsertMaxBytes" -> "0",
+        "spark.graft.compact.auto" -> "false") {
       val c = build(300, cap = 32)
       // d00013/d00026: the two highest-ranked 'common' docs and 'rare' docs
       val before = c.impactCertifiedTopK("common", 10, 0)
@@ -226,9 +217,6 @@ class ImpactSpec extends AnyFunSuite {
       c.compact()
       assert(c.impactCertifiedTopK("common", 10, 0).nonEmpty)
       assertSameTopK(c, "common", 10)
-    } finally {
-      spark.conf.unset("spark.graft.store.directUpsertMaxBytes")
-      spark.conf.set("spark.graft.compact.auto", "true")
     }
   }
 
@@ -347,9 +335,8 @@ class ImpactSpec extends AnyFunSuite {
     // (no compaction), checking certified-vs-full equality after every op.
     // This is where a wrong bound, a missed gone-claim, or a stale-df serve
     // would surface as a score or membership mismatch.
-    spark.conf.set("spark.graft.store.directUpsertMaxBytes", "0")
-    spark.conf.set("spark.graft.compact.auto", "false")
-    try {
+    TestSpark.withConfs("spark.graft.store.directUpsertMaxBytes" -> "0",
+        "spark.graft.compact.auto" -> "false") {
       val rnd = new scala.util.Random(4321)
       val vocab = Vector("aa", "bb", "cc", "dd", "ee")
       var served = 0
@@ -394,9 +381,6 @@ class ImpactSpec extends AnyFunSuite {
       }
       info(s"gone-aware certified serves: $served, fallbacks: $declined")
       assert(served > 0, "mutation fuzz must exercise the gone-aware certified path")
-    } finally {
-      spark.conf.unset("spark.graft.store.directUpsertMaxBytes")
-      spark.conf.set("spark.graft.compact.auto", "true")
     }
   }
 

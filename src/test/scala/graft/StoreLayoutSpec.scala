@@ -172,4 +172,112 @@ class StoreLayoutSpec extends AnyFunSuite {
     assert(scanned * 2 <= df,
       s"a tf-bound read must skip low-tf row groups (scanned $scanned of $df)")
   }
+
+  /** Embeds each text as a deterministic 4-vector from its hash. */
+  private object HashEmbedder extends graft.api.Embedder {
+    def embed(texts: Seq[String]): Seq[Array[Float]] = texts.map { t =>
+      val r = new scala.util.Random(t.hashCode.toLong)
+      Array.fill(4)(r.nextFloat() * 2f - 1f)
+    }
+  }
+
+  /** A small FTS collection with `build`'s vector index, a MinHash index
+    * and an impact index. */
+  private def indexed(build: graft.api.Collection => Unit): graft.api.Collection = {
+    val c = graft.api.Collection(spark, freshStore(), "t", Some(HashEmbedder))
+    c.add((0 until 24).map(i => s"doc $i words w${i % 5} w${i % 7} w${i % 3}"),
+      ids = Some((0 until 24).map(i => f"d$i%02d")))
+    build(c)
+    c.createDedupIndex(n = 2, bands = 4, rowsPerBand = 2)
+    c.createImpactIndex(cap = 4)
+    c
+  }
+
+  test("every store partition is one file sorted by its key after build, add and delete") {
+    // (store, sort key) of every partition a collection keeps
+    val keys = Seq("docs" -> Seq("id"), "postings" -> Seq("term", "tf"),
+      "doclen" -> Seq("id"), "collstats" -> Nil, "annindex" -> Seq("table", "bucket"),
+      "annivf" -> Seq("cluster"), "annivfcent" -> Seq("cluster"), "annpq" -> Seq("id"),
+      "annpqbook" -> Seq("subspace", "code"), "annivfpq" -> Seq("cluster"),
+      "minhash" -> Seq("band", "bh"), "impactmeta" -> Seq("id"))
+    def cmp(a: Any, b: Any): Int = (a, b) match {
+      case (x: String, y: String) => x.compareTo(y)
+      case (x: java.lang.Number, y: java.lang.Number) =>
+        java.lang.Long.compare(x.longValue, y.longValue)
+    }
+    val builds: Seq[(String, graft.api.Collection => Unit)] = Seq(
+      "lsh" -> (_.createVectorIndex(numTables = 2, numPlanes = 2, dim = 4)),
+      "ivf" -> (_.createVectorIndex(kind = "ivf", numCentroids = 2, nprobe = 1, iters = 2)),
+      "pq" -> (_.createVectorIndex(kind = "pq", m = 2, numCentroids = 4, iters = 2)),
+      "ivfpq" -> (_.createVectorIndex(kind = "ivfpq", numCentroids = 2, nprobe = 1,
+        m = 2, iters = 2)))
+    for ((kind, build) <- builds) {
+      val c = indexed(build)
+      c.add(Seq("added one w1", "added two w2"), ids = Some(Seq("n0", "n1")))
+      c.delete(Seq("d03", "d04", "n0"))
+      assert(Stores.deltaCount(spark, Stores.docsDir(c.root), "t") === 0, "merge path")
+      val present = keys.filter { case (store, _) =>
+        Stores.partitionExists(spark, s"${c.root}/$store", "t") }
+      assert(present.size >= 7, s"$kind: ${present.map(_._1)}")
+      for ((store, key) <- present) {
+        val files = new java.io.File(Stores.partitionPath(s"${c.root}/$store", "t"))
+          .listFiles().filter(_.getName.endsWith(".parquet"))
+        assert(files.length === 1, s"$kind/$store: ${files.length} files")
+        val rows = spark.read.parquet(files.head.getPath).select(key.map(col): _*)
+          .collect().map(_.toSeq)
+        val ordered = rows.sliding(2).forall {
+          case Array(a, b) => a.zip(b).map { case (x, y) => cmp(x, y) }
+            .find(_ != 0).forall(_ < 0)
+          case _ => true
+        }
+        assert(ordered, s"$kind/$store: rows not sorted by ${key.mkString(", ")}")
+      }
+    }
+  }
+
+  test("delta segments: one file per gone sidecar, and reads log no ignored paths") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val c = indexed(_.createVectorIndex(numTables = 2, numPlanes = 2, dim = 4))
+    TestSpark.withConfs("spark.graft.store.directUpsertMaxBytes" -> "0",
+        "spark.graft.compact.auto" -> "false") {
+      c.add(Seq("added one w1", "added two w2"), ids = Some(Seq("n0", "n1")))
+      c.delete((0 until 10).map(i => f"d$i%02d"))
+    }
+    val gone = new java.io.File(c.root).listFiles().toSeq
+      .flatMap(store => Option(new java.io.File(store, "collection=t").listFiles()).toSeq.flatten)
+      .filter(_.getName.endsWith("-gone"))
+    // the upsert's postings, LSH and MinHash sidecars (docs and doclen rows
+    // claim their ids), then the delete's sidecar in each of those five
+    assert(gone.size === 8, gone.map(_.getPath).mkString(", "))
+    for (g <- gone)
+      assert(g.listFiles().count(_.getName.startsWith("part-")) === 1, g.getPath)
+    // the appender hangs off the ROOT LoggerConfig of the current context
+    // (a named-logger appender captures nothing on Spark's slf4j route)
+    val events = new java.util.concurrent.CopyOnWriteArrayList[String]()
+    val appender = new AbstractAppender("graft-ignored-paths", null, null, false,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.contains("paths were ignored"))
+          events.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val rootCfg = ctx.getConfiguration.getRootLogger
+    rootCfg.addAppender(appender, Level.WARN, null)
+    ctx.updateLoggers()
+    try {
+      assert(c.count() === 16L)
+      assert(c.query("w1").total === c.docs().filter($"content".rlike("\\bw1\\b")).count())
+      assert(c.vectorIndex().get.buckets.select("id").distinct().count() === 16L)
+      c.delete(Seq("d10")) // the cross-collection scan reads delta files too
+      assert(c.count() === 15L)
+    } finally {
+      rootCfg.removeAppender("graft-ignored-paths")
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    assert(events.isEmpty, events.toArray.mkString("\n"))
+  }
 }
