@@ -53,7 +53,8 @@ final class Collection private (
     val name: String,
     val embedder: Option[Embedder],
     val useFts: Boolean,
-    val foldAccents: Boolean) {
+    val foldAccents: Boolean,
+    sliceMaxRows: Int = Collection.SliceMaxRows) {
 
   import spark.implicits._
 
@@ -136,7 +137,8 @@ final class Collection private (
   /** One mutation's input, shared by every kind's derivation: `frame` holds
     * the new docs (none for a delete), `ids` every id the mutation claims
     * — broadcast-hinted in `antiIds` for the merge anti-joins when
-    * `smallIds` — and `bare` says some claimed ids have no row in `frame`.
+    * `smallIds` — and `bare` says the batch only removes its ids (a
+    * delete: `frame` is empty).
     * `est` is the frame's size estimate, None when no size hints apply.
     * The frame is tokenized once, on first use, for postings and doclen
     * alike; [[writeKinds]] unpersists it.
@@ -201,6 +203,21 @@ final class Collection private (
       } else
         spark.sql("SELECT CAST(0 AS LONG) n_docs, CAST(0.0 AS DOUBLE) avg_dl")
     } else Stores.readPartition(spark, statsDir, name, Stores.collStatsSchema)
+
+  /** The stats row's (n_docs, avg_dl) as a driver value, memoized under
+    * the stats partition's fingerprint (so any stats write, including
+    * [[collStats]]'s self-heal, is seen by the next call). */
+  private def collStatsValue(): (Long, Double) =
+    Stores.memoizedMeta(spark, statsDir, name, "collStats") {
+      val r = collStats().head()
+      (r.getLong(0), r.getDouble(1))
+    }
+
+  /** This handle with the ranked read's driver bound set to `rows` postings
+    * rows ([[Collection.SliceMaxRows]] by default); a negative bound forces
+    * the distributed arm. */
+  private[graft] def withSliceMaxRows(rows: Int): Collection =
+    new Collection(spark, root, name, embedder, useFts, foldAccents, rows)
 
   /** Scalar doc count of this collection (reference core.py:125-138). */
   def count(): Long = docs().count()
@@ -1269,30 +1286,26 @@ final class Collection private (
       dfOverride = if (dfStale) Some(staleDfFor(terms, postingsFp)) else None
       top <- graft.exec.ImpactTopK.certifiedTopK(impactMetaRows(), postings(),
         nDocs, avgDl, terms, isAnd, k + offset, dfOverride = dfOverride)
-    } yield {
-      val page = top.drop(offset)
-      if (page.isEmpty)
-        docs().limit(0)
-          .select($"id", $"content", $"metadata", lit(0.0).as("rank"))
-      else {
-        val hits = page.toDF("id", "rank")
-        // the k ids are driver-side, so the docs fetch is a PUSHED In
-        // predicate, not a bare join: with the id-range-clustered docs
-        // layout (full rewrites rangeBy id) the parquet footer skips every
-        // file outside the k ids' ranges — the broadcast join only attaches
-        // ranks to the handful of surviving rows (the full path instead
-        // joins EVERY matching id before its top-k cut). Very deep pages
-        // skip the literal list (a thousands-wide In bloats codegen and
-        // degrades to a min/max range in the reader anyway) and keep the
-        // plain broadcast join.
-        val fetched =
-          if (page.size <= 1000) docs().filter($"id".isin(page.map(_._1): _*))
-          else docs()
-        fetched.join(broadcast(hits), Seq("id"))
-          .select($"id", $"content", $"metadata", $"rank")
-          .orderBy($"rank".desc, $"id".asc)
-      }
-    }
+    } yield docsOf(top.drop(offset), Map.empty)
+      .select($"id", $"content", $"metadata", $"rank")
+      .orderBy($"rank".desc, $"id".asc)
+  }
+
+  /** The docs rows of the driver-side `hits` (id, rank) that pass
+    * `where`, rank attached: a broadcast join of the hits to the docs
+    * store. Up to [[Collection.InFetchMaxIds]] hits, the docs read also
+    * carries a PUSHED `id IN (…)` predicate: with the id-range-clustered
+    * docs layout the parquet footer skips every file outside the ids'
+    * ranges, so a page never joins the whole store. More hits keep the
+    * plain broadcast join (a thousands-wide In bloats codegen and degrades
+    * to a min/max range in the reader anyway). Hits without a docs row
+    * (crash residue in postings) drop out.
+    */
+  private def docsOf(hits: Seq[(String, Double)], where: Map[String, Any]): DataFrame = {
+    val fetched =
+      if (hits.size <= Collection.InFetchMaxIds) docs().filter($"id".isin(hits.map(_._1): _*))
+      else docs()
+    applyWhere(fetched, where).join(broadcast(hits.toDF("id", "rank")), Seq("id"))
   }
 
   /** Re-derive the meta from the current postings (already written):
@@ -1319,33 +1332,15 @@ final class Collection private (
       sortBy = Seq("id"), rangeBy = Seq("id"), sizeHintBytes = Some(BigInt(pb) + pd))
   }
 
-  /** The serving gate's (cap, watermark, (n_docs, avg_dl)), cached under a
-    * filesystem fingerprint of the meta partition AND the stats store: a
-    * warm [[searchTopK]] pays two FS listings — zero Spark jobs — before
-    * the real query, instead of a sentinel filter+collect and a stats
-    * head() per call. Any store rewrite or delta append changes the
-    * fingerprint (part files are job-unique), so staleness is impossible,
-    * including through OTHER Collection handles on the same root.
+  /** The serving gate's (cap, watermark, (n_docs, avg_dl)): the meta's
+    * sentinel rows and the stats row, each memoized under its partition's
+    * fingerprint — a warm [[searchTopK]] pays filesystem listings, zero
+    * Spark jobs, before the real query. No index (the common case for
+    * collections that never built one): no stats read at all.
     */
   private def impactGate(): (Option[Int], Option[(Long, Long)], (Long, Double)) = {
-    val fpMeta = Stores.partitionFingerprint(spark, impactMetaDir, name)
-    // no index at all (the common case for collections that never built
-    // one, e.g. a federated root's other members): answer from the
-    // listing alone — no stats job, no cache entry to churn
-    if (fpMeta == 0L) return (None, None, (0L, 0.0))
-    val fp = fpMeta ^ java.lang.Long.rotateLeft(
-      Stores.partitionFingerprint(spark, statsDir, name), 17)
-    Collection.impactGateCache.getOrElseUpdate((root, name, fp), {
-      // bounded size without wholesale wipes: dropping ONE arbitrary entry
-      // keeps every other collection's hot gate cached (a full clear() made
-      // the 513th distinct state re-run every cached stats job)
-      if (Collection.impactGateCache.size > 512)
-        Collection.impactGateCache.headOption.foreach(kv =>
-          Collection.impactGateCache.remove(kv._1))
-      val st = collStats().select($"n_docs", $"avg_dl").head()
-      val (cap, wm) = impactSentinels()
-      (cap, wm, (st.getLong(0), st.getDouble(1)))
-    })
+    val (cap, wm) = impactSentinels()
+    if (cap.isEmpty) (None, None, (0L, 0.0)) else (cap, wm, collStatsValue())
   }
 
   /** Stored cap, None without an impact index (or with a meta written
@@ -1385,7 +1380,7 @@ final class Collection private (
     * the cache pay ONE term-pruned count over the resolved postings; every
     * hit is free until the next write changes `postingsFp`, the postings
     * fingerprint (recursive listing — delta and gone files included, so
-    * staleness is impossible, like [[Collection.impactGate]]). Dead terms
+    * staleness is impossible, like [[Stores.memoizedMeta]]). Dead terms
     * cache as 0 — they stay dead until the store changes.
     */
   private def staleDfFor(terms: Seq[String], postingsFp: Long): Map[String, Long] = {
@@ -1398,7 +1393,8 @@ final class Collection private (
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("__df"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     missing.foreach { t =>
-      // bounded without wholesale wipes (the impactGateCache policy)
+      // bounded without wholesale wipes: dropping ONE arbitrary entry keeps
+      // every other collection's hot terms cached
       if (Collection.staleDfCache.size > 4096)
         Collection.staleDfCache.headOption.foreach(kv =>
           Collection.staleDfCache.remove(kv._1))
@@ -1622,7 +1618,8 @@ final class Collection private (
     *     claims every batch id, so replaced, deleted or row-less docs leave
     *     — the Spark analogue of the reference's delete-stale-then-insert
     *     (core.py:505-514). A dense kind's rows already claim an upsert's
-    *     ids, so it writes no sidecar then.
+    *     ids, so it writes no sidecar then; a delete writes the sidecar
+    *     alone.
     *
     * A kind that is not live but whose store exists is dropped. A rewrite's
     * size hint is the kind's segment bytes (none for a full write) plus the
@@ -1663,8 +1660,10 @@ final class Collection private (
             // a kind without a base partition (the doclen of a store written
             // before the doclen layout) materializes its resolved rows once
             if (!Stores.partitionExists(spark, k.dir, name)) overwriteKind(k, k.stored())
-            Stores.appendDelta(spark, k.dir, name, rows(b),
-              gone = if (k.dense && !b.bare) None else Some(b.ids), sortBy = k.sortBy)
+            // a delete has no rows to add: its gone sidecar alone
+            if (b.bare) Stores.appendGone(spark, k.dir, name, b.ids)
+            else Stores.appendDelta(spark, k.dir, name, rows(b),
+              gone = if (k.dense) None else Some(b.ids), sortBy = k.sortBy)
         }
       }
       val avgDl = writeStatsFrom(doclen())
@@ -1777,9 +1776,16 @@ final class Collection private (
     * pre-limit match count (SURVEY §7.4 decision — the SQLite-vector
     * behavior; the PG offset-past-end `total=0` quirk is not replicated).
     *
-    * One Spark action per call — the analogue of the reference's
-    * `count(*) OVER()` beside its page (core.py:408). With `limit > 0` the
-    * unordered match frame carries an observed row count (a fresh
+    * A ranked query first collects its postings slice — the rows of the
+    * query's terms and prefixes, at most [[Collection.SliceMaxRows]] — in
+    * one bounded action and scores it in the driver
+    * ([[graft.exec.Bm25.driverScores]]); the matched (id, rank) set is
+    * broadcast-joined to the docs store, with a pushed `id IN (…)` when it
+    * is small. A larger slice takes the distributed arm: BM25 as column
+    * arithmetic joined to the docs store. Either way the page is ONE more
+    * Spark action — the analogue of the reference's `count(*) OVER()`
+    * beside its page (core.py:408). With `limit > 0` the unordered match
+    * frame carries an observed row count (a fresh
     * [[org.apache.spark.sql.Observation]] per call) and the page is
     * collected through `orderBy.offset.limit`, which plans as ONE
     * `TakeOrderedAndProject`: each task keeps an (offset+limit)-row heap
@@ -1822,8 +1828,12 @@ final class Collection private (
 
   /** The same query pipeline as a lazy, paginated DataFrame with columns
     * (id, content, metadata, rank) — the distributed-consumer API (no
-    * driver-side collect; `query()`'s `limit=0` full collect reproduces the
-    * reference's API-boundary cliff and is for parity only).
+    * collect of the result; `query()`'s `limit=0` full collect reproduces
+    * the reference's API-boundary cliff and is for parity only). A ranked
+    * query runs its one bounded postings-slice job when the frame is
+    * BUILT (see [[query]]); the frame then holds the matched (id, rank)
+    * set as a local relation. Over the slice bound the frame is the
+    * distributed arm's plan and runs nothing until executed.
     */
   def queryFrame(query: String = "", limit: Int = 0, offset: Int = 0,
                  where: Map[String, Any] = Map.empty, orderBy: OrderBy = OrderBy.none,
@@ -2126,7 +2136,7 @@ final class Collection private (
     if (ast.nonEmpty && !vectorSearch && !useFts)
       throw new IllegalArgumentException("This collection does not support full-text search.")
 
-    val filtered = applyWhere(docs(), where)
+    lazy val filtered = applyWhere(docs(), where)
     val byRank = Seq($"rank".desc, $"id".asc)
     def byMeta = Sorter.sortColumns($"metadata", orderBy.map(SortKey.parse), Seq($"id".asc))
 
@@ -2135,20 +2145,27 @@ final class Collection private (
       (VectorSearch.scored(filtered, "embedding", qvec), byRank, true)
     } else ast match {
       case Some(q) =>
-        // Flat AND/OR (every parser shape except mixed `x AND y OR z`):
-        // ONE postings scan produces (matching id, rank) fused — the same
-        // (leaf, doc) aggregate that sums the score counts matched leaves
-        // for the AND test. Non-flat falls back to match ids + rank join.
-        // No broadcast hint either way: the match set is unbounded (a common
-        // term can match most of the corpus); AQE broadcasts when small.
-        val ranked = Bm25.scoredIds(postings(), collStats(), q) match {
-          case Some(scored) => filtered.join(scored, Seq("id"))
-          case None =>
-            val ids = FtsEval.matchingIds(postings(), q)
-            filtered.join(ids, Seq("id"))
-              .join(Bm25.scores(postings(), collStats(), q), Seq("id"), "left")
-              .withColumn("rank", coalesce($"rank", lit(0.0)))
-        }
+        // Driver arm: the query's postings slice, collected in one bounded
+        // job and scored in the driver; only the matched ids' docs rows
+        // are read (late materialization). A slice over the bound takes
+        // the distributed arm. Flat AND/OR (every parser shape except mixed
+        // `x AND y OR z`): ONE postings scan produces (matching id, rank)
+        // fused — the same (leaf, doc) aggregate that sums the score counts
+        // matched leaves for the AND test. Non-flat falls back to match ids
+        // + rank join. No broadcast hint either way: the match set is
+        // unbounded (a common term can match most of the corpus); AQE
+        // broadcasts when small.
+        val (nDocs, avgDl) = collStatsValue()
+        val ranked = Bm25.driverScores(postings(), q, nDocs, avgDl, sliceMaxRows)
+          .map(docsOf(_, where))
+          .getOrElse(Bm25.scoredIds(postings(), collStats(), q) match {
+            case Some(scored) => filtered.join(scored, Seq("id"))
+            case None =>
+              val ids = FtsEval.matchingIds(postings(), q)
+              filtered.join(ids, Seq("id"))
+                .join(Bm25.scores(postings(), collStats(), q), Seq("id"), "left")
+                .withColumn("rank", coalesce($"rank", lit(0.0)))
+          })
         // rank order is deterministic; the reference leaves it storage-ordered (SURVEY §7.4)
         (ranked, if (orderBy.nonEmpty) byMeta else byRank, true)
       case None =>
@@ -2204,18 +2221,24 @@ object Collection {
     * page is collected before recounting (delivery normally takes ms). */
   private val ObservedTotalWait = scala.concurrent.duration.Duration(30, "s")
 
-  /** (root, name, impact meta+stats fingerprint) -> (cap, watermark, stats);
-    * see [[Collection.impactGate]]. Keyed by content fingerprint, so no
-    * invalidation hooks — a changed store simply misses.
+  /** Most postings rows a ranked read collects to the driver to score
+    * there ([[graft.exec.Bm25.driverScores]]); a larger slice takes the
+    * distributed arm. The budget is the driver bound dedup's cluster
+    * collect already takes ([[graft.ext.Dedup.DriverClusterMaxBytes]],
+    * 64 MB) at an estimated 256 B per collected row — (term, id, tf, dl)
+    * as a JVM Row with its two strings — plus the per-doc score state
+    * it feeds: 2^26 / 2^8 = 262,144 rows.
     */
-  private[api] val impactGateCache =
-    scala.collection.concurrent.TrieMap[(String, String, Long),
-      (Option[Int], Option[(Long, Long)], (Long, Double))]()
+  private[graft] val SliceMaxRows: Int = (graft.ext.Dedup.DriverClusterMaxBytes / 256).toInt
+
+  /** Most ids a docs fetch pushes down as an `id IN (…)` literal list
+    * ([[Collection!.docsOf]]). */
+  private val InFetchMaxIds = 1000
 
   /** (root, name, postings fingerprint, term) -> exact resolved df, for
     * the stale-df serving regime; see [[Collection!.staleDfFor]]. Keyed
-    * by content fingerprint like [[impactGateCache]] — no invalidation
-    * hooks, a changed store simply misses.
+    * by content fingerprint — no invalidation hooks, a changed store
+    * simply misses.
     */
   private[api] val staleDfCache =
     scala.collection.concurrent.TrieMap[(String, String, Long, String), Long]()
@@ -2264,9 +2287,10 @@ object Collection {
     * across; callers needing cross-collection calibration re-rank the
     * union (e.g. [[graft.exec.Hybrid.linearFuse]] per arm).
     *
-    * Scale: with `limit == 0` or a `where`, one postings-gated plan per
-    * collection, partition-pruned to its own store slice, unioned lazily —
-    * collections evaluate in parallel inside one job, nothing collects.
+    * Scale: with `limit == 0` or a `where`, one ranked frame per
+    * collection ([[Collection.queryFrame]]: its postings slice scored in
+    * the driver, or over the bound a postings-gated plan), unioned
+    * lazily — the members' page work evaluates in parallel inside one job.
     * A BOUNDED unfiltered query (`limit > 0`, empty `where`) is the
     * federated SERVING shape and scatter-gathers instead: each collection
     * answers through [[Collection.searchTopK]], so members with a valid
@@ -2282,7 +2306,8 @@ object Collection {
     * returned frame is executed. That is deliberate: a top-k serving call
     * exists to answer now, and deferring the O(cap) candidate read would
     * just re-run it per downstream action. The `limit == 0` / filtered
-    * shapes stay fully lazy.
+    * shapes run each member's bounded postings-slice job at call time
+    * too ([[Collection.queryFrame]]); their page work stays lazy.
     */
   def searchAll(spark: SparkSession, root: String, query: String,
                 limit: Int = 0, where: Map[String, Any] = Map.empty): DataFrame = {

@@ -4,10 +4,9 @@ import graft.model.BoolQuery
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** BM25 relevance as pure column arithmetic over postings + stats — the
-  * Spark-native analogue of FTS5's built-in `rank` (reference
-  * src/sifts/core.py:410) / PG `ts_rank` (core.py:554). No UDAF: everything
-  * stays inside whole-stage codegen.
+/** BM25 relevance over postings + stats — the Spark-native analogue of
+  * FTS5's built-in `rank` (reference src/sifts/core.py:410) / PG `ts_rank`
+  * (core.py:554).
   *
   * Formula (Lucene-style non-negative idf):
   *   idf(t)   = ln( (N - df + 0.5) / (df + 0.5) + 1 )
@@ -19,10 +18,118 @@ import org.apache.spark.sql.functions._
   * never asserts rank values (SURVEY §2 Q4), so the formula is ours to pin
   * down and oracle-test (`q4_bm25_rank` exact, `q4b_bm25_prefix_rank`
   * expanded).
+  *
+  * Two arms, one formula. The DRIVER arm ([[driverScores]]) collects the
+  * query's term-pruned postings slice in one bounded job and scores it in
+  * the driver; the DISTRIBUTED arm ([[scoredIds]], [[scores]]) is column
+  * arithmetic inside whole-stage codegen (no UDAF), for slices over the
+  * driver bound. Both evaluate [[idf]] / [[tfPart]] — the driver forms of
+  * [[idfCol]] / [[tfPartCol]] — in the same IEEE op order with the same
+  * `StrictMath.log` Spark's `log` calls, so a per-(leaf, doc) contribution
+  * is bit-identical on either arm; per-doc sums differ only in summation
+  * order (the driver adds in leaf order, Spark's aggregate in arrival
+  * order), which is exact for one or two leaves.
   */
 object Bm25 {
   val K1 = 1.2
   val B = 0.75
+
+  private lazy val logger = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** idf of a leaf matching `df` of `nDocs` docs: [[idfCol]]'s driver form. */
+  def idf(nDocs: Long, df: Long): Double =
+    StrictMath.log((nDocs.toDouble - df.toDouble + 0.5) / (df.toDouble + 0.5) + 1.0)
+
+  /** The tf-part of one (leaf, doc) posting: [[tfPartCol]]'s driver form,
+    * `(b·dl)/avgdl` left-associative like the Column expression. */
+  def tfPart(tf: Long, dl: Long, avgDl: Double): Double =
+    (tf.toDouble * (K1 + 1.0)) / (tf.toDouble + K1 * ((1.0 - B) + B * dl.toDouble / avgDl))
+
+  /** idf over long columns `nDocs` and `df`; Spark's `log` is `StrictMath.log`. */
+  private[graft] def idfCol(nDocs: Column, df: Column): Column =
+    log((nDocs.cast("double") - df + lit(0.5)) / (df + lit(0.5)) + lit(1.0))
+
+  /** The tf-part over the `tf` and `dl` columns at `avgDl`. */
+  private[graft] def tfPartCol(avgDl: Column): Column =
+    (col("tf").cast("double") * lit(K1 + 1.0)) /
+      (col("tf").cast("double") +
+        lit(K1) * (lit(1.0 - B) + lit(B) * col("dl").cast("double") / avgDl))
+
+  /** The DRIVER arm: (id, rank) of every doc `q` matches, unordered, from
+    * ONE bounded collect of the query's postings slice — the rows of
+    * `postings` whose term some leaf matches, as `(term, id, tf, dl)`,
+    * fetched with `limit(maxRows + 1)` so the driver never holds more.
+    * None when the slice exceeds `maxRows` (logged at INFO), or at once
+    * for a negative `maxRows`: the caller then takes the distributed arm. df comes from the slice itself (a
+    * leaf's distinct docs), `(nDocs, avgDl)` from the caller's collstats.
+    * Same semantics as the distributed arm for every parser shape: a
+    * flat AND needs every leaf, a flat OR one, a mixed tree is evaluated
+    * per doc as [[graft.exec.FtsEval]] does, and a matched doc's rank sums
+    * the contribution of every leaf it matches, in leaf order. Ids without
+    * a docs row (crash residue) are returned; the caller's docs join drops
+    * them, as the distributed arm's does.
+    */
+  def driverScores(postings: DataFrame, q: BoolQuery, nDocs: Long, avgDl: Double,
+                   maxRows: Int): Option[Seq[(String, Double)]] = {
+    // extended nodes carry obligations postings cannot discharge
+    // (Collection lowers them first), as in FtsEval
+    require(!BoolQuery.hasExtended(q), s"extended query $q must be lowered first")
+    if (maxRows < 0) return None
+    val leaves = BoolQuery.leaves(q).distinct
+    val preds = leafPredicates(leaves)
+    val slice = postings.filter(preds.pushable && preds.any)
+      .select(col("term"), col("id"), col("tf"), col("dl"))
+      .limit(maxRows + 1).collect()
+    if (slice.length > maxRows) {
+      logger.info(s"BM25 scores stay distributed: the postings slice of '$q' holds " +
+        s"more than $maxRows rows (the driver bound)")
+      return None
+    }
+    // leaf matchers with the Column predicates' semantics: a wildcard
+    // uses find(), as Spark's RLike does
+    val matchers: IndexedSeq[String => Boolean] = leaves.toIndexedSeq.map {
+      case BoolQuery.Term(t) => (term: String) => term == t
+      case BoolQuery.Prefix(p) => (term: String) => term.startsWith(p)
+      case w: BoolQuery.Wildcard =>
+        val rx = java.util.regex.Pattern.compile(w.regex)
+        (term: String) => rx.matcher(term).find()
+      case ext => throw new IllegalStateException(s"unexpanded leaf $ext")
+    }
+    val index = leaves.zipWithIndex.toMap
+    // per doc and leaf: summed tf (-1 = no match) and the doc length
+    val tfs = scala.collection.mutable.HashMap.empty[String, Array[Long]]
+    val dls = scala.collection.mutable.HashMap.empty[String, Long]
+    slice.foreach { r =>
+      val term = r.getString(0)
+      val id = r.getString(1)
+      var i = 0
+      while (i < leaves.size) {
+        if (matchers(i)(term)) {
+          val a = tfs.getOrElseUpdate(id, Array.fill(leaves.size)(-1L))
+          a(i) = (if (a(i) < 0L) 0L else a(i)) + r.getLong(2)
+          dls.getOrElseUpdate(id, r.getLong(3))
+        }
+        i += 1
+      }
+    }
+    val idfs = leaves.indices.map(i =>
+      idf(nDocs, tfs.valuesIterator.count(_(i) >= 0L).toLong)).toArray
+    def matches(t: BoolQuery, a: Array[Long]): Boolean = t match {
+      case BoolQuery.And(l, r) => matches(l, a) && matches(r, a)
+      case BoolQuery.Or(l, r) => matches(l, a) || matches(r, a)
+      case leaf => a(index(leaf)) >= 0L
+    }
+    Some(tfs.iterator.collect { case (id, a) if matches(q, a) =>
+      val dl = dls(id)
+      var rank = 0.0
+      var i = 0
+      while (i < a.length) {
+        if (a(i) >= 0L) rank += idfs(i) * tfPart(a(i), dl, avgDl)
+        i += 1
+      }
+      id -> rank
+    }.toSeq)
+  }
 
   /** FUSED match + rank for a FLAT query (all-AND or all-OR over leaves —
     * every parser output except the mixed `x AND y OR z` shape): ONE
@@ -89,18 +196,23 @@ object Bm25 {
     ands(q).map((true, _)).orElse(ors(q).map((false, _)))
   }
 
-  /** One row per (leaf, matching doc): `leaf, id, tf, dl` with tf summed
-    * over a wildcard leaf's expansion. Two plan shapes:
-    *   - all-exact leaves (the common case): ONE term-pruned scan, leaf key
-    *     = the term itself, NO extra shuffle — (term, id) is already unique,
-    *     so the scan IS the per-(leaf, doc) frame.
-    *   - any wildcard leaf: still ONE postings scan — each row is tagged
-    *     with the array of leaves it matches (exact tag + one per-leaf
-    *     predicate tag), exploded, then ONE (leaf, id) shuffle sums the
-    *     expansion tf. Never a scan per leaf: the term dictionary is read
-    *     once no matter how many wildcards the query carries.
+  /** A query's leaf predicates over the postings `term` column:
+    * `exactPred` = `term IN (…)` of the exact leaves; `tagged` per
+    * non-exact leaf its full match predicate and synthetic leaf key ("*0",
+    * "*1", … — tokens are \p{L}\p{N} runs, so no dictionary term can
+    * collide); `pushable` an OR of `term IN (…)` and each leaf's literal
+    * prefix, which prunes the postings scan (parquet row groups, the
+    * term-clustered layout) where the tag predicates neither push down
+    * nor codegen.
     */
-  private def perLeafDocFrame(postings: DataFrame, leaves: Seq[BoolQuery]): DataFrame = {
+  private final case class LeafPredicates(exactPred: Option[Column],
+                                          tagged: Seq[(Column, String)],
+                                          pushable: Column) {
+    /** Some leaf matches the row's term. */
+    def any: Column = (exactPred.toSeq ++ tagged.map(_._1)).reduce(_ || _)
+  }
+
+  private def leafPredicates(leaves: Seq[BoolQuery]): LeafPredicates = {
     // a silently-ignored leaf kind would mis-score, not crash — reject
     // extended leaves explicitly (Collection expands them to Terms first)
     leaves.foreach {
@@ -109,8 +221,7 @@ object Bm25 {
         s"extended leaf $ext must be expanded before BM25 scoring")
     }
     val exact = leaves.collect { case BoolQuery.Term(t) => t }.distinct
-    // each non-exact leaf gets a synthetic leaf key ("*0", "*1", …) — tokens
-    // are \p{L}\p{N} runs, so no dictionary term can collide with it
+    val exactPred = if (exact.isEmpty) None else Some(col("term").isin(exact: _*))
     // (tag predicate, leaf key, pushable pre-filter) per non-exact leaf
     val expanded: Seq[(Column, String, Column)] = leaves.zipWithIndex.collect {
       case (BoolQuery.Prefix(p), i) =>
@@ -124,19 +235,32 @@ object Bm25 {
           (starts && rx, s"*$i", starts)
         } else (rx, s"*$i", lit(true))
     }
+    LeafPredicates(exactPred, expanded.map(e => (e._1, e._2)),
+      (exactPred.toSeq ++ expanded.map(_._3)).reduce(_ || _))
+  }
+
+  /** One row per (leaf, matching doc): `leaf, id, tf, dl` with tf summed
+    * over a wildcard leaf's expansion. Two plan shapes:
+    *   - all-exact leaves (the common case): ONE term-pruned scan, leaf key
+    *     = the term itself, NO extra shuffle — (term, id) is already unique,
+    *     so the scan IS the per-(leaf, doc) frame.
+    *   - any wildcard leaf: still ONE postings scan, pre-filtered by the
+    *     pushable predicate — each row is tagged with the array of leaves
+    *     it matches (exact tag + one per-leaf predicate tag), exploded,
+    *     then ONE (leaf, id) shuffle sums the expansion tf. Never a scan
+    *     per leaf: the term dictionary is read once no matter how many
+    *     wildcards the query carries.
+    */
+  private def perLeafDocFrame(postings: DataFrame, leaves: Seq[BoolQuery]): DataFrame = {
+    val preds = leafPredicates(leaves)
     val base = postings.select(col("term"), col("id"), col("tf"), col("dl"))
-    if (expanded.isEmpty)
-      base.filter(col("term").isin(exact: _*))
+    if (preds.tagged.isEmpty)
+      base.filter(preds.pushable)
         .select(col("term").as("leaf"), col("id"), col("tf"), col("dl"))
     else {
-      val exactPred = if (exact.isEmpty) Nil else Seq(col("term").isin(exact: _*))
-      val tags = exactPred.map(when(_, col("term"))) ++
-        expanded.map { case (pred, key, _) => when(pred, lit(key)) }
-      // the tag array filter below neither pushes down nor codegens: an OR
-      // of term IN (…) and each leaf's literal prefix prunes the postings
-      // scan first (parquet row groups, the term-clustered layout)
-      val pushable = (exactPred ++ expanded.map(_._3)).reduce(_ || _)
-      base.filter(pushable)
+      val tags = preds.exactPred.toSeq.map(when(_, col("term"))) ++
+        preds.tagged.map { case (pred, key) => when(pred, lit(key)) }
+      base.filter(preds.pushable)
         .select(filter(array(tags: _*), t => t.isNotNull).as("leaves"),
           col("id"), col("tf"), col("dl"))
         .filter(size(col("leaves")) > 0)
@@ -151,15 +275,10 @@ object Bm25 {
     // df per leaf = distinct docs it matches; tiny (≤ #query leaves rows)
     val dfPerLeaf = perLeafDoc.groupBy(col("leaf")).agg(count(lit(1)).as("df"))
     val stats = collStats.select(col("n_docs"), col("avg_dl"))
-    val idf: Column = log(
-      (col("n_docs").cast("double") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0))
-    val tfPart: Column =
-      (col("tf").cast("double") * lit(K1 + 1.0)) /
-        (col("tf").cast("double") +
-          lit(K1) * (lit(1.0 - B) + lit(B) * col("dl").cast("double") / col("avg_dl")))
     perLeafDoc
       .join(broadcast(dfPerLeaf), "leaf")
       .crossJoin(broadcast(stats))
-      .select(col("id"), (idf * tfPart).as("__s"))
+      .select(col("id"),
+        (idfCol(col("n_docs"), col("df")) * tfPartCol(col("avg_dl"))).as("__s"))
   }
 }

@@ -31,8 +31,8 @@ import org.apache.spark.sql.{Column, DataFrame}
   *
   * This is the bound-then-verify shape of REPOSE (ICDE 2021): a stored
   * bound, no stored candidate prefix. Exactness of the served scores:
-  * candidates are re-scored with the same arithmetic as [[Bm25]] (same
-  * literal structure, same IEEE op order), idf from exact df, tf/dl from
+  * candidates are re-scored with [[Bm25]]'s own idf and tf-part (same
+  * IEEE op order, same log), idf from exact df, tf/dl from
   * the candidate postings (single term) or from a candidates-only
   * semi-join against the term-pruned postings (multi term — the full
   * lists are read but never shuffled, scored, or sorted).
@@ -90,15 +90,6 @@ object ImpactTopK {
           .otherwise(lit(0L)).as("bound_tf"))
   }
 
-  /** The BM25 tf-part as a column — SAME literal structure and op order as
-    * [[Bm25]]'s scoreExpr, so served scores are bit-identical to the full
-    * path's per-(term, doc) contributions.
-    */
-  private def tfPart(avgDl: Double): Column =
-    (col("tf").cast("double") * lit(Bm25.K1 + 1.0)) /
-      (col("tf").cast("double") +
-        lit(Bm25.K1) * (lit(1.0 - Bm25.B) + lit(Bm25.B) * col("dl").cast("double") / lit(avgDl)))
-
   /** How many candidate ids the multi-term path will force-broadcast; a
     * candidate set grown past this (documents inserted since the last
     * build/compact with tf above their terms' bounds all join it, so it
@@ -134,11 +125,11 @@ object ImpactTopK {
     * collectHits contract), plus one scalar candidate-count on the
     * multi-term path (the [[MaxBroadcastCands]] gate).
     *
-    * Score parity with the full path is pinned END-TO-END by ImpactSpec's
-    * randomized-corpora fuzz (certified must equal full scoring at 9 dp on
-    * every corpus, and fallback must too) — [[tfPart]] and [[idf]] mirror
-    * [[Bm25.scoreExpr]]'s literal structure, and that test is what keeps
-    * the two from drifting.
+    * Score parity with the full path: idf is [[Bm25.idf]] and the tf-part
+    * [[Bm25.tfPartCol]], the arithmetic both BM25 arms share (Bm25Spec
+    * pins the driver forms to Spark's evaluation bit for bit); ImpactSpec's
+    * randomized-corpora fuzz pins it end to end (certified must equal full
+    * scoring at 9 dp on every corpus, and fallback must too).
     */
   def certifiedTopK(metaStore: DataFrame, postings: DataFrame,
                     nDocs: Long, avgDl: Double,
@@ -168,14 +159,10 @@ object ImpactTopK {
     val live = terms.filter(t => dfOf.getOrElse(t, 0L) > 0L)
     if (isAnd && live.size != terms.size) return Some(Nil)
     if (live.isEmpty) return Some(Nil)
-    // same double-domain ops as Bm25's SQL log/div (< 2^53 exact longs)
-    def idf(df: Long): Double =
-      math.log((nDocs - df + 0.5) / (df + 0.5) + 1.0)
-    val idfs = live.map(t => t -> idf(dfOf(t))).toMap
-    // ub = the dl->0 limit of the tf-part: tf·(k1+1) / (tf + k1·(1−b))
-    def ub(b: Long): Double =
-      if (b <= 0L) 0.0
-      else (b * (Bm25.K1 + 1.0)) / (b + Bm25.K1 * (1.0 - Bm25.B))
+    // Bm25's driver arithmetic: the full path's op order and log
+    val idfs = live.map(t => t -> Bm25.idf(nDocs, dfOf(t))).toMap
+    // ub = the tf-part at dl = 0, its maximum over every doc length
+    def ub(b: Long): Double = if (b <= 0L) 0.0 else Bm25.tfPart(b, 0L, avgDl)
     val bound = live.map(t => idfs(t) * ub(boundTf(t))).sum
     // the candidate postings of term t: its postings above the bound
     def above(t: String): Column =
@@ -217,7 +204,8 @@ object ImpactTopK {
           () => { cands.unpersist(); () })
       }
     val top = try {
-      val scored = contrib.select(col("id"), (col("__idf") * tfPart(avgDl)).as("__s"))
+      val scored = contrib.select(col("id"),
+        (col("__idf") * Bm25.tfPartCol(lit(avgDl))).as("__s"))
       val perDoc =
         // one postings row per (term, id): a single term's rows already
         // are the per-doc scores — no aggregate, no shuffle

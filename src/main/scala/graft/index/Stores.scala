@@ -20,10 +20,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     from old ones).
   *   - Each delta is a `.delta-NNNNNNNN` subdirectory (an id-level
   *     REPLACEMENT batch: the segment's rows become the only rows of every
-  *     id it claims) plus an optional `.delta-NNNNNNNN-gone` sidecar
-  *     claiming ids with no surviving rows (deletes, token-less docs).
-  *     Spark's hidden-path filter skips dot-dirs, so the base read never
-  *     sees them; segment reads name the part files inside.
+  *     id it claims) and/or a `.delta-NNNNNNNN-gone` sidecar claiming ids
+  *     with no surviving rows (deletes, token-less docs). A delete writes
+  *     the sidecar alone — a gone-only segment. Spark's hidden-path filter
+  *     skips dot-dirs, so the base read never sees them; segment reads
+  *     name the part files inside.
   *   - [[readPartition]] resolves last-wins per id: the newest segment that
   *     claims an id owns every row of it. The claims frame is O(delta rows)
   *     — small between compactions — so the resolution join broadcasts and
@@ -235,7 +236,8 @@ object Stores {
   def partitionExists(spark: SparkSession, storeDir: String, collection: String): Boolean =
     exists(spark, partDir(storeDir, collection))
 
-  private case class Delta(ordinal: Long, dataDir: String, goneDir: Option[String])
+  /** One delta segment: its rows dir and/or its gone sidecar. */
+  private case class Delta(ordinal: Long, dataDir: Option[String], goneDir: Option[String])
 
   /** The parquet part files of one segment dir. A read names them, never
     * the dir: Spark ignores a root path whose own name is hidden (the
@@ -257,18 +259,20 @@ object Stores {
       spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), schema)
     else spark.read.schema(schema).parquet(files: _*)
 
-  /** The partition's delta segments, ascending by ordinal. */
+  /** The partition's delta segments, ascending by ordinal — the ordinals
+    * of data dirs and gone sidecars together, so a gone-only segment
+    * counts (and its ordinal is never reused). */
   private def deltas(spark: SparkSession, dir: String): Seq[Delta] = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return Nil
     val names = fs.listStatus(p).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(".delta-"))
-      .map(_.getPath.getName)
-    val gone = names.filter(_.endsWith("-gone")).toSet
-    names.filterNot(_.endsWith("-gone")).sorted.map { n =>
-      Delta(n.stripPrefix(".delta-").toLong, s"$dir/$n",
-        Some(s"$dir/$n-gone").filter(g => gone.contains(s"$n-gone")))
+      .map(_.getPath.getName).toSet
+    names.map(_.stripPrefix(".delta-").stripSuffix("-gone").toLong).toSeq.sorted.map { o =>
+      val n = f".delta-$o%08d"
+      Delta(o, Some(n).filter(names).map(d => s"$dir/$d"),
+        Some(s"$n-gone").filter(names).map(g => s"$dir/$g"))
     }
   }
 
@@ -291,7 +295,7 @@ object Stores {
     */
   def deltaDataFiles(spark: SparkSession, storeDir: String,
                      collection: String): Seq[String] =
-    deltas(spark, partDir(storeDir, collection)).flatMap(d => partFiles(spark, d.dataDir))
+    deltas(spark, partDir(storeDir, collection)).flatMap(_.dataDir).flatMap(partFiles(spark, _))
 
   /** (base bytes, delta bytes) of a partition — a filesystem listing, no
     * Spark job. Drives size-ratio compaction: a collection whose deltas
@@ -360,16 +364,16 @@ object Stores {
     val segs = deltas(spark, dir).filter(_.ordinal <= maxSeg)
     if (segs.isEmpty || !schema.fieldNames.contains("id")) base
     else {
-      val data = segs.map(d => d -> readFiles(spark, schema, partFiles(spark, d.dataDir)))
-      val all = data.foldLeft(base.withColumn("__seg", lit(0L))) { case (acc, (d, rows)) =>
-        acc.unionByName(rows.withColumn("__seg", lit(d.ordinal)))
+      // a gone-only segment adds claims, no union branch
+      val data = segs.map(d => d -> d.dataDir.map(dd => readFiles(spark, schema, partFiles(spark, dd))))
+      val all = data.foldLeft(base.withColumn("__seg", lit(0L))) {
+        case (acc, (d, Some(rows))) => acc.unionByName(rows.withColumn("__seg", lit(d.ordinal)))
+        case (acc, _) => acc
       }
       val claims = data.map { case (d, rows) =>
-        val dataIds = rows.select(col("id"))
-        d.goneDir.map(g => dataIds.unionByName(
-            readFiles(spark, goneSchema, partFiles(spark, g)).select(col("id"))))
-          .getOrElse(dataIds)
-          .withColumn("__w", lit(d.ordinal))
+        val ids = rows.map(_.select(col("id"))).toSeq ++ d.goneDir.map(g =>
+          readFiles(spark, goneSchema, partFiles(spark, g)).select(col("id")))
+        ids.reduce(_ unionByName _).withColumn("__w", lit(d.ordinal))
       }.reduce(_ unionByName _)
       val winners = claims.groupBy(col("id")).agg(max(col("__w")).as("__w"))
       all.join(winners, Seq("id"), "left")
@@ -389,11 +393,25 @@ object Stores {
   def appendDelta(spark: SparkSession, storeDir: String, collection: String,
                   df: DataFrame, gone: Option[DataFrame] = None,
                   sortBy: Seq[String] = Nil): Unit = {
-    val dir = partDir(storeDir, collection)
-    require(exists(spark, dir), s"appendDelta: no base partition at $dir")
     // the read side resolves deltas by id — an id-less schema would accept
     // the write and then silently ignore it on every read
     require(df.columns.contains("id"), "appendDelta: delta frames must carry an id column")
+    appendSegment(spark, storeDir, collection, Some(df), gone, sortBy)
+  }
+
+  /** Append a gone-only delta segment claiming `gone`'s ids — a delete,
+    * which has no rows to write. */
+  def appendGone(spark: SparkSession, storeDir: String, collection: String,
+                 gone: DataFrame): Unit =
+    appendSegment(spark, storeDir, collection, None, Some(gone), Nil)
+
+  /** Writes the next delta segment: `rows` (if any), then the gone sidecar
+    * (if any), at one past the newest ordinal, data or gone. */
+  private def appendSegment(spark: SparkSession, storeDir: String, collection: String,
+                            rows: Option[DataFrame], gone: Option[DataFrame],
+                            sortBy: Seq[String]): Unit = {
+    val dir = partDir(storeDir, collection)
+    require(exists(spark, dir), s"appendDelta: no base partition at $dir")
     val next = deltas(spark, dir).lastOption.map(_.ordinal + 1).getOrElse(1L)
     val name = f".delta-$next%08d"
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -431,9 +449,8 @@ object Stores {
       if (f.queryExecution.optimizedPlan.stats.sizeInBytes <
           BigInt(GraftConf.rangeTargetBytes(spark))) f.coalesce(1)
       else f
-    val rows = sized(df)
-    writeVia(if (sortBy.nonEmpty) rows.sortWithinPartitions(sortBy.head, sortBy.tail: _*)
-      else rows, s"$dir/$name")
+    rows.map(sized).foreach(r => writeVia(if (sortBy.nonEmpty)
+      r.sortWithinPartitions(sortBy.head, sortBy.tail: _*) else r, s"$dir/$name"))
     gone.foreach(g => writeVia(sized(g.select(org.apache.spark.sql.functions.col("id"))),
       s"$dir/$name-gone"))
   }

@@ -210,16 +210,22 @@ class CollectionSpec extends AnyFunSuite {
       }.size
     val c = coll()
     c.add(Seq("alpha beta gamma", "beta gamma", "alpha solo"))
+    // the distributed arm (forced: a negative driver bound)
+    val d = c.withSliceMaxRows(-1)
     // 2 = the one term-pruned scan feeding BOTH the score rows and the tiny
     // per-leaf df aggregate (broadcast). Deliberately not 1: folding df in
     // via a leaf-partitioned window would shuffle every matched row by leaf
     // — a hotspot for common terms. The fallback's extra match-id scans
     // (4 total) are what fusion removes.
-    assert(postingsScans(c.queryFrame("alpha beta")) === 2, "flat AND fuses")
-    assert(postingsScans(c.queryFrame("alpha or beta")) === 2, "flat OR fuses")
-    assert(postingsScans(c.queryFrame("alph* beta")) === 2, "wildcard stays fused")
-    assert(postingsScans(c.queryFrame("alpha beta or gamma")) === 4,
+    assert(postingsScans(d.queryFrame("alpha beta")) === 2, "flat AND fuses")
+    assert(postingsScans(d.queryFrame("alpha or beta")) === 2, "flat OR fuses")
+    assert(postingsScans(d.queryFrame("alph* beta")) === 2, "wildcard stays fused")
+    assert(postingsScans(d.queryFrame("alpha beta or gamma")) === 4,
       "mixed AST falls back to match-ids + rank join")
+    // the driver arm scored the slice when the frame was built: the frame
+    // itself reads docs only
+    for (q <- Seq("alpha beta", "alpha or beta", "alph* beta", "alpha beta or gamma"))
+      assert(postingsScans(c.queryFrame(q)) === 0, q)
   }
 
   test("mixed AND/OR query (non-flat AST) matches and ranks via the fallback path") {
@@ -1625,28 +1631,50 @@ class CollectionSpec extends AnyFunSuite {
 
   test("query(limit > 0) is one top-k action: no global sort, no cache") {
     val c = gridColl()
-    for (q <- Seq("Lorem", "")) {
-      var r: graft.model.QueryResult = null
-      val acts = TestSpark.actionsOf { r = c.query(q, limit = 10) }
-      assert(r.total === 10)
-      assert(acts.map(_._1) === Seq("collect"), acts.mkString("\n"))
-      val plan = acts.head._2
+    def pageAction(plan: String): Unit = {
       assert(plan.contains("TakeOrderedAndProject"), plan)
       assert(!plan.contains("rangepartitioning"), plan)
       assert(!plan.contains("InMemoryTableScan"), plan)
       assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
         .sharedState.cacheManager.isEmpty)
     }
+    c.query("Lorem", limit = 10) // memoizes the collstats value
+    // the scan, and a ranked read on the distributed arm (forced)
+    for ((h, q) <- Seq(c.withSliceMaxRows(-1) -> "Lorem", c -> "")) {
+      var r: graft.model.QueryResult = null
+      val acts = TestSpark.actionsOf { r = h.query(q, limit = 10) }
+      assert(r.total === 10)
+      assert(acts.map(_._1) === Seq("collect"), acts.mkString("\n"))
+      pageAction(acts.head._2)
+    }
+    // the driver arm: the bounded slice collect, then the one page action
+    var r: graft.model.QueryResult = null
+    val acts = TestSpark.actionsOf { r = c.query("Lorem", limit = 10) }
+    assert(r.total === 10)
+    assert(acts.map(_._1) === Seq("collect", "collect"), acts.mkString("\n"))
+    val slice = acts.head._2
+    assert(slice.contains(s"CollectLimit ${Collection.SliceMaxRows + 1}"), slice)
+    assert(slice.linesIterator.exists(l => l.contains("PushedFilters") &&
+      l.contains("EqualTo(term,lorem)")), slice)
+    pageAction(acts(1)._2)
   }
 
   test("prefix leaves push a StringStartsWith pre-filter into the postings scan") {
     val c = coll()
     c.add(Seq("bezel bezier alpha", "bezoar beta", "alpha zebra"), ids = Some(Seq("a", "b", "c")))
-    val plan = c.queryFrame("bez*", limit = 10).queryExecution.executedPlan.toString
+    val d = c.withSliceMaxRows(-1) // the distributed arm (forced)
+    val plan = d.queryFrame("bez*", limit = 10).queryExecution.executedPlan.toString
     val pushed = plan.linesIterator.filter(_.contains("PushedFilters")).mkString("\n")
     assert(pushed.contains("StringStartsWith"), plan)
-    assert(c.query("bez*", limit = 10).results.map(_.id).toSet === Set("a", "b"))
-    assert(c.query("bez* or zebra", limit = 10).total === 3)
+    // the driver arm pushes it into the slice collect
+    val acts = TestSpark.actionsOf { c.queryFrame("bez*", limit = 10) }
+    val slice = acts.map(_._2).find(_.contains("CollectLimit")).getOrElse(acts.mkString("\n"))
+    assert(slice.linesIterator.exists(l => l.contains("PushedFilters") &&
+      l.contains("StringStartsWith(term,bez)")), slice)
+    for (h <- Seq(c, d)) {
+      assert(h.query("bez*", limit = 10).results.map(_.id).toSet === Set("a", "b"))
+      assert(h.query("bez* or zebra", limit = 10).total === 3)
+    }
   }
 
   test("LSH probe buckets computed on the driver equal the Spark-computed ones") {

@@ -280,4 +280,66 @@ class StoreLayoutSpec extends AnyFunSuite {
     }
     assert(events.isEmpty, events.toArray.mkString("\n"))
   }
+
+  test("a delta-path delete writes only gone sidecars; reads, history, docsAsOf and compact hold") {
+    val c = indexed(_.createVectorIndex(numTables = 2, numPlanes = 2, dim = 4))
+    def segments(store: String): Seq[String] =
+      Option(new java.io.File(Stores.partitionPath(s"${c.root}/$store", "t")).listFiles())
+        .toSeq.flatten.map(_.getName).filter(_.startsWith(".delta-")).sorted
+    TestSpark.withConfs("spark.graft.store.directUpsertMaxBytes" -> "0",
+        "spark.graft.compact.auto" -> "false") {
+      c.add(Seq("added one w1", "added two w2"), ids = Some(Seq("n0", "n1")))
+      c.delete(Seq("d03", "d04", "n0"))
+      // the delete's segment (ordinal 2) in every id-keyed store: its gone
+      // sidecar, no data dir
+      for (store <- Seq("docs", "postings", "doclen", "annindex", "minhash")) {
+        val segs = segments(store)
+        assert(segs.contains(".delta-00000002-gone"), s"$store: $segs")
+        assert(!segs.contains(".delta-00000002"), s"$store: $segs")
+      }
+      val live = (0 until 24).map(i => f"d$i%02d").filterNot(Set("d03", "d04")) :+ "n1"
+      assert(c.docs().select("id").as[String].collect().sorted.toSeq === live.sorted)
+      assert(c.count() === 23L)
+      assert(c.query("w1").total === c.docs().filter($"content".rlike("\\bw1\\b")).count())
+      assert(c.vectorIndex().get.buckets.select("id").distinct().count() === 23L)
+      assert(c.history() === Seq(0L, 1L, 2L))
+      assert(c.docsAsOf(1).count() === 26L)
+      assert(c.docsAsOf(2).count() === 23L)
+      // the next segment takes the next ordinal: a gone-only one counts
+      c.add(Seq("added three w3"), ids = Some(Seq("n2")))
+      assert(segments("docs").contains(".delta-00000003"), segments("docs"))
+      assert(c.history() === Seq(0L, 1L, 2L, 3L))
+      assert(c.docsAsOf(2).count() === 23L && c.count() === 24L)
+      c.compact()
+      assert(segments("docs").isEmpty && segments("postings").isEmpty)
+      assert(c.history() === Seq(0L))
+      assert(c.docs().select("id").as[String].collect().sorted.toSeq === (live :+ "n2").sorted)
+      assert(c.query("added").total === 2L)
+    }
+  }
+
+  test("a delete segment written with an empty data file reads the same as a gone-only one") {
+    val rows = Seq(("a", 1L), ("b", 2L), ("c", 3L)).toDF("id", "v")
+    val gone = Seq("b").toDF("id")
+    val withFile = freshStore() + "/s"
+    val goneOnly = freshStore() + "/s"
+    for (dir <- Seq(withFile, goneOnly)) Stores.overwritePartition(spark, dir, "t", rows)
+    Stores.appendDelta(spark, withFile, "t", rows.limit(0), gone = Some(gone))
+    Stores.appendGone(spark, goneOnly, "t", gone)
+    val schema = rows.schema
+    for (dir <- Seq(withFile, goneOnly)) {
+      def ids(seg: Long) = Stores.readPartitionAsOf(spark, dir, "t", schema, seg)
+        .select("id").as[String].collect().sorted.toSeq
+      assert(ids(Long.MaxValue) === Seq("a", "c"), dir)
+      assert(ids(0L) === Seq("a", "b", "c"), dir)
+      assert(Stores.deltaOrdinals(spark, dir, "t") === Seq(0L, 1L), dir)
+      Stores.appendDelta(spark, dir, "t", Seq(("b", 5L)).toDF("id", "v"))
+      assert(Stores.deltaOrdinals(spark, dir, "t") === Seq(0L, 1L, 2L), dir)
+      assert(Stores.readPartition(spark, dir, "t", schema).as[(String, Long)].collect()
+        .sorted.toSeq === Seq(("a", 1L), ("b", 5L), ("c", 3L)), dir)
+      Stores.compactPartition(spark, dir, "t", schema)
+      assert(Stores.deltaCount(spark, dir, "t") === 0, dir)
+      assert(Stores.readPartition(spark, dir, "t", schema).count() === 3L, dir)
+    }
+  }
 }
