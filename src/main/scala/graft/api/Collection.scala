@@ -2148,13 +2148,13 @@ final class Collection private (
         // Driver arm: the query's postings slice, collected in one bounded
         // job and scored in the driver; only the matched ids' docs rows
         // are read (late materialization). A slice over the bound takes
-        // the distributed arm. Flat AND/OR (every parser shape except mixed
-        // `x AND y OR z`): ONE postings scan produces (matching id, rank)
-        // fused — the same (leaf, doc) aggregate that sums the score counts
-        // matched leaves for the AND test. Non-flat falls back to match ids
-        // + rank join. No broadcast hint either way: the match set is
-        // unbounded (a common term can match most of the corpus); AQE
-        // broadcasts when small.
+        // the distributed arm: for flat AND/OR (every parser shape except
+        // mixed `x AND y OR z`) ONE postings scan produces (matching id,
+        // rank) fused — the same (leaf, doc) aggregate that sums the score
+        // counts matched leaves for the AND test; non-flat falls back to
+        // match ids + rank join. No broadcast hint on that arm: its match
+        // set is unbounded (a common term can match most of the corpus);
+        // AQE broadcasts when small.
         val (nDocs, avgDl) = collStatsValue()
         val ranked = Bm25.driverScores(postings(), q, nDocs, avgDl, sliceMaxRows)
           .map(docsOf(_, where))

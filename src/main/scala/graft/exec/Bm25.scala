@@ -60,8 +60,9 @@ object Bm25 {
     * `postings` whose term some leaf matches, as `(term, id, tf, dl)`,
     * fetched with `limit(maxRows + 1)` so the driver never holds more.
     * None when the slice exceeds `maxRows` (logged at INFO), or at once
-    * for a negative `maxRows`: the caller then takes the distributed arm. df comes from the slice itself (a
-    * leaf's distinct docs), `(nDocs, avgDl)` from the caller's collstats.
+    * for a negative `maxRows`: the caller then takes the distributed arm.
+    * df comes from the slice itself (a leaf's distinct docs),
+    * `(nDocs, avgDl)` from the caller's collstats.
     * Same semantics as the distributed arm for every parser shape: a
     * flat AND needs every leaf, a flat OR one, a mixed tree is evaluated
     * per doc as [[graft.exec.FtsEval]] does, and a matched doc's rank sums
