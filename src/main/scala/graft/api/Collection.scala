@@ -1833,7 +1833,8 @@ final class Collection private (
     * query runs its one bounded postings-slice job when the frame is
     * BUILT (see [[query]]); the frame then holds the matched (id, rank)
     * set as a local relation. Over the slice bound the frame is the
-    * distributed arm's plan and runs nothing until executed.
+    * distributed arm's plan and runs nothing until executed; the SQL
+    * table functions and [[Collection.searchAll]] plan that arm directly.
     */
   def queryFrame(query: String = "", limit: Int = 0, offset: Int = 0,
                  where: Map[String, Any] = Map.empty, orderBy: OrderBy = OrderBy.none,
@@ -2147,16 +2148,15 @@ final class Collection private (
       case Some(q) =>
         // Driver arm: the query's postings slice, collected in one bounded
         // job and scored in the driver; only the matched ids' docs rows
-        // are read (late materialization). A slice over the bound takes
-        // the distributed arm: for flat AND/OR (every parser shape except
+        // are read (late materialization). A slice over the bound (seen now
+        // or remembered, see driverHits) takes the distributed arm: for flat AND/OR (every parser shape except
         // mixed `x AND y OR z`) ONE postings scan produces (matching id,
         // rank) fused — the same (leaf, doc) aggregate that sums the score
         // counts matched leaves for the AND test; non-flat falls back to
         // match ids + rank join. No broadcast hint on that arm: its match
         // set is unbounded (a common term can match most of the corpus);
         // AQE broadcasts when small.
-        val (nDocs, avgDl) = collStatsValue()
-        val ranked = Bm25.driverScores(postings(), q, nDocs, avgDl, sliceMaxRows)
+        val ranked = driverHits(q)
           .map(docsOf(_, where))
           .getOrElse(Bm25.scoredIds(postings(), collStats(), q) match {
             case Some(scored) => filtered.join(scored, Seq("id"))
@@ -2176,6 +2176,30 @@ final class Collection private (
         // count below it would see only that cut
         (filtered, if (orderBy.nonEmpty) byMeta else Seq($"id".asc_nulls_last), false)
     }
+  }
+
+  /** The driver arm's (id, rank) hits of `q` ([[graft.exec.Bm25.driverScores]]),
+    * None when its postings slice is over the bound. An over-bound slice
+    * is remembered under the postings fingerprint
+    * ([[Collection.overBoundSlices]]), so a repeated hot query takes the
+    * distributed arm at once instead of collecting `sliceMaxRows + 1` rows
+    * again to learn the same thing; any postings write changes the key.
+    */
+  private def driverHits(q: BoolQuery): Option[Seq[(String, Double)]] = {
+    if (sliceMaxRows < 0) return None
+    val key = (root, name, Stores.partitionFingerprint(spark, postingsDir, name),
+      BoolQuery.leaves(q).toSet)
+    if (Collection.overBoundSlices.get(key).exists(_ >= sliceMaxRows)) return None
+    val (nDocs, avgDl) = collStatsValue()
+    val hits = Bm25.driverScores(postings(), q, nDocs, avgDl, sliceMaxRows)
+    if (hits.isEmpty) {
+      if (Collection.overBoundSlices.size > 4096)
+        Collection.overBoundSlices.headOption.foreach(kv =>
+          Collection.overBoundSlices.remove(kv._1))
+      Collection.overBoundSlices.put(key,
+        math.max(sliceMaxRows, Collection.overBoundSlices.getOrElse(key, 0)))
+    }
+    hits
   }
 
   /** Scan without search (reference `get`, core.py:370-384). */
@@ -2221,15 +2245,32 @@ object Collection {
     * page is collected before recounting (delivery normally takes ms). */
   private val ObservedTotalWait = scala.concurrent.duration.Duration(30, "s")
 
+  /** Driver heap one postings-slice row holds at the driver arm's peak,
+    * measured by `Test/runMain graft.SliceFootprint` (JDK 17, compressed
+    * oops, 11-char ids, one score entry per row, the most a row carries):
+    * the collected Row 165 B, its per-doc tf/dl array 85 B and its
+    * (id, rank) pair 72 B live together while scoring, 322 B; the collect
+    * before it peaks lower (its UnsafeRow copies 125 B + the Row). Each
+    * id char beyond 11 adds about 2 B (two copies of the id string).
+    */
+  private val SliceRowBytes = 322
+
   /** Most postings rows a ranked read collects to the driver to score
     * there ([[graft.exec.Bm25.driverScores]]); a larger slice takes the
     * distributed arm. The budget is the driver bound dedup's cluster
     * collect already takes ([[graft.ext.Dedup.DriverClusterMaxBytes]],
-    * 64 MB) at an estimated 256 B per collected row — (term, id, tf, dl)
-    * as a JVM Row with its two strings — plus the per-doc score state
-    * it feeds: 2^26 / 2^8 = 262,144 rows.
+    * 64 MB) at [[SliceRowBytes]] per row: 2^26 / 322 = 208,412 rows.
     */
-  private[graft] val SliceMaxRows: Int = (graft.ext.Dedup.DriverClusterMaxBytes / 256).toInt
+  private[graft] val SliceMaxRows: Int =
+    (graft.ext.Dedup.DriverClusterMaxBytes / SliceRowBytes).toInt
+
+  /** (root, name, postings fingerprint, distinct query leaves) -> the
+    * largest driver bound that query's postings slice was seen to exceed;
+    * see [[Collection!.driverHits]]. Keyed by content fingerprint like
+    * [[staleDfCache]]: a changed store simply misses.
+    */
+  private[api] val overBoundSlices =
+    scala.collection.concurrent.TrieMap[(String, String, Long, Set[BoolQuery]), Int]()
 
   /** Most ids a docs fetch pushes down as an `id IN (…)` literal list
     * ([[Collection!.docsOf]]). */
@@ -2288,9 +2329,9 @@ object Collection {
     * union (e.g. [[graft.exec.Hybrid.linearFuse]] per arm).
     *
     * Scale: with `limit == 0` or a `where`, one ranked frame per
-    * collection ([[Collection.queryFrame]]: its postings slice scored in
-    * the driver, or over the bound a postings-gated plan), unioned
-    * lazily — the members' page work evaluates in parallel inside one job.
+    * collection — [[Collection.queryFrame]]'s distributed arm, the
+    * postings-gated plan, never the driver slice job — unioned lazily:
+    * the members evaluate in parallel inside one job.
     * A BOUNDED unfiltered query (`limit > 0`, empty `where`) is the
     * federated SERVING shape and scatter-gathers instead: each collection
     * answers through [[Collection.searchTopK]], so members with a valid
@@ -2306,14 +2347,17 @@ object Collection {
     * returned frame is executed. That is deliberate: a top-k serving call
     * exists to answer now, and deferring the O(cap) candidate read would
     * just re-run it per downstream action. The `limit == 0` / filtered
-    * shapes run each member's bounded postings-slice job at call time
-    * too ([[Collection.queryFrame]]); their page work stays lazy.
+    * shapes and the members without a certified arm run nothing until
+    * the frame is executed.
     */
   def searchAll(spark: SparkSession, root: String, query: String,
                 limit: Int = 0, where: Map[String, Any] = Map.empty): DataFrame = {
     import org.apache.spark.sql.functions.lit
     val frames = list(spark, root).flatMap { n =>
-      val c = open(spark, root, n)
+      // each member's ranked frame is its distributed arm: a lazy plan, so
+      // the union evaluates in one job and a SQL call runs no job while
+      // Catalyst analyzes it
+      val c = open(spark, root, n).withSliceMaxRows(-1)
       if (!c.useFts) None
       // a bounded, unfiltered federated query is exactly searchTopK's
       // shape: any collection carrying a valid impact index serves its

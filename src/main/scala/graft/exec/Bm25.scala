@@ -1,8 +1,9 @@
 package graft.exec
 
 import graft.model.BoolQuery
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
 /** BM25 relevance over postings + stats — the Spark-native analogue of
   * FTS5's built-in `rank` (reference src/sifts/core.py:410) / PG `ts_rank`
@@ -56,8 +57,7 @@ object Bm25 {
         lit(K1) * (lit(1.0 - B) + lit(B) * col("dl").cast("double") / avgDl))
 
   /** The DRIVER arm: (id, rank) of every doc `q` matches, unordered, from
-    * ONE bounded collect of the query's postings slice — the rows of
-    * `postings` whose term some leaf matches, as `(term, id, tf, dl)`,
+    * ONE bounded collect of the query's postings slice ([[sliceFrame]]),
     * fetched with `limit(maxRows + 1)` so the driver never holds more.
     * None when the slice exceeds `maxRows` (logged at INFO), or at once
     * for a negative `maxRows`: the caller then takes the distributed arm.
@@ -77,17 +77,30 @@ object Bm25 {
     require(!BoolQuery.hasExtended(q), s"extended query $q must be lowered first")
     if (maxRows < 0) return None
     val leaves = BoolQuery.leaves(q).distinct
-    val preds = leafPredicates(leaves)
-    val slice = postings.filter(preds.pushable && preds.any)
-      .select(col("term"), col("id"), col("tf"), col("dl"))
-      .limit(maxRows + 1).collect()
+    val slice = sliceFrame(postings, leaves).limit(maxRows + 1).collect()
     if (slice.length > maxRows) {
       logger.info(s"BM25 scores stay distributed: the postings slice of '$q' holds " +
         s"more than $maxRows rows (the driver bound)")
       return None
     }
-    // leaf matchers with the Column predicates' semantics: a wildcard
-    // uses find(), as Spark's RLike does
+    Some(rankDocs(q, leaves, perDocTf(slice, leaves), nDocs, avgDl))
+  }
+
+  /** The postings slice of the distinct `leaves`: the rows of `postings`
+    * whose term some leaf matches, as `(term, id, tf, dl)`, under the
+    * pushed `term IN (…)` / literal-prefix pre-filter. */
+  private[graft] def sliceFrame(postings: DataFrame, leaves: Seq[BoolQuery]): DataFrame = {
+    val preds = leafPredicates(leaves)
+    postings.filter(preds.pushable && preds.any)
+      .select(col("term"), col("id"), col("tf"), col("dl"))
+  }
+
+  /** Per doc of a collected slice: its summed tf per leaf (-1 = the leaf
+    * does not match it), then its doc length in the last slot. Leaf
+    * matchers have the Column predicates' semantics: a wildcard uses
+    * find(), as Spark's RLike does. */
+  private[graft] def perDocTf(slice: Array[Row],
+                              leaves: Seq[BoolQuery]): mutable.HashMap[String, Array[Long]] = {
     val matchers: IndexedSeq[String => Boolean] = leaves.toIndexedSeq.map {
       case BoolQuery.Term(t) => (term: String) => term == t
       case BoolQuery.Prefix(p) => (term: String) => term.startsWith(p)
@@ -96,40 +109,47 @@ object Bm25 {
         (term: String) => rx.matcher(term).find()
       case ext => throw new IllegalStateException(s"unexpanded leaf $ext")
     }
-    val index = leaves.zipWithIndex.toMap
-    // per doc and leaf: summed tf (-1 = no match) and the doc length
-    val tfs = scala.collection.mutable.HashMap.empty[String, Array[Long]]
-    val dls = scala.collection.mutable.HashMap.empty[String, Long]
+    val n = leaves.size
+    val docs = mutable.HashMap.empty[String, Array[Long]]
     slice.foreach { r =>
       val term = r.getString(0)
-      val id = r.getString(1)
       var i = 0
-      while (i < leaves.size) {
+      while (i < n) {
         if (matchers(i)(term)) {
-          val a = tfs.getOrElseUpdate(id, Array.fill(leaves.size)(-1L))
+          val a = docs.getOrElseUpdate(r.getString(1), {
+            val fresh = Array.fill(n + 1)(-1L)
+            fresh(n) = r.getLong(3)
+            fresh
+          })
           a(i) = (if (a(i) < 0L) 0L else a(i)) + r.getLong(2)
-          dls.getOrElseUpdate(id, r.getLong(3))
         }
         i += 1
       }
     }
-    val idfs = leaves.indices.map(i =>
-      idf(nDocs, tfs.valuesIterator.count(_(i) >= 0L).toLong)).toArray
+    docs
+  }
+
+  /** (id, rank) of the docs in `perDoc` ([[perDocTf]]) that `q` matches. */
+  private[graft] def rankDocs(q: BoolQuery, leaves: Seq[BoolQuery],
+                              perDoc: mutable.HashMap[String, Array[Long]],
+                              nDocs: Long, avgDl: Double): Seq[(String, Double)] = {
+    val n = leaves.size
+    val index = leaves.zipWithIndex.toMap
+    val idfs = Array.tabulate(n)(i => idf(nDocs, perDoc.valuesIterator.count(_(i) >= 0L).toLong))
     def matches(t: BoolQuery, a: Array[Long]): Boolean = t match {
       case BoolQuery.And(l, r) => matches(l, a) && matches(r, a)
       case BoolQuery.Or(l, r) => matches(l, a) || matches(r, a)
       case leaf => a(index(leaf)) >= 0L
     }
-    Some(tfs.iterator.collect { case (id, a) if matches(q, a) =>
-      val dl = dls(id)
+    perDoc.iterator.collect { case (id, a) if matches(q, a) =>
       var rank = 0.0
       var i = 0
-      while (i < a.length) {
-        if (a(i) >= 0L) rank += idfs(i) * tfPart(a(i), dl, avgDl)
+      while (i < n) {
+        if (a(i) >= 0L) rank += idfs(i) * tfPart(a(i), a(n), avgDl)
         i += 1
       }
       id -> rank
-    }.toSeq)
+    }.toSeq
   }
 
   /** FUSED match + rank for a FLAT query (all-AND or all-OR over leaves —

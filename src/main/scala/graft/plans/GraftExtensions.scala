@@ -184,6 +184,9 @@ object GraftFunctions {
     * query plan — the BM25 postings scan, metadata filters, and pagination
     * all stay inside Catalyst, so an outer WHERE/projection composes with
     * (and is optimized across) the search plan like any other SQL source.
+    * `graft_search` (and each member of `graft_search_all`) plans BM25 on
+    * its distributed arm: the API's `queryFrame` runs a postings-slice job
+    * when it is built, which here would run during analysis.
     * The reference has no SQL surface (everything goes through the Python
     * API, core.py:258-384); this is the Spark-native equivalent of handing
     * the collection to a SQL user.
@@ -198,8 +201,10 @@ object GraftFunctions {
     tfn("graft_search",
       "graft_search(root STRING, name STRING, query STRING[, limit INT]) - ranked full-text search (id, content, metadata, rank)", 3, 4) { args =>
       val s = org.apache.spark.sql.SparkSession.active
+      // the distributed arm: the driver arm would run its postings-slice
+      // job during analysis (every EXPLAIN and re-analysis)
       graft.api.Collection.open(s, strArg(args(0), "root"), strArg(args(1), "name"))
-        .queryFrame(strArg(args(2), "query"),
+        .withSliceMaxRows(-1).queryFrame(strArg(args(2), "query"),
           limit = if (args.size > 3) intArg(args(3), "limit") else 0)
         .queryExecution.logical
     },

@@ -21,7 +21,8 @@ import org.apache.spark.sql.functions._
   * same doc count as 2×copies but cluster size UNCHANGED, separating
   * docs-growth from cluster-growth in the MinHash cost) and/or `stages`
   * (per-stage MinHash timing: banding / bucket-collect / payload-pack /
-  * verify+expand, materialized cumulatively).
+  * verify+expand, materialized cumulatively), or be `ftsread` (ingest and
+  * the ranked reads only, with each read's postings slice size).
   */
 object ProbeScale {
   def main(args: Array[String]): Unit = {
@@ -877,6 +878,27 @@ object ProbeScale {
     time("fts_and_sec")(println(s"PROBE   hits = ${c.queryFrame("table scan").count()}"))
     time("bm25_sec")(println(s"PROBE   hits = ${c.queryFrame("customer stream").count()}"))
     time("fts_meta_conj_sec")(println(s"PROBE   hits = ${c.queryFrame("table", where = Map("lang" -> "en")).count()}"))
+    // `ftsread` = ingest + the ranked reads only: each postings slice's
+    // row count (the driver arm scores a slice up to
+    // Collection.SliceMaxRows rows, a larger one stays distributed), the
+    // three reads again (a repeat of an over-bound read skips its slice
+    // collect), and the federated searchAll frame over this root
+    if (mode.contains("ftsread")) {
+      val postings = graft.index.Stores.readPartition(spark,
+        graft.index.Stores.postingsDir(root), "big", graft.index.Stores.postingsSchema)
+      for ((label, terms) <- Seq("fts_and" -> Seq("table", "scan"),
+          "bm25" -> Seq("customer", "stream"), "fts_meta_conj" -> Seq("table"))) {
+        val rows = postings.filter($"term".isin(terms: _*)).count()
+        println(s"PROBE   $label slice rows = $rows"); metrics += (s"${label}_slice_rows" -> rows)
+      }
+      time("fts_and_again_sec")(println(s"PROBE   hits = ${c.queryFrame("table scan").count()}"))
+      time("bm25_again_sec")(println(s"PROBE   hits = ${c.queryFrame("customer stream").count()}"))
+      time("fts_meta_conj_again_sec")(println(
+        s"PROBE   hits = ${c.queryFrame("table", where = Map("lang" -> "en")).count()}"))
+      time("federated_fts_sec")(println(
+        s"PROBE   rows = ${Collection.searchAll(spark, root, "customer stream").count()}"))
+      writeOut(); return
+    }
     // phrase / NEAR over the 1M-doc store: the postings gate prunes before
     // the candidates-only verify (vs the r9c zero-index verify-alone point)
     time("phrase_sec")(println(s"PROBE   hits = ${c.phraseSearch("table hash").count()}"))

@@ -175,6 +175,25 @@ class Bm25Spec extends AnyFunSuite {
       assert(got.total === 20L)
       assert(hits(got) === hits(c.query("hot", limit = 5)))
       assert(hits(got) === hits(forced.query("hot", limit = 5)))
+      // the over-bound outcome is remembered under the postings
+      // fingerprint: a repeat (or a smaller bound) collects nothing and
+      // logs nothing; a larger bound collects again
+      events.clear()
+      for (h <- Seq(small, c.withSliceMaxRows(bound - 1))) {
+        val again = TestSpark.actionsOf { got = h.query("hot", limit = 5) }
+        assert(again.size === 1 && again.head._2.contains("postings"), again.mkString("\n"))
+        assert(hits(got) === hits(forced.query("hot", limit = 5)))
+      }
+      assert(events.isEmpty, events.toArray.mkString("\n"))
+      val wider = TestSpark.actionsOf { got = c.withSliceMaxRows(20).query("hot", limit = 5) }
+      assert(wider.size === 2 && wider.head._2.contains("CollectLimit 21"), wider.mkString("\n"))
+      assert(hits(got) === hits(forced.query("hot", limit = 5)))
+      // a postings write changes the fingerprint: the slice is collected again
+      c.add(Seq("hot again"), ids = Some(Seq("d21")))
+      val fresh = TestSpark.actionsOf { got = small.query("hot", limit = 5) }
+      assert(fresh.count(_._2.contains(s"CollectLimit ${bound + 1}")) === 1, fresh.mkString("\n"))
+      assert(got.total === 21L)
+      assert(events.size === 1, events.toArray.mkString("\n"))
       // a slice within the bound stays on the driver: no postings in the page
       events.clear()
       val acts2 = TestSpark.actionsOf { got = small.query("rare8 or rare12", limit = 5) }

@@ -1231,6 +1231,28 @@ class CollectionSpec extends AnyFunSuite {
     assert(e.getMessage.contains("no FTS-capable"))
   }
 
+  test("graft_search and a filtered or unlimited searchAll build their frames without a Spark job") {
+    graft.plans.GraftFunctions.registerTables(spark)
+    val root = freshRoot()
+    coll(root, "c1").add(Seq("alpha match here", "nothing"), ids = Some(Seq("a", "b")),
+      metadatas = Some(Seq(Map("k" -> "1"), Map("k" -> "2"))))
+    coll(root, "c2").add(Seq("another alpha doc"), ids = Some(Seq("x")),
+      metadatas = Some(Seq(Map("k" -> "1"))))
+    var frames = Seq.empty[org.apache.spark.sql.DataFrame]
+    val built = TestSpark.actionsOf {
+      frames = Seq(
+        spark.sql(s"SELECT id, rank FROM graft_search('$root', 'c1', 'alpha', 5)"),
+        spark.sql(s"SELECT collection, id FROM graft_search_all('$root', 'alpha')"),
+        Collection.searchAll(spark, root, "alpha"),
+        Collection.searchAll(spark, root, "alpha", limit = 5, where = Map("k" -> "1")))
+    }
+    assert(built.isEmpty, built.mkString("\n"))
+    // the frames are the distributed arm's plans and answer like the API
+    assert(frames.map(_.count()) === Seq(1L, 2L, 2L, 2L))
+    assert(frames.head.collect().map(r => (r.getString(0), r.getDouble(1))).toSeq ===
+      coll(root, "c1").query("alpha", limit = 5).results.map(h => (h.id, h.rank.get)))
+  }
+
   /** Six docs: 2 is an exact copy of 1, 3 a near copy of 1 (one token
     * appended: 3-shingle Jaccard 10/11), 6 an exact copy of 5.
     */
@@ -1668,7 +1690,8 @@ class CollectionSpec extends AnyFunSuite {
     assert(pushed.contains("StringStartsWith"), plan)
     // the driver arm pushes it into the slice collect
     val acts = TestSpark.actionsOf { c.queryFrame("bez*", limit = 10) }
-    val slice = acts.map(_._2).find(_.contains("CollectLimit")).getOrElse(acts.mkString("\n"))
+    val slice = acts.map(_._2).find(p => p.contains("CollectLimit") && p.contains("postings"))
+      .getOrElse(acts.mkString("\n"))
     assert(slice.linesIterator.exists(l => l.contains("PushedFilters") &&
       l.contains("StringStartsWith(term,bez)")), slice)
     for (h <- Seq(c, d)) {
