@@ -2148,12 +2148,12 @@ final class Collection private (
       case Some(q) =>
         // Driver arm: the query's postings slice, collected in one bounded
         // job and scored in the driver; only the matched ids' docs rows
-        // are read (late materialization). A slice over the bound (seen now
-        // or remembered, see driverHits) takes the distributed arm: for flat AND/OR (every parser shape except
-        // mixed `x AND y OR z`) ONE postings scan produces (matching id,
-        // rank) fused — the same (leaf, doc) aggregate that sums the score
-        // counts matched leaves for the AND test; non-flat falls back to
-        // match ids + rank join. No broadcast hint on that arm: its match
+        // are read (late materialization). A slice over the bound (seen
+        // now or remembered, see driverHits) takes the distributed arm: for
+        // flat AND/OR (every parser shape except mixed `x AND y OR z`) ONE
+        // postings scan produces (matching id, rank) fused — the same
+        // (leaf, doc) aggregate that sums the score counts matched leaves
+        // for the AND test; non-flat falls back to match ids + rank join. No broadcast hint on that arm: its match
         // set is unbounded (a common term can match most of the corpus);
         // AQE broadcasts when small.
         val ranked = driverHits(q)
